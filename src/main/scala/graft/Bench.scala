@@ -1,5 +1,24 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.GraftMetricsBridge
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
+/** One timed sweep of the query inventory. Each selected query runs
+  * once untimed at sf0.001 (warm pass), then exactly
+  * `SPARK_GRAFT_RUNS` timed samples at the bench scale; the minimum
+  * wall time is reported, with the task work (`executorRunTime`) and
+  * row volume (input + shuffle-written records) of that same sample.
+  * The counters let a same-session A/B (`tools/ab_bench.sh`) tell a
+  * code change from host drift: `rows` counts records, not time, and
+  * task time follows the work.
+  *
+  * Writes `bench_last.json` (per query: `queries` seconds, `task_ms`,
+  * `rows`; `-1` in all three when every sample failed) and prints one
+  * `{"metric":"total",...}` line last on stdout. Reads no file from
+  * its working directory.
+  *
+  * Knobs: SPARK_GRAFT_SF_DIR (the timed scale's tables),
+  * SPARK_GRAFT_CPUS, SPARK_GRAFT_ONLY=q1,q2 (subset run),
+  * SPARK_GRAFT_RUNS (samples per query, default 2). */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -28,515 +47,99 @@ object Bench {
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(",").map(_.trim).toSet)
     val selected = only.fold(SparkEntry.queries)(
-      names => SparkEntry.queries.filter(kv => names(kv._1)))
+      names => SparkEntry.queries.filter(kv => names(kv._1))).toSeq.sortBy(_._1)
+    def untimed(fn: (SparkSession, String) => DataFrame, dir: String): Unit =
+      try fn(spark, dir).write.format("noop").mode("overwrite").save()
+      catch { case _: Throwable => () }
+      finally Harness.dropPinnedRdds(spark)
+    // /proc/loadavg before/after makes machine contention self-evident in
+    // the record: the r03 bench reported 68x "regressions" that were
+    // concurrent CPU load, invisible in the artifact itself.
+    def loadavg(): Double =
+      try scala.io.Source.fromFile("/proc/loadavg").mkString
+        .split("\\s+")(0).toDouble
+      catch { case _: Throwable => -1.0 }
     // Untimed steady-state warm-up: run the surface once at the smallest
     // SF so JVM/codegen/shuffle-service startup isn't billed to whichever
     // query happens to run first (codegen caches by generated source, so
     // the sf0.001 pass pre-compiles the same plans the timed pass runs).
-    // Disable with SPARK_GRAFT_WARMUP=0.
     val warmDir = {
       val parent = java.nio.file.Paths.get(sfDir).toAbsolutePath.getParent
       Option(parent).map(_.resolve("sf0.001"))
         .filter(java.nio.file.Files.isDirectory(_))
         .map(_.toString).getOrElse(sfDir)
     }
-    def dropPinnedRdds(): Unit = Harness.dropPinnedRdds(spark)
-    if (sys.env.get("SPARK_GRAFT_WARMUP").forall(_ != "0")) {
-      selected.foreach { case (_, fn) =>
-        try fn(spark, warmDir).write.format("noop").mode("overwrite").save()
-        catch { case _: Throwable => () }
-        finally dropPinnedRdds()
-      }
-      // settle before timing: the warmup pass saturates every core and
-      // leaves JIT/GC debt draining on background threads; without a
-      // pause the alphabetically-first timed queries (the cdc family)
-      // absorb that tail — observed 1.2s isolated vs 14s back-to-back
-      // for cdc2_routing, and a fixed 5s stopped sufficing once the
-      // surface passed 100 queries (cdc1 33.8s in-run vs 6.5s isolated).
-      // Adaptive: GC, then wait until 1-min loadavg falls below the
-      // core count (cap 60s — never hang the official bench on a busy
-      // box; the contention tripwire below still flags that case).
-      System.gc()
-      val settleDeadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
-      def load1(): Double =
-        try scala.io.Source.fromFile("/proc/loadavg").mkString
-          .split("\\s+")(0).toDouble
-        catch { case _: Throwable => 0.0 }
-      while (load1() > cpus.toDouble && System.nanoTime() < settleDeadline)
-        Thread.sleep(2000)
-      // one untimed probe of the first timed query at the TIMED scale:
-      // whatever per-plan debt the sf0.001 warmup can't reach (row-count
-      // -dependent codegen paths, page-cache for the sf0.1 files) lands
-      // here instead of inside the first query's timed minimum
-      selected.toSeq.sortBy(_._1).headOption.foreach { case (_, fn) =>
-        try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        catch { case _: Throwable => () }
-        finally dropPinnedRdds()
-      }
-    }
+    selected.foreach { case (_, fn) => untimed(fn, warmDir) }
+    // settle before timing: the warmup pass saturates every core and
+    // leaves JIT/GC debt draining on background threads; without a
+    // pause the alphabetically-first timed queries (the cdc family)
+    // absorb that tail — observed 1.2s isolated vs 14s back-to-back
+    // for cdc2_routing, and a fixed 5s stopped sufficing once the
+    // surface passed 100 queries (cdc1 33.8s in-run vs 6.5s isolated).
+    // Adaptive: GC, then wait until 1-min loadavg falls below the
+    // core count (cap 60s — never hang on a busy box; load_before in
+    // the record shows what was left).
+    System.gc()
+    val settleDeadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+    while (loadavg() > cpus.toDouble && System.nanoTime() < settleDeadline)
+      Thread.sleep(2000)
+    // one untimed probe of the first timed query at the TIMED scale:
+    // whatever per-plan debt the sf0.001 warmup can't reach (row-count
+    // -dependent codegen paths, page-cache for the sf0.1 files) lands
+    // here instead of inside the first query's timed minimum
+    selected.headOption.foreach { case (_, fn) => untimed(fn, sfDir) }
     // min of 2 timed runs per query: single samples on a shared box
     // vary up to 2.5x with CPU contention; the minimum is the standard
     // steady-state estimator (SPARK_GRAFT_RUNS overrides).
     val runs = math.max(1, sys.env.getOrElse("SPARK_GRAFT_RUNS", "2").toInt)
-    // /proc/loadavg before/after makes machine contention self-evident in
-    // the official record: the r03 bench reported 68x "regressions" that
-    // were concurrent CPU load, invisible in the artifact itself.
-    def loadavg(): Double =
-      try scala.io.Source.fromFile("/proc/loadavg").mkString
-        .split("\\s+")(0).toDouble
-      catch { case _: Throwable => -1.0 }
     val loadBefore = loadavg()
-    val raw = selected.toSeq.sortBy(_._1).map { case (name, fn) =>
-      // a failed run must not contribute its (fast) elapsed time — only
-      // successful runs compete for the min; all-failed → sentinel -1
-      def sample(): Option[Double] = {
-        val t0 = System.nanoTime()
+    // (wall seconds, task totals) of the minimum-wall sample per query.
+    // A failed sample must not contribute its (fast) elapsed time — only
+    // successful samples compete for the min; all failed → None.
+    val results = selected.map { case (name, fn) =>
+      def sample(): Option[(Double, GraftMetricsBridge.TaskTotals)] =
         try {
-          fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-          Some((System.nanoTime() - t0) / 1e9)
+          var secs = 0.0
+          // wall is timed inside the body: taskTotals' wait for the
+          // listener bus to drain is bookkeeping, not query time
+          val totals = GraftMetricsBridge.taskTotals(spark.sparkContext) {
+            val t0 = System.nanoTime()
+            fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+            secs = (System.nanoTime() - t0) / 1e9
+          }
+          Some((secs, totals))
         } catch { case e: Throwable =>
           System.err.println(s"[bench] $name failed: ${e.getMessage}")
           None
-        } finally dropPinnedRdds()
-      }
-      var times = (0 until runs).flatMap(_ => sample())
-      // spike resilience: this box shows sporadic 3-20x whole-JVM
-      // stalls (all stages of a query slow together; /proc/stat shows
-      // neither steal nor contention — host-level noise). The min is
-      // only trustworthy when it REPRODUCES: buy extra samples (≤ 3)
-      // until the two smallest agree within 30% — spiked samples
-      // scatter (6.5s / 13.6s / 23s for the same 3.6s query) while
-      // clean ones cluster, so agreement ≈ both clean. Bounded
-      // wall-time cost, paid only by queries whose samples disagree.
-      def minStable(ts: Seq[Double]): Boolean = ts.sorted.take(2) match {
-        case Seq(a, b) => b <= a * 1.3
-        case _ => true // 0 or 1 samples: nothing to cross-check
-      }
-      var extra = 0
-      while (times.nonEmpty && extra < 3 && times.min > 1.0 &&
-          !minStable(times)) {
-        times ++= sample().toSeq
-        extra += 1
-      }
-      (name, times)
+        } finally Harness.dropPinnedRdds(spark)
+      name -> (0 until runs).flatMap(_ => sample()).minByOption(_._1)
     }
-    // re-audit the slowest tail: the box's noise arrives in SUSTAINED
-    // multi-minute windows (observed: the same query measuring 10.3s
-    // with agreeing samples, then 1.6s on an immediate re-run), so a
-    // query whose whole sampling window was noisy carries a stable-
-    // looking wrong min that per-query retries can't detect. The
-    // windows are sporadic, so fresh samples per slowest-10 query
-    // taken LATER (after the sweep, minutes away) fold a clean
-    // measurement into the min whenever the earlier window was dirty —
-    // and are a no-op (min unchanged) when it wasn't. Before sampling,
-    // wait for the box to be genuinely QUIET (load < min(4, cpus), not
-    // merely < cpus — the r05 official run carried load ~13 end to end
-    // and the lax threshold never paused), capped so a permanently
-    // busy host still finishes; the tripwire below records what's left.
-    // returns whether the box actually reached quiet (load under the
-    // threshold) before the cap — a window sampled after a TIMED-OUT
-    // settle is dirty evidence and must not confirm a regression
-    def settleTo(threshold: Double, capSec: Long): Boolean = {
-      System.gc()
-      val deadline = System.nanoTime() + capSec * 1000L * 1000 * 1000
-      while (loadavg() > threshold && System.nanoTime() < deadline)
-        Thread.sleep(2000)
-      loadavg() <= threshold
-    }
-    settleTo(math.min(4.0, cpus.toDouble), 90)
-    // the re-audit net is REGRESSION-AWARE, not just the slowest 10:
-    // the r6 record carried q35c at 1.673s (isolated truth: 0.644s)
-    // because mid-pack queries sat below the slowest-10 cutoff and
-    // their noise-window numbers shipped. Any query whose in-sweep min
-    // exceeds the PREVIOUS official record (bench_full.json's queries
-    // map, written by the last run from this directory) by >1.5x joins
-    // the re-audit — a real regression survives the re-measure, a
-    // noise window folds away.
-    // same-sf guard + parse in BenchRecord (unit-tested there)
-    val recordJson: Option[String] =
-      try {
-        val p = java.nio.file.Paths.get("bench_full.json")
-        if (!java.nio.file.Files.exists(p)) None
-        else Some(new String(java.nio.file.Files.readAllBytes(p), "UTF-8"))
-      } catch { case _: Throwable => None }
-    val priorMins: Map[String, Double] =
-      recordJson.fold(Map.empty[String, Double])(j =>
-        BenchRecord.priorQueries(j, sfDir,
-          // basis guard: a record measured on a different thread count
-          // must neither drive regression flags nor be carried into
-          // this run's merge (priorMins feeds both)
-          Some(cpus.toInt)))
-    val slowest10 = raw.filter(_._2.nonEmpty).sortBy(-_._2.min).take(10)
-      .map(_._1)
-    // the shared regression predicate (unit-tested in BenchRecordSpec)
-    def regressedIn(rs: Seq[(String, Seq[Double])]): Seq[String] =
-      BenchRecord.regressedVs(priorMins,
-        rs.collect { case (name, ts) if ts.nonEmpty => name -> ts.min })
-    val regressed = regressedIn(raw)
-    def isolatedSamples(name: String, n: Int = 2): Seq[Double] = {
-      val fn = selected(name)
-      (0 until n).flatMap { _ =>
-        val t0 = System.nanoTime()
-        try {
-          fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-          Some((System.nanoTime() - t0) / 1e9)
-        } catch { case _: Throwable => None }
-        finally dropPinnedRdds()
-      }
-    }
-    val reauditMins: Map[String, Double] =
-      (slowest10 ++ regressed).distinct
-      .flatMap { name =>
-        val ts = isolatedSamples(name)
-        if (ts.isEmpty) None else Some(name -> ts.min)
-      }.toMap
-    val audited = raw.map { case (name, ts) =>
-      (name, ts ++ reauditMins.get(name).toSeq)
-    }
-    // contention tripwire: a >10x min/max spread on a non-trivial query
-    // means some runs were starved. Instead of merely FLAGGING (r04
-    // shipped with one warning), re-queue every tripped query for an
-    // isolated re-measure after the sweep: wait for the box to settle,
-    // take two fresh samples, and REPLACE the sample set with
-    // {fresh..., previous min}. If the fresh samples confirm the min
-    // (cluster near it), the stale spiked samples stop inflating the
-    // spread and the warning clears; if the box is still dirty the
-    // spread survives and the flag stands — the official file can only
-    // ship clean when the measurements actually were.
-    def spreadSuspect(ts: Seq[Double]): Boolean =
-      ts.nonEmpty && ts.max > 1.0 && ts.max / ts.min > 10.0
-    def requeuePass(in: Seq[(String, Seq[Double])], settleCap: Long)
-        : Seq[(String, Seq[Double])] = in.map { case (name, ts) =>
-      if (!spreadSuspect(ts)) (name, ts)
-      else {
-        settleTo(math.min(4.0, cpus.toDouble), settleCap)
-        val fresh = isolatedSamples(name)
-        if (fresh.isEmpty) (name, ts) else (name, fresh :+ ts.min)
-      }
-    }
-    val requeued1 = requeuePass(audited, 60)
-    // one FINAL isolated retry, minutes after the sweep, for anything
-    // still spread (the cdc13 host-stall canary class): the r6 record
-    // shipped n_contended=1 because a single requeue landed inside the
-    // same multi-minute noise window. A longer settle + the retry
-    // happening strictly last makes n_contended=0 the steady state; a
-    // genuinely contended box still fails both passes and keeps the flag.
-    val requeued0 =
-      if (!requeued1.exists(t => spreadSuspect(t._2))) requeued1
-      else requeuePass(requeued1, 150)
-    // STRICTLY-LAST confirmation retries for regressions: the immediate
-    // re-audit above runs right after the sweep, so when the sweep's
-    // tail sat inside one of this box's multi-minute noise windows the
-    // re-measure landed in the SAME window and "confirmed" the wrong
-    // number (round 7: q33_lateral shipped 3.833s with an isolated
-    // truth of 0.399s, and the record merge then RAISED the clean
-    // record 144.3s → 167.75s on untouched code). Round 9 showed ONE
-    // settled retry is still not enough — it too can land inside a
-    // sustained noise window and reproduce the slow number with
-    // agreeing samples (18 entries raised on noise in one official
-    // run: cdc10_ivm_join folded at 2.435s vs an isolated 1.824s).
-    // So: every query whose folded min still exceeds the prior record
-    // by >1.5x gets up to TWO retry windows, each behind its own long
-    // settle (150s cap) and each LOAD-GATED ON BOTH SIDES — the box
-    // must be quiet before the samples AND settle again after them
-    // (a noise window arriving mid-window is caught by the post-check;
-    // a window whose either settle timed out is dirty evidence — its
-    // samples still fold the min DOWN, but cannot confirm). A slower value may raise the record
-    // only when both windows reproduce it AND agree within the noise
-    // band (BenchRecord.retryConfirms, unit-tested): sustained noise
-    // fails the load gate or the second window, sporadic noise fails
-    // agreement. Queries either window folds back under the bar were
-    // noise and never reach confirmation.
-    def retryWindow(names: Seq[String]): (Map[String, Double], Boolean) =
-      if (names.isEmpty) (Map.empty, true)
-      else {
-        val settled = settleTo(math.min(4.0, cpus.toDouble), 150)
-        val mins = names.sorted.flatMap { name =>
-          val ts = isolatedSamples(name)
-          if (ts.isEmpty) None else Some(name -> ts.min)
-        }.toMap
-        // the pre-window settle only certifies the window's START; a
-        // noise window ARRIVING during the samples would still poison
-        // them while the clean flag claimed otherwise. So the window
-        // must also settle AFTER its samples — with a cap, because the
-        // bench's own just-finished runs legitimately inflate 1-min
-        // loadavg (32 runnable threads for ~10s add ~4-5, decaying on
-        // the 60s constant): our own load drains under the threshold
-        // within the cap, an active external noise window does not and
-        // times the settle out → dirty, cannot confirm.
-        val settledAfter = settleTo(math.min(4.0, cpus.toDouble), 120)
-        (mins, settled && settledAfter)
-      }
-    val stillRegressed = regressedIn(requeued0)
-    val (late1, clean1) = retryWindow(stillRegressed)
-    val afterW1 = requeued0.map { case (name, ts) =>
-      (name, ts ++ late1.get(name).toSeq)
-    }
-    // the second window runs only for what the first did not fold away,
-    // and strictly after it — the windows are minutes apart by
-    // construction (settle + the other queries' samples in between)
-    val (late2, clean2) = retryWindow(regressedIn(afterW1))
-    val requeued = afterW1.map { case (name, ts) =>
-      (name, ts ++ late2.get(name).toSeq)
-    }
-    // confirmed = still >1.5x over the record after BOTH windows folded
-    // in, with both windows clean, reproducing, and agreeing (a retry
-    // whose every sample failed has verified nothing — such a query
-    // stays flagged in regressed_vs_record below but must not raise
-    // the record: the whole point is that only a reproduced slow
-    // number may)
-    val confirmedSlower = regressedIn(requeued).filter { name =>
-      BenchRecord.retryConfirms(priorMins.getOrElse(name, -1.0),
-        if (clean1) late1.get(name) else None,
-        if (clean2) late2.get(name) else None)
-    }.toSet
-    // both confirmation windows were clean evidence (vacuously true
-    // when no query needed one) — the artifact marker a reader uses to
-    // judge whether this run COULD have confirmed a regression at all
-    val retryClean = clean1 && clean2
     val loadAfter = loadavg()
-    // STREAMING THROUGHPUT (the reference's one published metric
-    // family — BASELINE.md relay latency): microbatch decode→sink
-    // events/s through the full CDC dispatch pipeline, measured per
-    // official round so BENCH_r0x.json tracks it beside the query
-    // times instead of the number living only in CdcThroughputSpec's
-    // sbt assertion. Best of 2 probes (each self-warming — the JIT
-    // analogue of the query sweep's min-of-2); runs strictly after
-    // the confirmation retries so it cannot pollute them. Subset runs
-    // skip it (-1) and the FILE record carries the prior measured
-    // values forward, same spirit as the per-query merge; a probe
-    // failure records -1 and never kills the bench. Beside the rate,
-    // the probe's small-batch phase yields per-microbatch end-to-end
-    // latency percentiles — the reference's single published number
-    // is a LATENCY (BASELINE.md 1–3 ms relay), and throughput alone
-    // doesn't answer "how stale is a relayed event".
-    // Latency phase runs ONLY on the LAST attempt (r13 ADVICE: with it
-    // inline per-attempt, attempt 1's 100 extra microbatches sat right
-    // before attempt 2's timed throughput window, and the official
-    // rate dropped 21.7% in the same commit that added the phase).
-    // Throughput = best attempt; latency = the last attempt's phase,
-    // measured after every throughput window has closed.
-    val streamAttempts: Seq[graft.streaming.ThroughputProbe.Result] =
-      if (only.nonEmpty) Nil
-      else (0 until 2).flatMap { i =>
-        try Some(graft.streaming.ThroughputProbe.run(spark,
-          measureLatency = i == 1))
-        catch { case e: Throwable =>
-          System.err.println(s"[bench] streaming probe failed: ${e.getMessage}")
-          None
-        }
-      }
-    val streamRate: Double =
-      if (streamAttempts.isEmpty) -1.0
-      else streamAttempts.map(_.eventsPerSec).max
-    val streamP50: Double = streamAttempts
-      .filter(_.latencyP50Ms >= 0).lastOption.fold(-1.0)(_.latencyP50Ms)
-    val streamP99: Double = streamAttempts
-      .filter(_.latencyP99Ms >= 0).lastOption.fold(-1.0)(_.latencyP99Ms)
-    // carry-forward applies ONLY when the probe was SKIPPED (subset
-    // run): on a FULL run where both probe attempts failed, the
-    // record gets the -1 sentinel — a persistently crashing probe
-    // must read as "unmeasured", not keep a stale rate in the
-    // official record indefinitely, indistinguishable from a fresh
-    // measurement (r12 ADVICE). streaming_carried marks the subset
-    // carry in the artifact either way.
-    def carried(field: String, v: Double): Double =
-      if (v >= 0) v
-      else if (only.isEmpty) -1.0
-      else recordJson.flatMap(BenchRecord.priorStreamingField(_, field))
-        .getOrElse(-1.0)
-    val recordedStreamRate: Double =
-      carried("streaming_events_per_sec", streamRate)
-    val recordedStreamP50: Double =
-      carried("streaming_batch_p50_ms", streamP50)
-    val recordedStreamP99: Double =
-      carried("streaming_batch_p99_ms", streamP99)
-    val streamingCarried = streamRate < 0 && recordedStreamRate >= 0
-    // the official record's noise ledger: queries whose ENTIRE in-sweep
-    // sampling window a later isolated re-measure (immediate re-audit,
-    // contention requeue, or the strictly-last confirmation retry) beat
-    // by >1.5x — their recorded min IS the re-measure (folded above);
-    // the flag says the sweep-time number was a noise window, so
-    // round-over-round diffs should trust the min, not the sweep.
-    val sweepMins = raw.collect {
-      case (name, ts) if ts.nonEmpty => name -> ts.min }.toMap
-    val noiseSuspects = requeued.collect {
-      case (name, ts) if ts.nonEmpty &&
-        sweepMins.get(name).exists(sw => sw > ts.min * 1.5) => name
-    }
-    // contention is judged PRE-late-fold (requeued0): the strictly-last
-    // confirmation retry runs after the final requeue pass, so a folded
-    // noise window with >10x spread (sweep 4s, isolated 0.35s) would
-    // otherwise mint a fresh spread flag with no pass left to clear it —
-    // the late fold can only ADD a fast sample, never new contention
-    val suspect = requeued0.collect {
-      case (name, ts) if spreadSuspect(ts) =>
-        System.err.println(f"[bench] WARN $name spread ${ts.max / ts.min}%.1fx " +
-          f"(min ${ts.min}%.2fs max ${ts.max}%.2fs) — CPU contention?")
-        name
-    }
     // Locale.ROOT: the f-interpolator formats with the JVM default
     // locale — a comma-decimal locale (de_DE etc.) would render 12,345
     // and corrupt the JSON the driver parses.
     def f3(v: Double): String =
       String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
-    val results = requeued.map { case (name, ts) =>
-      name -> (if (ts.isEmpty) -1.0 else ts.min)
-    }
-    val total = results.filter(_._2 >= 0).map(_._2).sum
-    // cap the embedded names: on a fully contended box most of the ~100
-    // queries can trip the tripwire, and an unbounded list would push
-    // the metric line past the very tail window the split exists for
-    def cappedJson(names: Seq[String]): String =
-      (names.take(8).map("\"" + _ + "\"") ++
-        (if (names.size > 8) Seq("\"+" + (names.size - 8) + " more\"")
-         else Nil)).mkString("[", ",", "]")
-    val warnJson = cappedJson(suspect)
-    val noiseJson = cappedJson(noiseSuspects)
-    // The round driver stores the LAST 2000 chars of output
-    // (BENCH_r0x.json "tail") and parses lines as JSON — two things
-    // defeated that for four rounds: a single ~4KB per-query line whose
-    // FRONT truncates out of the tail, and sbt's "[info] " logger
-    // prefix on every line (fixed build-side: run/outputStrategy =
-    // StdoutOutput, so these lines now reach stdout raw). Report shape:
-    //   1. per-query detail in sorted ≤20-entry chunks — every line is
-    //      valid standalone JSON, none keyed "metric", so a truncated
-    //      capture still parses whatever lines survive;
-    //   2. the compact {"metric":"total"...} line LAST — ~220 chars
-    //      (warnings capped above), guaranteed inside any tail window;
-    //   3. the whole report as one file (bench_full.json) for readers
-    //      with file access — the untruncatable record.
-    // SELF-REPORTED residual regressions: queries whose folded min
-    // still exceeds the prior official record by >1.5x AFTER the
-    // strictly-last settled isolated retry — either CONFIRMED (the
-    // retry reproduced the slow number: a genuine regression, or an
-    // environment shift no re-measure can fold — round 7's was a
-    // thread-basis mismatch, which is why priorQueries guards on
-    // cpus) or retry-FAILED (still reported here; just barred from
-    // raising the record above). Queries genuinely slower but under
-    // the 1.5x/0.3s detection floor keep the prior record min without
-    // a flag — the record is a best-confirmed-state rolling min by
-    // design; the stdout metric line's total reflects THIS run.
-    val regressedVsRecord = regressedIn(requeued).sorted
-    val regJson = cappedJson(regressedVsRecord)
-    // the gray band the detection floor can't confirm: queries slower
-    // than the record by >1.2x but below the 1.5x/0.3s regression bar
-    // keep the prior min in the merged record (best-confirmed-state
-    // semantics). This count sizes that divergence for the reader —
-    // a large value means the record understates the current run.
-    val nSlowerUnconfirmed = requeued.count { case (name, ts) =>
-      ts.nonEmpty && priorMins.get(name).exists(prev =>
-        prev > 0 && ts.min > prev * 1.2) &&
-        !regressedVsRecord.contains(name)
-    }
-    // RE-BASELINE: bound that divergence (BenchRecord.slowerStreaks).
-    // A query sitting >1.2x over its record min in 3 CONSECUTIVE clean
-    // full sweeps refreshes its record entry to the observed value —
-    // the rolling min may only stay optimistic for as long as noise
-    // could plausibly explain it. Streaks advance only when this run
-    // is itself clean evidence (full sweep, no contention flag); the
-    // >1.5x regression set takes the confirmation-retry path instead.
-    val cleanRun = only.isEmpty && suspect.isEmpty
-    val priorStreaks: Map[String, Int] =
-      if (priorMins.isEmpty) Map.empty
-      else recordJson.fold(Map.empty[String, Int])(BenchRecord.readStreaks)
-    val (newStreaks, rebaselined) = BenchRecord.slowerStreaks(
-      priorMins, results.filter(_._2 >= 0), priorStreaks,
-      regressedVsRecord.toSet, cleanRun)
-    // recorded-vs-swept ratios for the flagged queries, inline: a
-    // reader of BENCH_r0x alone can size the noise (or the regression)
-    // without diffing bench_full.json from git. final = the folded min
-    // that ships; sweep = the raw in-sweep min it replaced or
-    // confirmed. Capped like every embedded list — the overflow count
-    // is explicit so a fully-noisy box can't silently shorten it.
-    val resultsMap = results.toMap
-    val ratioJson = {
-      val flagged = (noiseSuspects ++ regressedVsRecord).distinct.sorted
-      val entries = flagged.take(8).map { name =>
-        val fin = resultsMap.getOrElse(name, -1.0)
-        val sw = sweepMins.getOrElse(name, fin)
-        val prev = priorMins.getOrElse(name, -1.0)
-        s""""$name":{"sweep":${f3(sw)},"final":${f3(fin)},"record":${f3(prev)}}"""
-      }
-      val more =
-        if (flagged.size > 8) Seq(s""""_more":${flagged.size - 8}""")
-        else Nil
-      (entries ++ more).mkString("{", ",", "}")
-    }
-    val sorted = results.sortBy(_._1)
-    val chunks = sorted.grouped(20).toSeq
-    chunks.zipWithIndex.foreach { case (chunk, i) =>
-      val qs = chunk.map { case (k, v) => "\"" + k + "\":" + f3(v) }
-        .mkString("{", ",", "}")
-      println(s"""{"detail_part":${i + 1},"of":${chunks.size},"queries":$qs}""")
-    }
-    // THIS-RUN per-query artifact (r14 verdict "What's wrong #3"): the
-    // driver keeps only a 2000-char stdout tail, which truncates the
-    // detail_part lines above to the last 1-2 of ~11 — so round-over-
-    // round per-query diffs were impossible from the artifacts alone.
-    // bench_last.json records the just-finished run's per-query minima
-    // verbatim (NO rolling-min merge — that is bench_full.json's job),
-    // committed each round so PERF can diff queries against the prior
-    // round's file. Additive only: stdout shape and bench_full.json
-    // semantics are unchanged.
-    val lastQs = sorted.map { case (k, v) => "\"" + k + "\":" + f3(v) }
-      .mkString("{", ",", "}")
+    val total = results.flatMap(_._2.map(_._1)).sum
+    def perQuery(v: ((Double, GraftMetricsBridge.TaskTotals)) => String)
+        : String = results.map { case (name, best) =>
+      "\"" + name + "\":" + best.fold("-1")(v)
+    }.mkString("{", ",", "}")
+    val head = s""""metric":"total","value":${f3(total)},"unit":"sec","sf":"$sfDir","cpus":$cpus,"n_queries":${results.size}"""
     try java.nio.file.Files.write(
       java.nio.file.Paths.get("bench_last.json"),
-      (s"""{"metric":"total","value":${f3(total)},"unit":"sec","sf":"$sfDir","cpus":$cpus,"n_queries":${results.size},"full_run":${only.isEmpty},"load_before":$loadBefore,"streaming_events_per_sec":${f3(streamRate)},"streaming_batch_p50_ms":${f3(streamP50)},"streaming_batch_p99_ms":${f3(streamP99)},"queries":$lastQs}""" + "\n")
+      (s"""{$head,"full_run":${only.isEmpty},"load_before":$loadBefore,"load_after":$loadAfter,""" +
+        s""""queries":${perQuery(b => f3(b._1))},""" +
+        s""""task_ms":${perQuery(_._2.timeMs.toString)},""" +
+        s""""rows":${perQuery(_._2.rows.toString)}}""" + "\n")
         .getBytes("UTF-8"))
     catch { case e: Throwable =>
       System.err.println(s"[bench] bench_last.json write failed: $e")
     }
-    val rebaseJson = cappedJson(rebaselined.toSeq.sorted)
-    val metricLine = s"""{"metric":"total","value":${f3(total)},"unit":"sec","sf":"$sfDir","cpus":$cpus,"n_queries":${results.size},"streaming_events_per_sec":${f3(streamRate)},"streaming_batch_p50_ms":${f3(streamP50)},"streaming_batch_p99_ms":${f3(streamP99)},"n_contended":${suspect.size},"n_noise_folded":${noiseSuspects.size},"load_before":$loadBefore,"load_after":$loadAfter,"contention_warnings":$warnJson,"noise_suspects":$noiseJson,"n_regressed_vs_record":${regressedVsRecord.size},"regressed_vs_record":$regJson,"retry_clean":$retryClean,"n_confirmed_slower":${confirmedSlower.size},"n_slower_unconfirmed":$nSlowerUnconfirmed,"n_rebaselined":${rebaselined.size},"rebaselined":$rebaseJson,"flagged_ratios":$ratioJson}"""
-    // the FILE record merges this run into the prior same-sf record
-    // (a subset run updates only what it measured; see BenchRecord) —
-    // its value/n_queries describe the MERGED map so the file stays
-    // self-consistent; stdout's metric line above stays this-run-only
-    // because that is what the round driver records.
-    // carry only CURRENT-inventory queries forward: a renamed/retired
-    // query must not keep a ghost entry in the record forever. Slower
-    // values only raise a record min when CONFIRMED by the strictly-
-    // last isolated retry (see above) — a dirty sweep keeps the clean
-    // prior min and ships the noise flag instead.
-    val merged = BenchRecord.mergedQueries(
-      priorMins.filter(kv => SparkEntry.queries.contains(kv._1)), sorted,
-      confirmedSlower ++ rebaselined)
-    val nCarried = merged.size - sorted.size
-    val mergedTotal = merged.collect { case (_, v) if v >= 0 => v }.sum
-    val allQs = merged.map { case (k, v) => "\"" + k + "\":" + f3(v) }
-      .mkString("{", ",", "}")
-    // CLOBBER GUARD: when a prior record exists but yields no carryable
-    // entries (different sf, different thread basis, parse failure), a
-    // SUBSET run must not replace the full record with its handful of
-    // queries — that is exactly the blind-record failure BenchRecord's
-    // scaladoc documents. Only a FULL run may establish a record on a
-    // new basis; a mismatched subset run keeps the file untouched.
-    val fullRun = only.isEmpty
-    val priorFileExists =
-      java.nio.file.Files.exists(java.nio.file.Paths.get("bench_full.json"))
-    // the streak ledger rides in the record file (current-inventory
-    // entries only, zeros dropped) so the 3-consecutive-clean-sweeps
-    // evidence survives between runs
-    val streaksJson = newStreaks
-      .filter(kv => SparkEntry.queries.contains(kv._1)).toSeq.sortBy(_._1)
-      .map { case (k, v) => "\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    if (fullRun || priorMins.nonEmpty || !priorFileExists) {
-      try java.nio.file.Files.write(
-        java.nio.file.Paths.get("bench_full.json"),
-        (s"""{"metric":"total","value":${f3(mergedTotal)},"unit":"sec","sf":"$sfDir","cpus":$cpus,"n_queries":${merged.size},"n_carried":$nCarried,"streaming_events_per_sec":${f3(recordedStreamRate)},"streaming_batch_p50_ms":${f3(recordedStreamP50)},"streaming_batch_p99_ms":${f3(recordedStreamP99)},"streaming_carried":$streamingCarried,"n_contended":${suspect.size},"n_noise_folded":${noiseSuspects.size},"load_before":$loadBefore,"load_after":$loadAfter,"contention_warnings":$warnJson,"noise_suspects":$noiseJson,"n_regressed_vs_record":${regressedVsRecord.size},"regressed_vs_record":$regJson,"retry_clean":$retryClean,"n_confirmed_slower":${confirmedSlower.size},"n_slower_unconfirmed":$nSlowerUnconfirmed,"n_rebaselined":${rebaselined.size},"rebaselined":$rebaseJson,"flagged_ratios":$ratioJson,"slower_streak":$streaksJson,"queries":$allQs}""" + "\n")
-          .getBytes("UTF-8"))
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] bench_full.json write failed: $e")
-      }
-    } else {
-      System.err.println("[bench] bench_full.json NOT updated: prior " +
-        "record is for a different sf/cpus basis and this was a subset " +
-        "run — run the full sweep to establish a record on this basis")
-    }
-    println(metricLine)
+    // The compact metric line comes last so a capture of only the
+    // output's tail (2000 chars, parsed line by line as JSON) still
+    // holds it; per-query detail lives in bench_last.json.
+    println(s"""{$head,"load_before":$loadBefore,"load_after":$loadAfter}""")
     spark.stop()
   }
 }

@@ -539,8 +539,8 @@ object ScalingSweep {
       println(entryJson(name, f, sizes, basisOf(name), withName = true))
       f
     }
-    // STRICTLY-LAST NOISE RETRY (Bench's confirmation-retry
-    // discipline): every entry whose fresh fit sits over its bound is
+    // STRICTLY-LAST NOISE RETRY: every entry whose fresh fit sits
+    // over its bound is
     // re-measured ONCE after the whole sweep — minutes away from its
     // original sampling window — and the two runs fold by per-rung
     // work minimum ([[graft.plans.ScalingAudit.foldMin]]) before any
@@ -830,7 +830,7 @@ object ScalingSweep {
         if (!priorExists) ""
         else new String(java.nio.file.Files.readAllBytes(path), "UTF-8")
       val priorEntries: Map[String, String] = readRawEntries(priorJson)
-      // CLOBBER GUARD (mirrors Bench's): when a prior table exists but
+      // CLOBBER GUARD: when a prior table exists but
       // parses to nothing, a SUBSET run must not replace the committed
       // 40-query record with its handful of entries — refuse loudly;
       // only a FULL sweep may re-establish a table over a corrupt file

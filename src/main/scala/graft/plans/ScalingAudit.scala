@@ -59,7 +59,7 @@ object ScalingAudit {
     * uncertainty of the MIN estimator a reader needs to judge fit
     * confidence without re-running. The min is the steady-state
     * estimator; its uncertainty is whether the bottom REPRODUCED (the
-    * bench's minStable rule: two smallest agree ⇒ both clean), not
+    * two smallest agree ⇒ both clean), not
     * how high the worst sample spiked — one host-noise outlier among
     * several clean samples must not poison the floor (observed:
     * q22_dedup_contain@heaps refused its fit from a single 2.2×
@@ -383,8 +383,8 @@ object ScalingAudit {
   /** Fold two measurement runs of the SAME entry into one fit by
     * per-rung work MINIMUM (wall folds too; each rung keeps the spread
     * of the run that provided its min work), then refit under the
-    * same floors. The sweep's strictly-last noise retry uses this the
-    * way Bench folds its confirmation-retry samples: this host's noise
+    * same floors. The sweep's strictly-last noise retry uses this to
+    * fold in a re-measure taken minutes later: this host's noise
     * arrives in sustained multi-minute windows, so an entry whose
     * whole sampling window was noisy carries a stable-LOOKING wrong
     * minimum (within-run spread floors see reproduction, not truth —

@@ -644,12 +644,19 @@ object Relational {
   /** INTERVAL × INTERVAL overlap join — q11b generalized from
     * point-in-range to range-against-range: pairs of same-part lineitems
     * whose transit windows [ship, ship + quantity days) overlap,
-    * aggregated per part. BOTH sides replicate into the 32-day bins
-    * their interval spans (≤ 3 copies at the fixture's 50-day quantity
-    * cap; 32 measured fastest of {7, 16, 32, 64} at sf0.1 — below it
-    * replication dominates, above it false candidates do),
-    * the join is EQUI on (part, bin) with the overlap
-    * predicate as a residual inside the hash join — and the multi-bin
+    * aggregated per part. BOTH sides replicate into the 64-day bins
+    * their interval spans (≤ 2 copies at the fixture's 50-day quantity
+    * cap), and the join is pinned to a shuffled hash join: the round-14
+    * shape (32-day bins, ≤ 3 copies, broadcast join) is slower at sf0.1
+    * — 10 alternating pairs on 4 cpus, min-of-2 wall: this shape's
+    * median 1.80 s (IQR 1.71–1.88) vs 2.94 s (IQR 2.68–3.21), faster
+    * in 10/10 pairs.
+    * The win is wall time, not work: the 64-day shape sums more task
+    * time (2599 vs 1545 ms median) and rows (1.51M vs 1.24M read +
+    * shuffled). At sf0.01 the two tie (0.70 vs 0.71 s). The bin width
+    * and the hint were measured together, not apart. The join is EQUI
+    * on (part, bin) with the overlap predicate as a residual inside
+    * the hash join — and the multi-bin
     * double count is eliminated WITHOUT a distinct by q11b's argument
     * extended to two extents: an overlapping pair is admitted only in
     * the bin holding its overlap START (max of the two starts), a day

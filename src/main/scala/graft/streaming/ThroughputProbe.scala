@@ -10,12 +10,11 @@ import org.apache.spark.sql.functions._
   * (BASELINE.md: 1–3 ms per-event relay latency, single-threaded JS
   * worker ≈ 10³ events/s order of magnitude).
   *
-  * Two consumers, one measurement: CdcThroughputSpec asserts the
-  * regression floor (>10k ev/s) per `sbt test`, and Bench runs it per
-  * official round so the events/s figure lands in BENCH_r0x.json
-  * beside the query times — the r11 verdict's ask: the one
-  * reference-comparable number must be tracked round over round like
-  * everything else, not live only inside an sbt assertion.
+  * CdcThroughputSpec runs it per `sbt test` and owns the regression
+  * floor (>10k ev/s) and the every-tx-assembled sanity. It runs on
+  * the test session's MemoryStream, not the daemon's source, state
+  * store or partition count; the shipped daemon's latency and drain
+  * rate are measured by the `perfbench` `cdc_trickle` workload.
   *
   * Measurement shape (the spec's original design, lifted): a synthetic
   * jsoncdc stream of `nTx` begin/insert/commit transactions through
@@ -36,22 +35,18 @@ object ThroughputProbe {
     * ONE published number is a relay latency (BASELINE.md: 1–3 ms per
     * event, single-process), and a throughput figure alone doesn't
     * answer "how stale is a relayed event" under microbatching.
-    * -1 sentinels when `measureLatency = false`.
-    *
-    * `measureLatency` exists so a caller taking best-of-N throughput
-    * probes can run the latency phase ONLY on the LAST attempt: the
-    * r13 sweep ran it inline between the two attempts, and the
-    * official number dropped 27,595 → 21,617 ev/s in that same commit
-    * (the 100 extra microbatches before attempt 2's timed window are
-    * a plausible perturbation of a max-of-2 measurement — r13 ADVICE;
-    * the driver's independent run of the same code measured 28,568).
-    * With the phase after the last attempt, no throughput window ever
-    * has latency batches in front of it. */
+    * The latency phase is a smoke of [[latBatches]] batches (the path
+    * compiles, runs and yields positive walls), not a percentile
+    * estimate. */
   case class Result(events: Long, secs: Double, eventsPerSec: Double,
       transactions: Long, latencyP50Ms: Double, latencyP99Ms: Double)
 
-  def run(spark: SparkSession, nTx: Int = 20000,
-      measureLatency: Boolean = true, latBatches: Int = 100): Result = {
+  /** Transactions in the stream: 3 lines each, the first quarter warm. */
+  val nTx = 20000
+  /** Small batches in the latency phase. */
+  private val latBatches = 5
+
+  def run(spark: SparkSession): Result = {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val lines = (0 until nTx).iterator.flatMap { i =>
@@ -84,37 +79,31 @@ object ThroughputProbe {
       // drained per second at saturation); a relayed event's staleness
       // is a different number — the end-to-end wall time of one small
       // microbatch (arrive → decode → assemble → sink visible), which
-      // at saturation is hidden inside the batch. 100 batches of 50 tx
-      // (150 events — a realistic per-trigger CDC trickle), each timed
-      // addData→processAllAvailable; p50/p99 over the batch walls.
-      // 100 samples make pct(0.99) index 98 — a real second-worst-case
-      // percentile, not the sample maximum that 40 samples gave (one
-      // GC pause used to DEFINE the recorded p99 — r13 ADVICE).
+      // at saturation is hidden inside the batch. latBatches batches of
+      // 50 tx (150 events — a realistic per-trigger CDC trickle), each
+      // timed addData→processAllAvailable; p50/p99 over the batch walls.
       // Fresh tx ids past nTx keep pk/assembly semantics intact. Runs
       // strictly after the throughput measurement so it can't slow it.
-      if (!measureLatency) Result(n, secs, n / secs, tx, -1.0, -1.0)
-      else {
-        val latTx = 50
-        val latencies = (0 until latBatches).map { b =>
-          val rows = (0 until latTx).flatMap { j =>
-            val i = nTx + b * latTx + j
-            Seq(
-              ("pg1", i * 3L, s"""{"begin": $i}"""),
-              ("pg1", i * 3L + 1,
-                s"""{"insert": {"id": $i, "v": "x$i"}, "table": "t"}"""),
-              ("pg1", i * 3L + 2,
-                s"""{"commit": $i, "t": "2024-01-01 00:00:00"}"""))
-          }
-          val b0 = System.nanoTime()
-          mem.addData(rows: _*)
-          q.processAllAvailable()
-          (System.nanoTime() - b0) / 1e6
-        }.sorted
-        def pct(p: Double): Double =
-          latencies(math.min(latencies.size - 1,
-            math.ceil(p * latencies.size).toInt - 1))
-        Result(n, secs, n / secs, tx, pct(0.50), pct(0.99))
-      }
+      val latTx = 50
+      val latencies = (0 until latBatches).map { b =>
+        val rows = (0 until latTx).flatMap { j =>
+          val i = nTx + b * latTx + j
+          Seq(
+            ("pg1", i * 3L, s"""{"begin": $i}"""),
+            ("pg1", i * 3L + 1,
+              s"""{"insert": {"id": $i, "v": "x$i"}, "table": "t"}"""),
+            ("pg1", i * 3L + 2,
+              s"""{"commit": $i, "t": "2024-01-01 00:00:00"}"""))
+        }
+        val b0 = System.nanoTime()
+        mem.addData(rows: _*)
+        q.processAllAvailable()
+        (System.nanoTime() - b0) / 1e6
+      }.sorted
+      def pct(p: Double): Double =
+        latencies(math.min(latencies.size - 1,
+          math.ceil(p * latencies.size).toInt - 1))
+      Result(n, secs, n / secs, tx, pct(0.50), pct(0.99))
     } finally {
       q.stop()
       spark.catalog.dropTempView(name) // free the sink's driver memory

@@ -1,6 +1,7 @@
 #!/usr/bin/env bash
-# Isolated subset bench for A/B work: same JVM flags as run_main.sh but
-# cwd=/tmp so bench_full.json (cwd-relative in Bench) is never touched.
+# Isolated subset bench for A/B work: same JVM flags as run_main.sh,
+# run in a fresh temporary directory so paired runs never share files.
+# The path of that run's bench_last.json goes to stderr for diffing.
 #   SPARK_GRAFT_ONLY=q1,q2 SPARK_GRAFT_RUNS=3 tools/ab_bench.sh
 set -euo pipefail
 REPO="$(cd "$(dirname "$0")/.." && pwd)"
@@ -11,7 +12,8 @@ for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
          sun.security.action sun.util.calendar; do
   ADD_OPENS+=(--add-opens "java.base/$p=ALL-UNNAMED")
 done
-cd /tmp
+cd "$(mktemp -d)"
+echo "[ab_bench] $PWD/bench_last.json" >&2
 exec java "${ADD_OPENS[@]}" \
   -Dspark.ui.enabled=false \
   -Dspark.sql.session.timeZone=UTC \

@@ -6,7 +6,7 @@
 #       consecutive rounds closed with driver artifacts uncommitted
 #       while the README checklist stayed aspirational);
 #   (b) any PRESENT round artifact (BENCH_r*/CORRECTNESS_r*/
-#       SCALING_r*.json, bench_full.json, LEAKCHECK.json,
+#       SCALING_r*.json, bench_last.json, LEAKCHECK.json,
 #       scaling_exponents.json) untracked by git — (a) already covers
 #       this unless gitignored; the separate pass names the artifact
 #       in the failure message;
@@ -38,7 +38,7 @@ if [ -n "$(git status --porcelain)" ]; then
 fi
 
 for f in BENCH_r*.json CORRECTNESS_r*.json SCALING_r*.json \
-         bench_full.json LEAKCHECK.json scaling_exponents.json; do
+         bench_last.json LEAKCHECK.json scaling_exponents.json; do
   [ -e "$f" ] || continue
   if ! git ls-files --error-unmatch "$f" >/dev/null 2>&1; then
     echo "ROUND-CLOSE FAIL: round artifact untracked: $f"

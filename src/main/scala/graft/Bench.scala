@@ -22,30 +22,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // default to the contract's local[32] (capped at the box): the v0
-    // scaffold's "4" silently ran every official bench on 4 threads,
-    // and the queries that repartition to shuffle.partitions(=cpus)
-    // for pre-shuffle parse parallelism (the CDC family, dedup_ngram)
-    // paid 2-3.5x for it — a deficit that looked exactly like a host
-    // noise window until a SPARK_GRAFT_CPUS=32 run came back at record
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(32, Runtime.getRuntime.availableProcessors).toString)
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-    SparkEntry.requiredConfs.foreach { case (k, v) => builder.config(k, v) }
-    val spark = builder.getOrCreate()
-    // ERROR, not WARN: each dropPinnedRdds() emits a (harmless)
-    // lineage-truncated WARN per checkpointed RDD — hundreds of lines
-    // that would crowd the report out of the driver's 2000-char tail
-    // capture. Real failures still print via the [bench] stderr lines.
-    spark.sparkContext.setLogLevel("ERROR")
+    // SPARK_GRAFT_ONLY=q1,q2 restricts the run for local iteration;
+    // parsed before the session starts so a misspelt name fails fast.
+    val only = Harness.only(SparkEntry.queries.keys)
+    val cpus = Harness.cpus
+    val spark = Harness.session()
     // noop sink forces full materialization of every operator (count()
     // would let Catalyst prune the work being measured).
-    // SPARK_GRAFT_ONLY=q1,q2 restricts the run for local iteration.
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).toSet)
     val selected = only.fold(SparkEntry.queries)(
       names => SparkEntry.queries.filter(kv => names(kv._1))).toSeq.sortBy(_._1)
     def untimed(fn: (SparkSession, String) => DataFrame, dir: String): Unit =

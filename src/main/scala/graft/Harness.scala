@@ -2,8 +2,97 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Shared plumbing for the driver-contract mains (Bench / Verify). */
+/** Shared plumbing for the mains, and the one place a `SparkSession` is
+  * built. Two profiles:
+  *
+  *   - offline ([[conf]], [[session]]): Bench, Verify, PlanDump,
+  *     ScalingSweep, the data generators and the test session —
+  *     `local[cpus]` with as many shuffle partitions, UI off;
+  *   - CLI ([[cliConf]], [[cliSession]]): `cli.Main`'s `-q`/`-e` and
+  *     `-c` daemon paths — `local[*]` unless a master is given, the
+  *     RocksDB state store, the query listener, and Spark's default
+  *     shuffle partitions. perfbench's `cdc_trickle` measures exactly
+  *     this configuration; a streaming query freezes its shuffle
+  *     partition count into its checkpoint, so a change here changes
+  *     what every restarted daemon keeps running with.
+  *
+  * Both apply `SparkEntry.requiredConfs` at builder time:
+  * `spark.sql.extensions` is a static conf. */
 private[graft] object Harness {
+
+  /** Worker threads (and shuffle partitions) of the offline profile:
+    * SPARK_GRAFT_CPUS, default the contract's 32 capped at the box. The
+    * v0 scaffold's "4" silently ran every official bench on 4 threads,
+    * and the queries that repartition to shuffle.partitions(=cpus) for
+    * pre-shuffle parse parallelism (the CDC family, dedup_ngram) paid
+    * 2-3.5x for it — a deficit that looked exactly like a host noise
+    * window until a SPARK_GRAFT_CPUS=32 run came back at record. */
+  def cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.trim.toInt)
+    .getOrElse(math.min(32, Runtime.getRuntime.availableProcessors))
+
+  /** The offline profile's session conf on `cpus` threads. */
+  def conf(cpus: Int): Map[String, String] = Map(
+    "spark.master" -> s"local[$cpus]",
+    "spark.sql.shuffle.partitions" -> cpus.toString,
+    "spark.ui.enabled" -> "false") ++ SparkEntry.requiredConfs
+
+  /** The offline session (or the running one) from `conf`, at log level
+    * ERROR: each dropPinnedRdds() emits a (harmless) lineage-truncated
+    * WARN per checkpointed RDD — hundreds of lines that would crowd a
+    * main's report out of a 2000-char tail capture. Real failures still
+    * print through each main's own stderr lines. */
+  def session(conf: Map[String, String] = Harness.conf(cpus))
+      : SparkSession = {
+    val spark = build(conf)
+    spark.sparkContext.setLogLevel("ERROR")
+    spark
+  }
+
+  /** The CLI profile's session conf. An `externalMaster` (spark-submit,
+    * `-Dspark.master`, SPARK_MASTER) is left to Spark; a standalone
+    * launch runs `local[*]`. */
+  def cliConf(appName: String, externalMaster: Boolean)
+      : Map[String, String] = {
+    val master =
+      if (externalMaster) Map.empty[String, String]
+      else Map("spark.master" -> "local[*]")
+    Map("spark.app.name" -> appName) ++ master ++ SparkEntry.requiredConfs ++
+      Map(
+        // RocksDB-backed keyed state (SURVEY §7 risk register): tx/schema
+        // state spills off-heap instead of living in executor JVM memory
+        "spark.sql.streaming.stateStore.providerClass" ->
+          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+  }
+
+  /** The CLI session, with the progress/failure listener (O5/O23)
+    * attached for every streaming query it runs. */
+  def cliSession(appName: String): SparkSession = {
+    val spark = build(cliConf(appName, sys.props.contains("spark.master") ||
+      sys.env.contains("SPARK_MASTER")))
+    spark.streams.addListener(new graft.streaming.GraftQueryListener())
+    spark
+  }
+
+  private def build(conf: Map[String, String]): SparkSession = {
+    val builder = SparkSession.builder()
+    conf.foreach { case (k, v) => builder.config(k, v) }
+    builder.getOrCreate()
+  }
+
+  /** SPARK_GRAFT_ONLY=q1,q2 (`raw`) as a subset of `valid`, or None when
+    * unset. A name outside `valid`, or a list naming nothing, is a loud
+    * error rather than a run that silently measures nothing. */
+  def only(valid: Iterable[String],
+      raw: Option[String] = sys.env.get("SPARK_GRAFT_ONLY"))
+      : Option[Set[String]] =
+    raw.map { s =>
+      val names = s.split(",").map(_.trim).filter(_.nonEmpty).toSet
+      require(names.nonEmpty, "SPARK_GRAFT_ONLY names no entry")
+      val stray = names.diff(valid.toSet)
+      require(stray.isEmpty, "SPARK_GRAFT_ONLY names not among the " +
+        s"selectable entries: ${stray.toSeq.sorted.mkString(", ")}")
+      names
+    }
 
   /** Drop leftover localCheckpoint RDDs between queries — across ~90
     * queries the pinned sf-sized snapshots otherwise crowd executor

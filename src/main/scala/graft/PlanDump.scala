@@ -9,9 +9,9 @@ import java.nio.file.{Files, Paths}
   *
   *   tools/run_main.sh graft.PlanDump plans/r14 before q19l_ks q41d_kcore
   *
-  * With no names, dumps every declared query. Session setup mirrors
-  * Bench (same master/shuffle-partitions basis) so the dumped plan is
-  * the one the bench actually runs, modulo AQE runtime re-optimization.
+  * With no names, dumps every declared query. It runs on Harness's
+  * offline session, the one Bench times, so the dumped plan is the one
+  * the bench actually runs, modulo AQE runtime re-optimization.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
@@ -20,15 +20,7 @@ object PlanDump {
     val suffix = args(1)
     val names = args.drop(2).toSeq
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(32, Runtime.getRuntime.availableProcessors).toString)
-    val builder = org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-    SparkEntry.requiredConfs.foreach { case (k, v) => builder.config(k, v) }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session()
     Files.createDirectories(outDir)
     val selected =
       if (names.isEmpty) SparkEntry.queries.toSeq.sortBy(_._1)

@@ -558,14 +558,7 @@ object ScalingData {
   def main(args: Array[String]): Unit = {
     val base = args.headOption
       .orElse(sys.env.get("SPARK_GRAFT_LADDER_BASE")).getOrElse(defaultBase)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(32, Runtime.getRuntime.availableProcessors).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session()
     ensure(spark, base)
     spark.stop()
   }
@@ -576,14 +569,7 @@ object ScalingData {
 object FloatFixture {
   def main(args: Array[String]): Unit = {
     val Array(dir, seedStr) = args.take(2)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(32, Runtime.getRuntime.availableProcessors).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session()
     ScalingData.reseeded(spark, dir, java.lang.Long.parseLong(seedStr))
     spark.stop()
   }

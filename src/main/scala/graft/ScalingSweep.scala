@@ -38,10 +38,12 @@ import graft.plans.ScalingAudit
   * directory that contains `sf0.001` (e.g. `/root/testdata`) instead
   * selects the legacy flat mode: every query on those three dirs.
   *
-  * Env knobs mirror Bench: SPARK_GRAFT_SF_BASE (default
-  * `scalingdata`), SPARK_GRAFT_CPUS, SPARK_GRAFT_RUNS (samples per
-  * point, default 3), SPARK_GRAFT_ONLY (comma subset of the risk
-  * list). */
+  * Runs on Harness's offline session, Bench's basis: SPARK_GRAFT_CPUS
+  * threads and as many shuffle partitions; the scaled-partitions
+  * control re-fits at a fixed 256. Env knobs: SPARK_GRAFT_SF_BASE
+  * (default `scalingdata`), SPARK_GRAFT_CPUS, SPARK_GRAFT_RUNS
+  * (samples per point, default 3), SPARK_GRAFT_ONLY (comma subset of
+  * the measurable entries; a name outside them fails the run). */
 object ScalingSweep {
 
   /** The queries whose 100 TB story rests on a growth argument —
@@ -459,13 +461,10 @@ object ScalingSweep {
     // sf-directories measures every query on those three dirs
     val flatMode = java.nio.file.Files.isDirectory(
       java.nio.file.Paths.get(s"$base/sf0.001"))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(32, Runtime.getRuntime.availableProcessors).toString)
+    val cpus = Harness.cpus
     // 3 samples per point (vs the bench's 2): the fit differences tiny
     // minima, so each point's min is worth one extra sample of rigor
     val runs = math.max(1, sys.env.getOrElse("SPARK_GRAFT_RUNS", "3").toInt)
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     // flat mode measures the risk list only: the heaps variants NEED
     // the generated growing-vocabulary rungs, which a flat fixture
     // base does not carry
@@ -474,30 +473,12 @@ object ScalingSweep {
     // silent empty selection — SPARK_GRAFT_ONLY=q01_scan would
     // otherwise select nothing and (pre-merge) have clobbered the
     // table with it
-    only.foreach { names =>
-      val stray = names.diff(measurable.toSet)
-      require(stray.isEmpty,
-        s"SPARK_GRAFT_ONLY names not on the scaling entry list: $stray")
-    }
+    val only = Harness.only(measurable)
     val selected = only.fold(measurable)(names => measurable.filter(names))
-    require(selected.nonEmpty, "empty selection")
     val unknown =
       selected.filterNot(e => SparkEntry.queries.contains(queryOf(e)))
     require(unknown.isEmpty, s"not in the inventory: $unknown")
-    // SPARK_GRAFT_PARTITIONS decouples shuffle partitioning from the
-    // thread count (default: = cpus, the bench basis). Used to verify
-    // the per-task working-set mechanism behind near-bound fits: at a
-    // fixed 32, a rung ×100 bigger packs ×100 the hash/sort state into
-    // each task, and the LLC→DRAM step reads as fake super-linearity;
-    // production holds per-task bytes roughly constant instead.
-    val partitions = sys.env.getOrElse("SPARK_GRAFT_PARTITIONS", cpus)
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", partitions)
-      .config("spark.ui.enabled", "false")
-    SparkEntry.requiredConfs.foreach { case (k, v) => builder.config(k, v) }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session()
     def dirsOf(name: String): Seq[String] =
       if (flatMode) Seq("sf0.001", "sf0.01", "sf0.1").map(s => s"$base/$s")
       else ScalingData.dirs(base, ladderOf(name))
@@ -652,8 +633,9 @@ object ScalingSweep {
       workOf(name).forall(e =>
         ScalingAudit.regimeFatal(e, bounds.getOrElse(name, 1.6),
           rowFits.get(name).flatMap(_._2)))
-    val controlPartitions = sys.env
-      .getOrElse("SPARK_GRAFT_CONTROL_PARTITIONS", "256").toInt
+    // fixed: every recorded control (SCALING_r10 onwards) ran at 256,
+    // so a re-measure stays comparable with the table
+    val controlPartitions = 256
     val controlFits: Map[String, ScalingAudit.ScalingFit] =
       candidates.filterNot(rowFatal).map { name =>
         spark.conf.set("spark.sql.shuffle.partitions",
@@ -665,7 +647,7 @@ object ScalingSweep {
         try name -> ScalingAudit.fit(spark, s"$name[control]", fnOf(name),
           dirsOf(name), math.max(runs, extraRuns.getOrElse(name, 0)),
           sizes = sizesOf(name))
-        finally spark.conf.set("spark.sql.shuffle.partitions", partitions)
+        finally spark.conf.set("spark.sql.shuffle.partitions", cpus.toString)
       }.toMap
     // an UNFIT control only supports the downgrade when its fit was
     // refused because the data term genuinely vanished (flattened) —

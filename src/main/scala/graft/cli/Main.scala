@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.json4s._
 import org.json4s.jackson.JsonMethods
 
-import graft.SparkEntry
+import graft.{Harness, SparkEntry}
 import graft.sinks.SinkRegistry
 import graft.streaming.CdcStream
 import graft.subscribe._
@@ -183,12 +183,7 @@ object Main {
     }
 
   private def querySession(): SparkSession = {
-    val builder = SparkSession.builder().appName("graft-query")
-    if (!sys.props.contains("spark.master") &&
-        !sys.env.contains("SPARK_MASTER"))
-      builder.master("local[*]")
-    SparkEntry.requiredConfs.foreach { case (k, v) => builder.config(k, v) }
-    val spark = builder.getOrCreate()
+    val spark = Harness.cliSession("graft-query")
     spark.sparkContext.setLogLevel("WARN")
     spark
   }
@@ -526,20 +521,7 @@ object Main {
       println(s"config OK: ${cfg.backends.size} backend(s)")
       return
     }
-    val builder = SparkSession.builder().appName("graft-cdc")
-    // standalone launch (no spark-submit): default to local mode; under
-    // spark-submit the master comes from the submit args / conf.
-    if (!sys.props.contains("spark.master") &&
-        !sys.env.contains("SPARK_MASTER"))
-      builder.master("local[*]")
-    SparkEntry.requiredConfs.foreach { case (k, v) => builder.config(k, v) }
-    // RocksDB-backed keyed state (SURVEY §7 risk register): tx/schema
-    // state spills off-heap instead of living in executor JVM memory
-    builder.config("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val spark = builder.getOrCreate()
-    // O5/O23 — progress/failure observability for every query
-    spark.streams.addListener(new graft.streaming.GraftQueryListener())
+    val spark = Harness.cliSession("graft-cdc")
     // one streaming query per backend (reference: worker per backend)
     val queries = cfg.backends.map { b =>
       val env = CdcStream.forBackend(spark, b)

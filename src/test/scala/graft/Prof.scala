@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Scratch profiling entry (test scope only): time one query with or
   * without the planner extensions, print the executed plan head.
   * Usage: Test/runMain graft.Prof <queryName> <sfDir> [noext]
@@ -11,14 +9,8 @@ object Prof {
     val name = args(0)
     val sfDir = args(1)
     val noExt = args.contains("noext")
-    val builder = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-    SparkEntry.requiredConfs
-      .filterNot { case (k, _) => noExt && k == "spark.sql.extensions" }
-      .foreach { case (k, v) => builder.config(k, v) }
-    val spark = builder.getOrCreate()
+    val spark = Harness.session(Harness.conf(32)
+      .filterNot { case (k, _) => noExt && k == "spark.sql.extensions" })
     spark.sparkContext.setLogLevel("WARN")
     import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
     spark.sparkContext.addSparkListener(new SparkListener {

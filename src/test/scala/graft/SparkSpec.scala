@@ -7,13 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Shared local session for all suites. */
 object TestSession {
   lazy val spark: SparkSession = {
-    val b = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-    SparkEntry.requiredConfs.foreach { case (k, v) => b.config(k, v) }
-    val s = b.getOrCreate()
+    val s = Harness.session(Harness.conf(4))
     s.sparkContext.setLogLevel("WARN")
     s
   }

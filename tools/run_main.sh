@@ -3,12 +3,14 @@
 # classes — the long measurement mains (ScalingSweep, Bench) hold no
 # sbt lock this way, so compilation and tests stay available while a
 # sweep runs. Mirrors build.sbt's fork options (JDK17 add-opens, UTC,
-# UI off, 8g driver heap). Compile first: `sbt -batch compile`.
+# UI off, 8g driver heap). Compile first: `sbt -batch compile`. The
+# main runs in the caller's working directory, where it reads and
+# writes its relative paths; the examples run from the repo root.
 #
 #   tools/run_main.sh graft.ScalingSweep --out SCALING_r10.json
 #   SPARK_GRAFT_SF_DIR=... tools/run_main.sh graft.Bench
 set -euo pipefail
-cd "$(dirname "$0")/.."
+REPO="$(cd "$(dirname "$0")/.." && pwd)"
 ADD_OPENS=()
 for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
          java.nio java.util java.util.concurrent \
@@ -20,5 +22,5 @@ exec java "${ADD_OPENS[@]}" \
   -Dspark.ui.enabled=false \
   -Dspark.sql.session.timeZone=UTC \
   "-Xmx${SPARK_DRIVER_MEM:-8g}" \
-  -cp "target/scala-2.13/classes:/opt/spark/jars/*" \
+  -cp "$REPO/target/scala-2.13/classes:/opt/spark/jars/*" \
   "$@"

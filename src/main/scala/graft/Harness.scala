@@ -10,11 +10,12 @@ import org.apache.spark.sql.SparkSession
   *     `local[cpus]` with as many shuffle partitions, UI off;
   *   - CLI ([[cliConf]], [[cliSession]]): `cli.Main`'s `-q`/`-e` and
   *     `-c` daemon paths — `local[*]` unless a master is given, the
-  *     RocksDB state store, the query listener, and Spark's default
-  *     shuffle partitions. perfbench's `cdc_trickle` measures exactly
-  *     this configuration; a streaming query freezes its shuffle
-  *     partition count into its checkpoint, so a change here changes
-  *     what every restarted daemon keeps running with.
+  *     RocksDB state store, the query listener, and no shuffle-partition
+  *     setting. perfbench's `cdc_trickle` measures this configuration.
+  *     The daemon's state partitions are decided per query in
+  *     `CdcStream.forBackend` (one, unless the session sets a count);
+  *     a restarted query keeps the count frozen in its checkpoint,
+  *     whatever either place says.
   *
   * Both apply `SparkEntry.requiredConfs` at builder time:
   * `spark.sql.extensions` is a static conf. */

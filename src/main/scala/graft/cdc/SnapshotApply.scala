@@ -10,13 +10,16 @@ import org.apache.spark.sql.functions._
   *
   * Semantics per (table, pk): the event with the highest seq wins; a
   * winning delete removes the row. Both operations are a single hash
-  * aggregate with map-side partial combine (deliberately NOT
-  * `row_number() = 1`, which would sort every partition); `advance`
-  * re-enters the snapshot rows as pseudo-inserts at their as_of_seq, so
-  * the delta merge is the SAME aggregate — one code path, one shuffle,
-  * incremental cost proportional to |snapshot| + |delta|. At very large
-  * snapshot sizes, bucket both sides by (table, pk-hash) on disk so the
-  * merge shuffles only the delta.
+  * aggregate (deliberately NOT `row_number() = 1`, which would sort
+  * every partition); `advance` re-enters the snapshot rows as
+  * pseudo-inserts at their as_of_seq, so the delta merge is the SAME
+  * aggregate — one code path, one shuffle, incremental cost
+  * proportional to |snapshot| + |delta|. `snapshot` combines map-side
+  * before its shuffle; `advance` hash-partitions its input by
+  * (table, pk) first, so every snapshot and delta row crosses the
+  * shuffle uncombined (the snapshot's rows are one per key anyway). At
+  * very large snapshot sizes, bucket both sides by (table, pk-hash) on
+  * disk so the merge shuffles only the delta.
   *
   * Handoff contract: `snapshot(lines ≤ S)` then
   * `advance(snap, decode(lines > S))` equals `snapshot(all lines)` for
@@ -54,10 +57,20 @@ object SnapshotApply {
 
   /** Snapshot + later deltas → new snapshot. Deltas at or before a
     * row's as_of_seq lose to it (replayed prefix rows are harmless —
-    * at-least-once friendly). */
+    * at-least-once friendly).
+    *
+    * Merge width: the union is hash-partitioned by (table, pk) to
+    * `snap`'s own partition count (at least 1) and the aggregate reuses
+    * that partitioning, adding no second exchange. For a version read
+    * back from parquet that count is its file-scan partitions, which
+    * Spark sizes from the bytes, `spark.sql.files.maxPartitionBytes` and
+    * the core count — so the merge does not take the session's shuffle
+    * width, which inside a stateful stream is the query's state
+    * partition count with AQE off (see `SnapshotSink`). */
   def advance(snap: DataFrame, deltas: DataFrame): DataFrame = {
     val snapAsEvents = snap.select(col("table"), col("pk"),
       lit("insert").as("kind"), col("item"), col("as_of_seq").as("seq"))
-    snapshot(snapAsEvents.unionByName(deltas))
+    snapshot(snapAsEvents.unionByName(deltas).repartition(
+      math.max(1, snap.rdd.getNumPartitions), col("table"), col("pk")))
   }
 }

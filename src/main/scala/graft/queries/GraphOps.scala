@@ -57,20 +57,24 @@ object GraphOps {
     * (autoBroadcastJoinThreshold −1) fits 1.38 — under the 1.6 bound —
     * and rows fit 1.23: the excess IS the flip, exactly as documented
     * above, now as numbers in scaling_exponents.json rather than
-    * prose. */
+    * prose.
+    *
+    * `srcsInNodes` asserts that every edge's `src` is a node; only then
+    * may round 1 skip its join (below). Without it, an edge from a node
+    * outside `nodes` carries no score, in round 1 as in every later
+    * round. */
   private[graft] def pagerank(nodes: DataFrame, edges: DataFrame,
-      iters: Int): DataFrame = {
+      iters: Int, srcsInNodes: Boolean = false): DataFrame = {
     val deg = edges.groupBy("src").agg(count(lit(1)).as("d"))
     val withDeg = edges.join(deg, "src").localCheckpoint()
     var scores = nodes.select(col("node"), lit(1000000L).as("s"))
     for (i <- 1 to iters) {
-      // round 1 rides a projection, not a join: every node's score is
-      // the 1000000 constant, so joining the score frame onto the edge
-      // list just annotates each edge with that constant — the one
-      // edge-scale join of the round collapses away (guide §1.2; edge
-      // srcs are order custkeys ⊆ customer, the q36d-audited FK, so the
-      // inner join never filtered anything)
-      val srcScored = if (i == 1) withDeg.withColumn("s", lit(1000000L))
+      // with srcsInNodes, round 1 rides a projection, not a join: every
+      // node's score is the 1000000 constant, so joining the score frame
+      // onto the edge list just annotates each edge with that constant —
+      // the one edge-scale join of the round collapses away (guide §1.2)
+      val srcScored =
+        if (i == 1 && srcsInNodes) withDeg.withColumn("s", lit(1000000L))
         else withDeg.join(scores.withColumnRenamed("node", "src"), "src")
       val contrib = srcScored
         .select(col("dst").as("node"), expr("s div d").as("c"))
@@ -92,7 +96,8 @@ object GraphOps {
       .localCheckpoint()
     val edges = edgesOf(Tables.load(s, dir, "orders"), nCust)
       .localCheckpoint() // reused every iteration
-    pagerank(nodes, edges, 3).orderBy("node")
+    // edge srcs are order custkeys ⊆ customer (the q36d-audited FK)
+    pagerank(nodes, edges, 3, srcsInNodes = true).orderBy("node")
   }
 
   /** The same three iterations unrolled as CTE stages (standard SQL
@@ -148,9 +153,10 @@ object GraphOps {
     * window — then a left join back onto nodes (isolated-node
     * fallback). Node-scale sides: honest shuffle joins, no broadcast
     * (the q41 argument); per-round localCheckpoint keeps lineage flat
-    * (the q37/q22 loop discipline). */
+    * (the q37/q22 loop discipline). `srcsInNodes` as in [[pagerank]]:
+    * it lets round 1 skip the label pickup join. */
   private[graft] def labelProp(nodes: DataFrame, undEdges: DataFrame,
-      iters: Int): DataFrame = {
+      iters: Int, srcsInNodes: Boolean = false): DataFrame = {
     // join strategy stays with the planner — same reasoning as
     // [[pagerank]]: broadcast-while-it-fits is correct at every scale,
     // and the audit's row-growth fit (linear, Θ(m) per round)
@@ -158,13 +164,12 @@ object GraphOps {
     // not algorithmic
     var labels = nodes.select(col("node"), col("node").as("lbl"))
     for (i <- 1 to iters) {
-      // round 1 rides a projection, not a join: every node's label IS
-      // its id, so the label pickup join over the edge list is the
-      // identity annotation lbl = src — the round's one edge-scale join
-      // collapses away (guide §1.2; every endpoint is a customer key
-      // or a synthetic dst in [1, nCust], both ⊆ nodes, so the inner
-      // join never filtered anything)
-      val picked = if (i == 1) undEdges.withColumn("lbl", col("src"))
+      // with srcsInNodes, round 1 rides a projection, not a join: every
+      // node's label IS its id, so the label pickup join over the edge
+      // list is the identity annotation lbl = src — the round's one
+      // edge-scale join collapses away (guide §1.2)
+      val picked =
+        if (i == 1 && srcsInNodes) undEdges.withColumn("lbl", col("src"))
         else undEdges
           .join(labels.select(col("node").as("src"), col("lbl")), "src")
       val votes = picked
@@ -199,7 +204,9 @@ object GraphOps {
     val und = canon.select(col("a").as("src"), col("b").as("dst"))
       .unionAll(canon.select(col("b").as("src"), col("a").as("dst")))
       .localCheckpoint() // reused every round
-    labelProp(nodes, und, 3).orderBy("node")
+    // every endpoint is a customer key or a synthetic dst in [1, nCust],
+    // both ⊆ nodes
+    labelProp(nodes, und, 3, srcsInNodes = true).orderBy("node")
   }
 
   /** Three unrolled rounds; the vote argmax is the row_number pick

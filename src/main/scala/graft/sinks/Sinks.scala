@@ -149,7 +149,15 @@ object IdempotentParquetSink {
   * `version=<batchId>` with a marker, so readers always see one complete
   * version, a crash replay overwrites the torn version idempotently, and
   * time travel across versions is free. Version dirs accrete; a real
-  * deployment vacuums old versions after a retention window. */
+  * deployment vacuums old versions after a retention window.
+  *
+  * Merge width: inside a stream with a stateful operator Spark turns
+  * AQE off, and the microbatch's session carries the query's state
+  * partition count as its shuffle width (1 for a `CdcStream.forBackend`
+  * query, see there), so a plain aggregate would merge a snapshot of
+  * any size on that many tasks. `SnapshotApply.advance` instead merges
+  * on the previous version's file-scan partition count (at least 1):
+  * one task for a small table, more as it grows. */
 class SnapshotSink(path: String) extends EventSink {
   val name = "snapshot"
 

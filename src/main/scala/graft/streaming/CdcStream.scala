@@ -9,10 +9,13 @@ import graft.subscribe.BackendConfig
   *
   * Capture is external (SURVEY.md §0 — pg_recvlogical / Debezium / oplog
   * tailers write LDJSON files or Kafka topics); Spark consumes an ordered
-  * (backend, seq, line) stream. For Kafka, backend=topic and seq=offset;
-  * for file replay the capture layer stamps seq. One streaming query per
-  * backend mirrors the reference's worker-per-backend process model
-  * (lapidus.js:88-109) inside a single SparkSession.
+  * (backend, seq, line) stream. For Kafka, backend=topic (one topic per
+  * configured backend, ConfigValidation) and seq=offset; for file replay
+  * the capture layer stamps backend and seq, and a configured backend
+  * reads the lines stamped with its name, so several backends may share
+  * one capture directory. One streaming query per backend mirrors the
+  * reference's worker-per-backend process model (lapidus.js:88-109)
+  * inside a single SparkSession.
   */
 object CdcStream {
 
@@ -38,18 +41,42 @@ object CdcStream {
   private val engineOptions =
     Set("wire", "txTimeoutMs", "checkpoint", "maxFilesPerTrigger")
 
+  private val shufflePartitions = "spark.sql.shuffle.partitions"
+
   /** Build the full pipeline for one configured backend. Transport and
     * wire format are independent (BackendConfig.resolvedSource ×
     * resolvedWire): ANY wire format rides ANY transport through the same
     * (backend, seq, line) contract, the reference's
     * one-worker-per-backend-of-any-type model (lapidus.js:88-109 — the
     * master forks identically for pg/mysql/mongo workers). The caller
-    * attaches sinks (SinkRegistry.attach) and starts the query. */
+    * attaches sinks (SinkRegistry.attach) and starts the query.
+    *
+    * State partitions: a session with no explicit
+    * `spark.sql.shuffle.partitions` gets 1. The stateful operators these
+    * streams run (CdcPipeline's dispatch, BinlogStream's tablemap carry)
+    * are keyed by `backend`, and a query built here carries one key: a
+    * file backend keeps only the lines stamped with `cfg.name`, and a
+    * validated Kafka backend subscribes to one topic. Spark's default of
+    * 200 would load and commit 199 empty state stores every trigger. An
+    * explicit setting (`--conf`, `-D`, the offline profile) wins, and a
+    * restarted query keeps its checkpoint's count, which Spark restores
+    * from the offset log. The rule lives here, not in `Harness.cliConf`,
+    * because the count follows from the key of the operator built here,
+    * and every daemon path calls this builder. `getOption` reports the
+    * default for an unset key, so only `getAll` tells unset from "200".
+    *
+    * Side effect: the setting is made on `spark` itself, so every later
+    * batch query on that session also shuffles to 1 partition (AQE can
+    * coalesce partitions but not add them). Give such work a session of
+    * its own (`spark.newSession()`) or set the count explicitly. */
   def forBackend(spark: SparkSession, cfg: BackendConfig): DataFrame = {
+    if (!spark.conf.getAll.contains(shufflePartitions))
+      spark.conf.set(shufflePartitions, "1")
     val lines = cfg.resolvedSource match {
       // Kafka callers pass maxOffsetsPerTrigger for the same batch cap
       case "file" => fileLines(spark, cfg.options("path"),
-        cfg.options.getOrElse("maxFilesPerTrigger", "16").toInt)
+          cfg.options.getOrElse("maxFilesPerTrigger", "16").toInt)
+        .filter(col("backend") === cfg.name)
       case "kafka" =>
         kafkaRecordsToLines(
           spark.readStream.format("kafka")

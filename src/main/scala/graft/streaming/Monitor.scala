@@ -51,8 +51,11 @@ case class QueryHealth(
     lastEvent: String)
 
 /** O5/O23 — a StreamingQueryListener that keeps a per-query health map
-  * and logs progress; attach once per session (cli.Main does). `log` is
-  * injectable so tests capture lines instead of reading stderr. */
+  * and logs progress; attach once per session (cli.Main does). Each
+  * trigger's line carries its latency, the `addBatch` phase, and the
+  * state-store instance count and commit ms summed over the query's
+  * stateful operators (0 for a stateless query). `log` is injectable so
+  * tests capture lines instead of reading stderr. */
 class GraftQueryListener(log: String => Unit = s => Console.err.println(s))
     extends StreamingQueryListener {
 
@@ -67,8 +70,9 @@ class GraftQueryListener(log: String => Unit = s => Console.err.println(s))
 
   override def onQueryProgress(e: QueryProgressEvent): Unit = {
     val p = e.progress
-    val latency = Option(p.durationMs.get("triggerExecution"))
-      .map(_.longValue).getOrElse(0L)
+    def phaseMs(k: String) =
+      Option(p.durationMs.get(k)).map(_.longValue).getOrElse(0L)
+    val latency = phaseMs("triggerExecution")
     val prev = state.getOrElse(p.id, QueryHealth(
       Option(p.name).getOrElse(p.id.toString), 0, 0, 0, true, ""))
     state.put(p.id, prev.copy(
@@ -78,7 +82,10 @@ class GraftQueryListener(log: String => Unit = s => Console.err.println(s))
       connected = true,
       lastEvent = "progress"))
     log(s"[graft] ${prev.name} batch=${p.batchId} " +
-      s"rows=${p.numInputRows} latencyMs=$latency")
+      s"rows=${p.numInputRows} latencyMs=$latency " +
+      s"addBatchMs=${phaseMs("addBatch")} " +
+      s"stateStores=${p.stateOperators.map(_.numStateStoreInstances).sum} " +
+      s"stateCommitMs=${p.stateOperators.map(_.commitTimeMs).sum}")
   }
 
   override def onQueryTerminated(e: QueryTerminatedEvent): Unit = {

@@ -114,7 +114,8 @@ object ConfigValidation {
 
   /** Aggregate-errors validation in the spirit of lapidus.js:51-86:
     * at least one backend; every backend kind must have a worker; every
-    * sink kind must resolve in the registry. */
+    * sink kind must resolve in the registry; a kafka backend reads one
+    * topic. */
   def validate(cfg: EngineConfig): Seq[String] = {
     val errs = Seq.newBuilder[String]
     if (cfg.backends.isEmpty)
@@ -142,6 +143,15 @@ object ConfigValidation {
       }
       if (src == "file" && !b.options.contains("path"))
         errs += s"${b.name}: file backend requires options.path"
+      // backend = topic downstream, and CdcStream.forBackend runs each
+      // query on one state partition: one topic per configured backend
+      if (src == "kafka" && (b.options.contains("subscribePattern") ||
+          b.options.contains("assign") ||
+          !b.options.get("subscribe").exists(t =>
+            t.trim.nonEmpty && !t.contains(","))))
+        errs += s"${b.name}: kafka backend requires options.subscribe " +
+          "naming exactly one topic (no subscribePattern or assign); " +
+          "configure one backend per topic"
     }
     errs.result()
   }

@@ -108,6 +108,41 @@ class GraphSweepSpec extends SparkSpec {
     assert(got == Map(1L -> 638750L, 2L -> 421468L, 3L -> 421468L))
   }
 
+  test("pagerank and labelProp: an edge whose src is not a node " +
+      "contributes in no round, round 1 included") {
+    // node 3 / node 0 are missing from nodes; round 2's score/label
+    // pickup join drops their edges, so round 1 must too
+    val nodes = Seq(1L, 2L).toDF("node")
+    val edges = Seq((1L, 2L), (3L, 2L)).toDF("src", "dst")
+    def ranks(iters: Int) = GraphOps.pagerank(nodes, edges, iters)
+      .as[(Long, Long)].collect().toMap
+    // i1: node 2 gets node 1's 1e6 → 1000000; node 1 gets nothing
+    //   → 150000. i2: node 2 gets 150000 → 150000 + 127500 = 277500.
+    assert(ranks(1) == Map(1L -> 150000L, 2L -> 1000000L))
+    assert(ranks(2) == Map(1L -> 150000L, 2L -> 277500L))
+    val und = Seq((1L, 2L), (2L, 1L), (0L, 2L)).toDF("src", "dst")
+    // node 2 hears label 1 only (a dangling 0 would win the tie)
+    val labels = GraphOps.labelProp(nodes, und, 1)
+      .as[(Long, Long)].collect().toMap
+    assert(labels == Map(1L -> 2L, 2L -> 1L))
+  }
+
+  test("pagerank and labelProp: the round-1 shortcut agrees with the " +
+      "join when every src is a node") {
+    val nodes = Seq(1L, 2L, 3L, 4L).toDF("node")
+    val edges = Seq((1L, 2L), (1L, 3L), (2L, 1L), (3L, 4L), (4L, 4L))
+      .toDF("src", "dst")
+    def ranks(closed: Boolean) = GraphOps.pagerank(nodes, edges, 3,
+      srcsInNodes = closed).as[(Long, Long)].collect().toMap
+    assert(ranks(closed = true) == ranks(closed = false))
+    val und = edges.filter($"src" =!= $"dst")
+      .unionAll(edges.filter($"src" =!= $"dst")
+        .select($"dst".as("src"), $"src".as("dst")))
+    def labels(closed: Boolean) = GraphOps.labelProp(nodes, und, 3,
+      srcsInNodes = closed).as[(Long, Long)].collect().toMap
+    assert(labels(closed = true) == labels(closed = false))
+  }
+
   test("pagerank: mass conservation bound — every score stays within " +
       "[teleport base, teleport + damped total] on the fixture graph") {
     val r = GraphOps.queries("q41_pagerank")(spark, sfDir)

@@ -175,6 +175,59 @@ class SinksSpec extends SparkSpec {
     assert(v0 == Set("1", "2"))
   }
 
+  test("snapshot merge runs on the previous version's scan partitions: " +
+      "several for a version split by maxPartitionBytes, one for a tiny " +
+      "one, each with one exchange") {
+    import java.nio.file.Files
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    // a foreachBatch session of a stateful stream: AQE off and the
+    // query's one state partition as the shuffle width. A session of its
+    // own, so the shared one's maxPartitionBytes is never touched.
+    val s = spark.newSession()
+    s.conf.set("spark.sql.shuffle.partitions", "1")
+    s.conf.set("spark.sql.adaptive.enabled", "false")
+    def env(ls: Seq[(Long, String)]) =
+      JsonCdc.decode(s.createDataFrame(ls).toDF("seq", "line"))
+    def ins(id: Int, v: String) =
+      s"""{"insert": {"id": $id, "v": "$v"}, "table": "t"}"""
+    def parts(dir: String, v: Int) =
+      new java.io.File(s"$dir/version=$v").listFiles()
+        .count(_.getName.endsWith(".parquet"))
+
+    val big = Files.createTempDirectory("graft-snap-wide").toString
+    val b0 = (0 until 3000).map(i => (i.toLong, ins(i, s"value-$i")))
+    val b1 = Seq((3000L, ins(7, "changed")),
+      (3001L, """{"delete": true, "@": {"id": 8}, "table": "t"}"""))
+    val sink = new SnapshotSink(big)
+    sink.write(env(b0), 0L)
+    assert(parts(big, 0) == 1)
+    val v0 = new java.io.File(s"$big/version=0").listFiles()
+      .filter(_.getName.endsWith(".parquet")).map(_.length).sum
+    s.conf.set("spark.sql.files.maxPartitionBytes", (v0 / 4).toString)
+    val width = s.read.parquet(s"$big/version=0").rdd.getNumPartitions
+    assert(width >= 4)
+    val merge = graft.cdc.SnapshotApply.advance(
+      s.read.parquet(s"$big/version=0"),
+      graft.cdc.SnapshotApply.normalize(env(b1)))
+    assert(merge.queryExecution.executedPlan
+      .collect { case e: ShuffleExchangeExec => e }.size == 1,
+      "the aggregate reuses the merge's partitioning")
+    sink.write(env(b1), 1L)
+    assert(parts(big, 1) == width, "one merge partition per scan partition")
+    val want = graft.cdc.SnapshotApply.snapshot(
+      graft.cdc.SnapshotApply.normalize(env(b0 ++ b1)))
+    val got = sink.current(s).select(want.columns.map(col).toIndexedSeq: _*)
+    assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty)
+
+    s.conf.unset("spark.sql.files.maxPartitionBytes")
+    val tiny = Files.createTempDirectory("graft-snap-narrow").toString
+    val small = new SnapshotSink(tiny)
+    small.write(env(Seq((0L, ins(1, "a")), (1L, ins(2, "b")))), 0L)
+    small.write(env(Seq((2L, ins(3, "c")), (3L, ins(4, "d")))), 1L)
+    assert(parts(tiny, 1) == 1)
+    assert(small.current(s).count() == 4)
+  }
+
   test("vacuum keeps the newest versions and never the torn ones") {
     import java.nio.file.Files
     val dir = Files.createTempDirectory("graft-vacuum").toString

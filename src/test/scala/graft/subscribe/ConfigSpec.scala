@@ -91,6 +91,18 @@ class ConfigSpec extends AnyFunSuite {
     }
   }
 
+  test("a kafka backend subscribes to exactly one topic") {
+    def errs(opts: Map[String, String]) = ConfigValidation.validate(
+      EngineConfig(Seq(BackendConfig("k", options =
+        opts + ("kafka.bootstrap.servers" -> "h:9092"),
+        source = "kafka", wire = "jsoncdc"))))
+    assert(errs(Map("subscribe" -> "cdc")).isEmpty)
+    for (bad <- Seq(Map("subscribe" -> "a,b"), Map("subscribe" -> " "),
+        Map("subscribePattern" -> "cdc.*"), Map("assign" -> "{}"),
+        Map.empty[String, String]))
+      assert(errs(bad).exists(_.contains("exactly one topic")), s"$bad")
+  }
+
   test("explicit wire field beats the legacy kafka options escape hatch") {
     val b = BackendConfig("b", "kafka",
       Map("wire" -> "oplog"))

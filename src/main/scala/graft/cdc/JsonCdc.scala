@@ -105,7 +105,7 @@ object JsonCdc {
     * or before it, in stream order (`seqCol`). Scale-safe two-level
     * prefix scan (PrefixCarry — bounded per-task windows, linear summary
     * resolution); the streaming path keeps the same semantics with keyed
-    * state (graft.streaming.TxAssembly). */
+    * state (graft.streaming.CdcPipeline). */
   def withTxId(df: DataFrame, seqCol: String = "seq",
                bucketSize: Long = 0): DataFrame =
     PrefixCarry.lastNonNull(df, "begin_id", "tx_id", seqCol,

@@ -25,11 +25,6 @@ case class CdcEvent(
 case class TxItem(seq: Long, kind: String, table: String, pk: String,
     item: String)
 
-/** Assembled transaction — the reference's `transaction` event
-  * `{items, id, ts}` (postgresql.js:18-33, 487-501). */
-case class TxEvent(backend: String, txId: Long,
-    commitTs: Option[java.sql.Timestamp], items: Seq[TxItem])
-
 /** Open-transaction buffer carried between microbatches.
   *
   * STATE-FORMAT NOTE: the newest-first representation below changed the

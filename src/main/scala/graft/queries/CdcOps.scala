@@ -35,17 +35,10 @@ object CdcOps {
     * accumulate sf-sized trees in /tmp. */
   private val fixtureLock = new Object
   private var fixturePaths = Map.empty[(String, String), String]
-  private def deleteRecursively(p: java.nio.file.Path): Unit = {
-    import scala.jdk.CollectionConverters._
-    if (java.nio.file.Files.exists(p)) {
-      java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
-        .foreach(f => java.nio.file.Files.deleteIfExists(f))
-    }
-  }
   sys.addShutdownHook {
     fixtureLock.synchronized {
       fixturePaths.values.foreach(p =>
-        try deleteRecursively(java.nio.file.Paths.get(p))
+        try graft.sinks.VersionedState.deleteRecursively(new java.io.File(p))
         catch { case _: Throwable => () })
     }
   }

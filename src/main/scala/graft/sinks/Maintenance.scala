@@ -73,10 +73,10 @@ object Maintenance {
       if (!base.exists()) {
         if (!c.renameTo(base))
           throw new java.io.IOException(s"cannot roll back $c to $base")
-      } else deleteRecursively(c)
+      } else VersionedState.deleteRecursively(c)
     }
     for (c <- children if c.getName.endsWith(".compacting"))
-      deleteRecursively(c)
+      VersionedState.deleteRecursively(c)
   }
 
   private def compactLeaf(spark: SparkSession, d: java.io.File,
@@ -92,30 +92,24 @@ object Maintenance {
     val tmp = new java.io.File(d.getParentFile, d.getName + ".compacting")
     spark.read.parquet(d.toString).repartition(nFiles)
       .write.mode("overwrite").parquet(tmp.toString)
-    // carry sidecar files (commit markers of the exactly-once/snapshot
-    // sinks) across the swap — losing a _COMMITTED would make a
-    // compacted batch invisible to committed()/current()
+    // carry sidecar files (VersionedState's commit markers) across the
+    // swap — losing a marker would make a compacted version invisible
+    // to committed()/current()
     Option(d.listFiles()).toSeq.flatten
       .filter(f => f.isFile && !f.getName.endsWith(".parquet")
         && !new java.io.File(tmp, f.getName).exists())
       .foreach(f => java.nio.file.Files.copy(f.toPath,
         new java.io.File(tmp, f.getName).toPath))
     val old = new java.io.File(d.getParentFile, d.getName + ".old")
-    deleteRecursively(old) // leftover from a previous crash-after-swap
+    // leftover from a previous crash-after-swap
+    VersionedState.deleteRecursively(old)
     if (!d.renameTo(old))
       throw new java.io.IOException(s"cannot swap out $d")
     if (!tmp.renameTo(d)) {
       old.renameTo(d) // roll back
       throw new java.io.IOException(s"cannot swap in $tmp")
     }
-    deleteRecursively(old)
+    VersionedState.deleteRecursively(old)
     (before.size, dataFiles(d).size)
-  }
-
-  private[sinks] def deleteRecursively(f: java.io.File): Unit = {
-    if (f.isDirectory)
-      Option(f.listFiles()).toSeq.flatten.foreach(deleteRecursively)
-    f.delete()
-    ()
   }
 }

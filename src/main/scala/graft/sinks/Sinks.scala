@@ -108,35 +108,24 @@ class ParquetSink(path: String, partitionBy: Seq[String] = Nil)
 /** Exactly-once warehouse landing. Structured Streaming's foreachBatch
   * is at-least-once with a STABLE batchId: a crash between the write and
   * the checkpoint commit re-delivers the same rows under the same id.
-  * Landing each batch in a `batch=<id>` directory sealed by a marker
-  * file makes the replay a no-op — marker present means the batch
-  * already landed, a half-written directory without its marker is
-  * invisible to readers and overwritten by the retry. This is the
-  * upgrade over the reference's at-least-once delivery
+  * Each batch lands as one [[VersionedState]] version (`batch=<id>`,
+  * marker-committed), which makes the replay a no-op and keeps a
+  * half-written batch invisible to readers until the retry overwrites
+  * it. This is the upgrade over the reference's at-least-once delivery
   * (reference README.md:53-55: restart replays from the slot) that its
-  * NATS consumers must otherwise implement by hand.
-  *
-  * Local-filesystem markers here; on an object store the same pattern
-  * rides the Hadoop FileSystem API (rename-commit or a manifest). */
+  * NATS consumers must otherwise implement by hand. Every batch is
+  * kept: the landed table is the union of all versions. */
 class IdempotentParquetSink(path: String) extends EventSink {
   val name = "parquet-exactly-once"
-  def write(batch: DataFrame, batchId: Long): Unit = {
-    val dir = new java.io.File(s"$path/batch=$batchId")
-    val marker = new java.io.File(dir, "_COMMITTED")
-    if (marker.exists()) return // replayed batch: already landed
-    batch.write.mode("overwrite").parquet(dir.toString)
-    marker.createNewFile()
-    ()
-  }
+  def write(batch: DataFrame, batchId: Long): Unit =
+    VersionedState.write(batch, path, batchId)
 }
 
 object IdempotentParquetSink {
   /** All COMMITTED batches as one frame (uncommitted dirs invisible). */
   def committed(spark: org.apache.spark.sql.SparkSession,
       path: String): DataFrame = {
-    val dirs = Option(new java.io.File(path).listFiles()).toSeq.flatten
-      .filter(d => d.isDirectory && new java.io.File(d, "_COMMITTED").exists())
-      .map(_.toString)
+    val dirs = VersionedState.versions(path).map(VersionedState.path(path, _))
     require(dirs.nonEmpty, s"no committed batches under $path")
     spark.read.parquet(dirs: _*)
   }
@@ -144,12 +133,13 @@ object IdempotentParquetSink {
 
 /** Materialized CURRENT-STATE table maintained from the change stream —
   * the reference's consumers rebuild this by hand from NATS events; here
-  * each microbatch advances a versioned snapshot
-  * (graft.cdc.SnapshotApply.advance) and commits it under
-  * `version=<batchId>` with a marker, so readers always see one complete
-  * version, a crash replay overwrites the torn version idempotently, and
-  * time travel across versions is free. Version dirs accrete; a real
-  * deployment vacuums old versions after a retention window.
+  * microbatch b reads [[VersionedState]] version b−1, advances it
+  * (graft.cdc.SnapshotApply.advance) and commits version b, so readers
+  * always see one complete version and a crash replay is a no-op. After
+  * each commit the versions older than b−1 are pruned: the previous
+  * version stays readable and disk holds two copies of the table. A
+  * batch-id gap (a checkpoint reset against an existing snapshot
+  * directory) fails instead of merging onto a stale version.
   *
   * Merge width: inside a stream with a stateful operator Spark turns
   * AQE off, and the microbatch's session carries the query's state
@@ -161,52 +151,23 @@ object IdempotentParquetSink {
 class SnapshotSink(path: String) extends EventSink {
   val name = "snapshot"
 
-  private def latestCommitted(): Option[java.io.File] =
-    Option(new java.io.File(path).listFiles()).toSeq.flatten
-      .filter(d => d.isDirectory &&
-        new java.io.File(d, "_COMMITTED").exists())
-      .sortBy(d => d.getName.stripPrefix("version=").toLong)
-      .lastOption
-
-  /** Latest committed snapshot version (empty-schema error if none). */
-  def current(spark: org.apache.spark.sql.SparkSession): DataFrame = {
-    val d = latestCommitted().getOrElse(
-      throw new IllegalStateException(s"no committed snapshot under $path"))
-    spark.read.parquet(d.toString)
-  }
+  /** Latest committed snapshot version. */
+  def current(spark: org.apache.spark.sql.SparkSession): DataFrame =
+    VersionedState.read(spark, path, VersionedState.versions(path).lastOption
+      .getOrElse(throw new IllegalStateException(
+        s"no committed snapshot under $path")))
 
   def write(batch: DataFrame, batchId: Long): Unit = {
-    val dir = new java.io.File(s"$path/version=$batchId")
-    val marker = new java.io.File(dir, "_COMMITTED")
-    if (marker.exists()) return // replayed batch: version already built
-    val spark = batch.sparkSession
-    val deltas = graft.cdc.SnapshotApply.normalize(batch)
-    val next = latestCommitted() match {
-      case Some(prev) => graft.cdc.SnapshotApply.advance(
-        spark.read.parquet(prev.toString), deltas)
-      case None => graft.cdc.SnapshotApply.snapshot(deltas)
-    }
-    next.write.mode("overwrite").parquet(dir.toString)
-    marker.createNewFile()
-    ()
+    VersionedState.write(next(batch, batchId), path, batchId)
+    VersionedState.prune(path, batchId)
   }
 
-  /** Retention: delete all committed versions except the newest
-    * `keepLast`. Never touches uncommitted (in-flight) version dirs —
-    * a concurrent writer's torn directory is its own to overwrite. */
-  def vacuum(keepLast: Int = 1): Seq[String] = {
-    require(keepLast >= 1, "must keep at least the current version")
-    val committed = Option(new java.io.File(path).listFiles()).toSeq.flatten
-      .filter(d => d.isDirectory &&
-        new java.io.File(d, "_COMMITTED").exists())
-      .sortBy(_.getName.stripPrefix("version=").toLong)
-    committed.dropRight(keepLast).map { d =>
-      // recursive: a crashed write can leave nested dirs (_temporary)
-      // that a flat listFiles().delete() would silently fail to remove,
-      // leaving an unreclaimed, no-longer-committed directory behind
-      Maintenance.deleteRecursively(d)
-      d.getName
-    }
+  private def next(batch: DataFrame, batchId: Long): DataFrame = {
+    VersionedState.requireLineage(path, batchId, "snapshot")
+    val deltas = graft.cdc.SnapshotApply.normalize(batch)
+    if (batchId == 0) graft.cdc.SnapshotApply.snapshot(deltas)
+    else graft.cdc.SnapshotApply.advance(
+      VersionedState.read(batch.sparkSession, path, batchId - 1), deltas)
   }
 }
 

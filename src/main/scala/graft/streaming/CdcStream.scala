@@ -27,7 +27,7 @@ object CdcStream {
 
   /** File-based LDJSON capture directory → raw line stream. The
     * per-trigger file cap is the memory bound for the in-microbatch
-    * sorts downstream (CdcPipeline/TxAssembly) — a backlogged directory
+    * sort downstream (CdcPipeline) — a backlogged directory
     * must arrive in capped batches, not as one giant first batch. */
   def fileLines(spark: SparkSession, path: String,
       maxFilesPerTrigger: Int = 16): DataFrame =

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructField, StructType}
+import graft.sinks.VersionedState
 
 /** Streaming IVM OF A JOIN VIEW — the continuous face of cdc10: the
   * bilinear delta rule Δ(A⋈B) = ΔA⋈B₀ ∪ A₀⋈ΔB ∪ ΔA⋈ΔB applied per
@@ -13,7 +14,7 @@ import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructFiel
   * two capture topics union into one frame exactly like this).
   *
   * State, versioned by batch id (IvmStream's re-delivery-idempotent
-  * read-b−1/write-b contract via [[VersionedState]]):
+  * read-b−1/write-b contract via [[graft.sinks.VersionedState]]):
   *   - `view`  (nat, st, n)  — the maintained aggregate;
   *   - `azset` (ck, st, m)   — A's accumulated Z-set (net row
   *     multiplicities), the B₀-side join input;

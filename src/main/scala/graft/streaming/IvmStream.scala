@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+import graft.sinks.VersionedState
 
 /** Streaming INCREMENTAL VIEW MAINTENANCE — the continuous face of
   * cdc8: a per-status count aggregate maintained across microbatches
@@ -17,13 +18,11 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
   * batch; an event's predecessor is the in-batch lag where the batch
   * has one, else the state lookup (the exact seam the slice cut).
   *
-  * Both tables are VERSIONED BY BATCH ID (`.../b=<id>`), written to a
-  * temp dir and renamed: processing batch b reads version b−1 and
-  * writes version b, so a re-delivered batch recomputes from the same
-  * input and predecessor state and lands the same bytes — idempotent,
-  * the foreachBatch crash contract. On a cluster filesystem without
-  * atomic rename, land versions with the marker-committed pattern of
-  * graft.sinks (parquet-exactly-once).
+  * Both tables are VERSIONED BY BATCH ID ([[graft.sinks.VersionedState]]:
+  * marker-committed `batch=<id>` directories): processing batch b reads
+  * version b−1 and writes version b, so a re-delivered batch finds its
+  * versions committed and changes nothing — the foreachBatch crash
+  * contract.
   *
   * Scale: per batch, one bounded lag window over the batch's own rows,
   * one equi-join against state on pk (bucket the state table on pk via
@@ -36,14 +35,6 @@ object IvmStream {
     StructField("status", StringType), StructField("n", LongType)))
   private val lastSchema = StructType(Seq(
     StructField("pk", LongType), StructField("status", StringType)))
-
-  private def readVersion(spark: SparkSession, dir: String, batchId: Long,
-      schema: StructType): DataFrame =
-    VersionedState.read(spark, dir, batchId, schema)
-
-  private def writeVersion(df: DataFrame, dir: String,
-      batchId: Long): Unit =
-    VersionedState.write(df, dir, batchId)
 
   /** Current maintained counts (after the latest committed batch). */
   def counts(spark: SparkSession, stateDir: String): DataFrame =
@@ -61,7 +52,7 @@ object IvmStream {
     // in_state marks "this pk exists in carried state" explicitly:
     // state_status.isNotNull can't — NULL is a legitimate last status
     // (statusDeltas' contract), and its −1 must still land on it
-    val prevLast = readVersion(spark, s"$stateDir/last", batchId - 1,
+    val prevLast = VersionedState.read(spark, s"$stateDir/last", batchId - 1,
       lastSchema).withColumnRenamed("status", "state_status")
       .withColumn("in_state", lit(true))
     val ev = batch
@@ -85,7 +76,7 @@ object IvmStream {
         "a snapshot (cdc5) before attaching")
     val deltas = graft.queries.CdcOps.statusDeltas(ev)
       .withColumnRenamed("delta", "n")
-    val newCounts = readVersion(spark, s"$stateDir/counts", batchId - 1,
+    val newCounts = VersionedState.read(spark, s"$stateDir/counts", batchId - 1,
         countsSchema)
       .unionByName(deltas)
       .groupBy("status").agg(sum(col("n")).as("n"))
@@ -101,8 +92,8 @@ object IvmStream {
       .select(col("pk"), col("state_status").as("status"))
       .unionByName(lastInBatch.filter(col("kind") =!= "delete")
         .select("pk", "status"))
-    writeVersion(newCounts, s"$stateDir/counts", batchId)
-    writeVersion(newLast, s"$stateDir/last", batchId)
+    VersionedState.write(newCounts, s"$stateDir/counts", batchId)
+    VersionedState.write(newLast, s"$stateDir/last", batchId)
     Seq("counts", "last").foreach(t =>
       VersionedState.prune(s"$stateDir/$t", batchId))
   }

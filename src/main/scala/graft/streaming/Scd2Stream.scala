@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{IntegerType, LongType, StringType,
   StructField, StructType}
+import graft.sinks.VersionedState
 
 /** Streaming SCD2 maintenance — the continuous face of cdc9: a
   * [valid_from, valid_to) dimension table advanced per microbatch by
@@ -12,9 +13,10 @@ import org.apache.spark.sql.types.{IntegerType, LongType, StringType,
   *
   * Per batch: read table version b−1, merge the batch's normalized
   * (pk, seq, kind, rev, status) events, write version b — the
-  * versioned-state crash contract of IvmStream (re-delivered batches
-  * land identical bytes; batch-id gaps fail loudly instead of
-  * silently restarting history from empty).
+  * versioned-state crash contract of IvmStream
+  * ([[graft.sinks.VersionedState]]: a re-delivered batch is a no-op;
+  * batch-id gaps fail loudly instead of silently restarting history
+  * from empty).
   *
   * Transport contract (same as the batch operator's): per-key event
   * order is non-decreasing across batches — every batch seq for a key

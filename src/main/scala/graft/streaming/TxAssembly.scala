@@ -2,65 +2,15 @@ package graft.streaming
 
 import org.apache.spark.sql.{Dataset, Encoders}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-import graft.cdc.{CdcEvent, TxEvent, TxItem, TxState}
+import graft.cdc.CdcEvent
 
-/** Stateful CDC transaction assembly — the reference's
+/** The decode step in front of transaction assembly: raw capture lines
+  * to typed change events. The assembly itself — the reference's
   * DatabaseTransaction buffer (postgresql.js:18-33, begin 447-450,
-  * push 427-429/482-484, commit-emit 462-465) as
-  * `flatMapGroupsWithState`.
-  *
-  * Key = backend: a CDC stream is serial per backend (the reference runs
-  * one single-threaded worker per backend), so per-backend grouping
-  * preserves the reference's total order while different backends
-  * assemble in parallel. Within a microbatch the iterator is sorted by
-  * `seq` (source offset); open transactions are carried across batches in
-  * the group state — the upgrade over the reference's acknowledged-naive
-  * in-memory buffer (postgresql.js:14-17) is that state is
-  * checkpoint-backed and survives restart.
+  * push 427-429/482-484, commit-emit 462-465) — is one of the concerns
+  * of the keyed stateful operator in [[CdcPipeline]].
   */
 object TxAssembly {
-
-  def assembleGroup(
-      backend: String,
-      rows: Iterator[CdcEvent],
-      state: GroupState[TxState]): Iterator[TxEvent] = {
-    val sorted = rows.toArray
-    java.util.Arrays.sort(sorted,
-      java.util.Comparator.comparingLong[CdcEvent](_.seq))
-    var st = state.getOption.getOrElse(TxState(None, Nil))
-    val out = Seq.newBuilder[TxEvent]
-    sorted.foreach { e =>
-      e.kind match {
-        case "beginTransaction" =>
-          st = TxState(e.beginId, Nil)
-        case "commitTransaction" =>
-          // reference asserts commit id == current tx id (postgresql.js:463)
-          if (st.currentTxId.isDefined && e.commitId == st.currentTxId) {
-            out += TxEvent(backend, st.currentTxId.get, e.commitTs,
-              st.buffered.reverse) // stored newest-first, emit in order
-          }
-          st = TxState(None, Nil)
-        case "insert" | "update" | "delete" =>
-          if (st.currentTxId.isDefined) {
-            st = st.copy(buffered =
-              TxItem(e.seq, e.kind, e.table, e.pk, e.item) +: st.buffered)
-          }
-        case _ => // schema / unknown: no tx effect
-      }
-    }
-    if (st.currentTxId.isDefined) state.update(st) else state.remove()
-    out.result().iterator
-  }
-
-  /** Streaming (or batch) Dataset[CdcEvent] → Dataset[TxEvent]. */
-  def assemble(events: Dataset[CdcEvent]): Dataset[TxEvent] = {
-    implicit val txEnc = Encoders.product[TxEvent]
-    implicit val stEnc = Encoders.product[TxState]
-    events.groupByKey(_.backend)(Encoders.STRING)
-      .flatMapGroupsWithState(OutputMode.Append(),
-        GroupStateTimeout.NoTimeout())(assembleGroup)
-  }
 
   /** Decode a raw line frame (backend, seq, line) into Dataset[CdcEvent],
     * applying the pg_temp/excludeTables filters BEFORE any stateful op —

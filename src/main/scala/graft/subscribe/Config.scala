@@ -107,6 +107,9 @@ object ConfigValidation {
   val supportedSinks: Set[String] =
     Set("console", "collect", "subject-routing", "parquet",
       "parquet-exactly-once", "snapshot")
+  /** Sinks that land files under `options.path`. */
+  private val pathSinks: Set[String] =
+    Set("parquet", "parquet-exactly-once", "snapshot")
   /** Envelope kinds a sink may subscribe to (SinkConfig.kinds). */
   val supportedKinds: Set[String] = Set(
     "insert", "update", "delete", "schema", "beginTransaction",
@@ -114,8 +117,8 @@ object ConfigValidation {
 
   /** Aggregate-errors validation in the spirit of lapidus.js:51-86:
     * at least one backend; every backend kind must have a worker; every
-    * sink kind must resolve in the registry; a kafka backend reads one
-    * topic. */
+    * sink kind must resolve in the registry, and a file-landing sink
+    * names its path; a kafka backend reads one topic. */
   def validate(cfg: EngineConfig): Seq[String] = {
     val errs = Seq.newBuilder[String]
     if (cfg.backends.isEmpty)
@@ -140,6 +143,9 @@ object ConfigValidation {
         s.kinds.filterNot(supportedKinds.contains).foreach { k =>
           errs += s"${b.name}: invalid event kind for plugin ${s.kind}: $k"
         }
+        if (pathSinks.contains(s.kind) &&
+            !s.options.get("path").exists(_.trim.nonEmpty))
+          errs += s"${b.name}: ${s.kind} sink requires options.path"
       }
       if (src == "file" && !b.options.contains("path"))
         errs += s"${b.name}: file backend requires options.path"

@@ -159,8 +159,8 @@ class StreamAuditSpec extends SparkSpec {
       // swept with the same discipline as the S surface
       "cdc_tx_assembly" -> (() => {
         implicit val sqlCtx = spark.sqlContext
-        graft.streaming.TxAssembly.assemble(
-          MemoryStream[graft.cdc.CdcEvent].toDS()).toDF()
+        graft.streaming.CdcPipeline.run(
+          MemoryStream[graft.cdc.CdcEvent].toDS(), emitTransaction = true)
       }),
       "cdc_binlog_carry" -> (() => {
         implicit val sqlCtx = spark.sqlContext

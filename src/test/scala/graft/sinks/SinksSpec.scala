@@ -169,8 +169,8 @@ class SinksSpec extends SparkSpec {
       .select("pk", "item").as[(String, String)].collect().toMap
     assert(cur.keySet == Set("1"), "id 2 was deleted")
     assert(cur("1").contains("a2"), "id 1 carries the updated image")
-    // time travel: version=0 still holds the pre-update state
-    val v0 = spark.read.parquet(s"$dir/version=0")
+    // time travel: batch=0 still holds the pre-update state
+    val v0 = spark.read.parquet(s"$dir/batch=0")
       .select("pk").as[String].collect().toSet
     assert(v0 == Set("1", "2"))
   }
@@ -191,7 +191,7 @@ class SinksSpec extends SparkSpec {
     def ins(id: Int, v: String) =
       s"""{"insert": {"id": $id, "v": "$v"}, "table": "t"}"""
     def parts(dir: String, v: Int) =
-      new java.io.File(s"$dir/version=$v").listFiles()
+      new java.io.File(s"$dir/batch=$v").listFiles()
         .count(_.getName.endsWith(".parquet"))
 
     val big = Files.createTempDirectory("graft-snap-wide").toString
@@ -201,13 +201,13 @@ class SinksSpec extends SparkSpec {
     val sink = new SnapshotSink(big)
     sink.write(env(b0), 0L)
     assert(parts(big, 0) == 1)
-    val v0 = new java.io.File(s"$big/version=0").listFiles()
+    val v0 = new java.io.File(s"$big/batch=0").listFiles()
       .filter(_.getName.endsWith(".parquet")).map(_.length).sum
     s.conf.set("spark.sql.files.maxPartitionBytes", (v0 / 4).toString)
-    val width = s.read.parquet(s"$big/version=0").rdd.getNumPartitions
+    val width = s.read.parquet(s"$big/batch=0").rdd.getNumPartitions
     assert(width >= 4)
     val merge = graft.cdc.SnapshotApply.advance(
-      s.read.parquet(s"$big/version=0"),
+      s.read.parquet(s"$big/batch=0"),
       graft.cdc.SnapshotApply.normalize(env(b1)))
     assert(merge.queryExecution.executedPlan
       .collect { case e: ShuffleExchangeExec => e }.size == 1,
@@ -228,19 +228,72 @@ class SinksSpec extends SparkSpec {
     assert(small.current(s).count() == 4)
   }
 
-  test("vacuum keeps the newest versions and never the torn ones") {
+  test("snapshot retention: after 5 writes only batch=3 and batch=4 remain") {
     import java.nio.file.Files
-    val dir = Files.createTempDirectory("graft-vacuum").toString
+    val dir = Files.createTempDirectory("graft-snap-retain").toString
     val sink = new SnapshotSink(dir)
     def env(ls: Seq[(Long, String)]) =
       JsonCdc.decode(ls.toDF("seq", "line"))
-    for (b <- 0 until 4)
+    for (b <- 0 until 5)
       sink.write(env(Seq((b.toLong,
         s"""{"insert": {"id": $b, "v": "x"}, "table": "t"}"""))), b.toLong)
-    val dropped = sink.vacuum(keepLast = 2)
-    assert(dropped == Seq("version=0", "version=1"))
-    assert(sink.current(spark).count() == 4,
-      "latest version still holds all 4 accumulated rows")
+    assert(new java.io.File(dir).list().sorted.toSeq ==
+      Seq("batch=3", "batch=4"))
+    def pks(df: org.apache.spark.sql.DataFrame) =
+      df.select("pk").as[String].collect().toSet
+    assert(pks(sink.current(spark)) == (0 until 5).map(_.toString).toSet,
+      "the latest version holds all 5 accumulated rows")
+    assert(pks(VersionedState.read(spark, dir, 3)) ==
+      (0 until 4).map(_.toString).toSet, "the previous version stays readable")
+  }
+
+  test("snapshot sink: a torn version is invisible to current and its " +
+      "replay overwrites it") {
+    import java.nio.file.Files
+    val dir = Files.createTempDirectory("graft-snap-torn").toString
+    val sink = new SnapshotSink(dir)
+    def env(ls: Seq[(Long, String)]) =
+      JsonCdc.decode(ls.toDF("seq", "line"))
+    def pks = sink.current(spark).select("pk").as[String].collect().toSet
+    val b1 = env(Seq((1L, """{"insert": {"id": 2, "v": "b"}, "table": "t"}""")))
+    sink.write(env(Seq(
+      (0L, """{"insert": {"id": 1, "v": "a"}, "table": "t"}"""))), 0L)
+    // a crash after the parquet landed, before the commit marker: the
+    // directory holds rows no committed version produced
+    graft.cdc.SnapshotApply.snapshot(graft.cdc.SnapshotApply.normalize(env(
+      Seq((9L, """{"insert": {"id": 99, "v": "z"}, "table": "t"}""")))))
+      .write.parquet(s"$dir/batch=1")
+    assert(pks == Set("1"))
+    sink.write(b1, 1L) // the replay of batch 1
+    assert(pks == Set("1", "2"))
+  }
+
+  test("snapshot sink: a batch-id gap fails with the lineage message") {
+    import java.nio.file.Files
+    val dir = Files.createTempDirectory("graft-snap-gap").toString
+    val e = intercept[IllegalArgumentException] {
+      new SnapshotSink(dir).write(JsonCdc.decode(Seq(
+        (0L, """{"insert": {"id": 1, "v": "a"}, "table": "t"}"""))
+        .toDF("seq", "line")), 3L)
+    }
+    assert(e.getMessage.contains("batch=2 missing") &&
+      e.getMessage.contains("checkpoint reset"), e.getMessage)
+    assert(new java.io.File(dir).list().isEmpty, "nothing landed")
+  }
+
+  test("commit markers are named in VersionedState only") {
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    val root = Paths.get("src/main/scala")
+    assert(Files.isDirectory(root),
+      s"$root not found from ${System.getProperty("user.dir")}")
+    val marker = "_COMMITTED"
+    val naming = Files.walk(root).iterator().asScala
+      .filter(p => p.toString.endsWith(".scala") &&
+        new String(Files.readAllBytes(p), "UTF-8").contains(marker))
+      .map(_.toString).toSeq
+    assert(naming == Seq("src/main/scala/graft/sinks/VersionedState.scala"),
+      s"commit marker named outside the versioned-state module: $naming")
   }
 
   test("compaction rewrites many small files into few, same data") {

@@ -66,9 +66,9 @@ class IvmStreamSpec extends SparkSpec {
       ev.filter(col("seq") > third && col("seq") <= 2 * third), 1, dir)
     IvmStream.processBatch(ev.filter(col("seq") > 2 * third), 2, dir)
     val versions = new java.io.File(s"$dir/counts").listFiles()
-      .filter(_.getName.startsWith("b=")).map(_.getName).sorted
-    assert(versions.toSeq == Seq("b=1", "b=2"),
-      s"expected only b=1 and b=2 to survive, got ${versions.toSeq}")
+      .filter(_.getName.startsWith("batch=")).map(_.getName).sorted
+    assert(versions.toSeq == Seq("batch=1", "batch=2"),
+      s"expected only batch=1 and batch=2 to survive, got ${versions.toSeq}")
   }
 
   test("a re-delivered batch recomputes the same state (idempotent)") {

@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import graft.SparkSpec
 import graft.cdc.JsonCdc
 import graft.queries.CdcOps
+import graft.sinks.VersionedState
 
 /** The streaming SCD2 loop must equal the full rebuild on any slicing
   * of the same (per-key-ordered) stream, and keep the versioned-state

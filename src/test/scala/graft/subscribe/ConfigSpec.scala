@@ -75,6 +75,19 @@ class ConfigSpec extends AnyFunSuite {
     }
   }
 
+  test("a file-landing sink requires options.path") {
+    def errs(sink: SinkConfig) = ConfigValidation.validate(EngineConfig(Seq(
+      BackendConfig("b", kind = "file-ldjson", options = Map("path" -> "/x"),
+        sinks = Seq(sink)))))
+    for (kind <- Seq("parquet", "parquet-exactly-once", "snapshot")) {
+      assert(errs(SinkConfig(kind, Map("path" -> "/out"))).isEmpty, kind)
+      for (opts <- Seq(Map.empty[String, String], Map("path" -> " ")))
+        assert(errs(SinkConfig(kind, opts)) ==
+          Seq(s"b: $kind sink requires options.path"), s"$kind $opts")
+    }
+    assert(errs(SinkConfig("console")).isEmpty)
+  }
+
   test("full source × wire matrix validates — any wire on any transport") {
     for {
       src <- Seq("file", "kafka")

@@ -2,6 +2,7 @@ package graft.cdc
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** CDC bootstrap: materialize a snapshot from a change-stream replay,
   * then ADVANCE it with later deltas — the backfill → streaming handoff
@@ -17,9 +18,11 @@ import org.apache.spark.sql.functions._
   * proportional to |snapshot| + |delta|. `snapshot` combines map-side
   * before its shuffle; `advance` hash-partitions its input by
   * (table, pk) first, so every snapshot and delta row crosses the
-  * shuffle uncombined (the snapshot's rows are one per key anyway). At
-  * very large snapshot sizes, bucket both sides by (table, pk-hash) on
-  * disk so the merge shuffles only the delta.
+  * shuffle uncombined (the snapshot's rows are one per key anyway). A
+  * caller that maintains a large table need not run `advance` per
+  * batch: `graft.sinks.SnapshotSink` lands each batch's `normalize`d
+  * deltas as they are and runs `advance` over base + deltas on read and
+  * when it compacts, so its per-batch write follows the delta.
   *
   * Handoff contract: `snapshot(lines ≤ S)` then
   * `advance(snap, decode(lines > S))` equals `snapshot(all lines)` for
@@ -28,6 +31,17 @@ import org.apache.spark.sql.functions._
   * filter or Kafka starting offsets) with a fresh checkpoint.
   */
 object SnapshotApply {
+
+  /** Columns of `normalize`'s output, the change feed. */
+  val changeSchema: StructType = StructType(Seq(
+    StructField("table", StringType), StructField("pk", StringType),
+    StructField("kind", StringType), StructField("item", StringType),
+    StructField("seq", LongType)))
+
+  /** Columns of `snapshot`'s and `advance`'s output. */
+  val snapshotSchema: StructType = StructType(Seq(
+    StructField("table", StringType), StructField("pk", StringType),
+    StructField("item", StringType), StructField("as_of_seq", LongType)))
 
   /** Normalized change feed: (table, pk, kind, item, seq).
     *

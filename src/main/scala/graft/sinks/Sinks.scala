@@ -3,9 +3,10 @@ package graft.sinks
 import java.util.concurrent.ConcurrentLinkedQueue
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.network.util.JavaUtils
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.cdc.JsonCdc
+import graft.cdc.{JsonCdc, SnapshotApply}
 import graft.subscribe.SinkConfig
 
 /** Sink ("plugin") layer — the reference's fan-out/dispatch + plugin
@@ -132,43 +133,111 @@ object IdempotentParquetSink {
 }
 
 /** Materialized CURRENT-STATE table maintained from the change stream —
-  * the reference's consumers rebuild this by hand from NATS events; here
-  * microbatch b reads [[VersionedState]] version b−1, advances it
-  * (graft.cdc.SnapshotApply.advance) and commits version b, so readers
-  * always see one complete version and a crash replay is a no-op. After
-  * each commit the versions older than b−1 are pruned: the previous
-  * version stays readable and disk holds two copies of the table. A
-  * batch-id gap (a checkpoint reset against an existing snapshot
-  * directory) fails instead of merging onto a stale version.
+  * the reference's consumers rebuild this by hand from NATS events.
+  * Merge-on-read, after the log-structured merge (O'Neil et al., 1996):
+  * each microbatch lands only its changes and readers merge, so a
+  * trigger's write follows its delta, not the table.
+  *
+  *   - Versions: batch b is one [[VersionedState]] version. Batch 0 is
+  *     a base, `SnapshotApply.snapshot` of its changes. A later batch is
+  *     a delta, its `SnapshotApply.normalize`d changes as they are,
+  *     tagged `_DELTA` before its commit marker. An untagged version is
+  *     a base, so a directory of whole versions reads as bases.
+  *   - Reads: version v is the latest base k ≤ v advanced by the deltas
+  *     in (k, v], `SnapshotApply.advance(base, union(deltas))`. That is
+  *     the bootstrap handoff `CdcBootstrapSpec` pins, so the read equals
+  *     a full rewrite. A version with no deltas is a plain base read.
+  *     `current` reads the latest version, `version` a retained older
+  *     one.
+  *   - Compaction: batch b writes a new base, the same merge over the
+  *     live deltas and its own changes, instead of a delta when the
+  *     deltas version b−1 reads number `MaxDeltas`, or when their bytes
+  *     pass both the base's and one file-scan partition
+  *     (`spark.sql.files.maxPartitionBytes`). Below that size a reader's
+  *     merge adds less than one task's input, so compacting sooner buys
+  *     readers nothing and costs the daemon a full-table job. The rule
+  *     reads committed versions only, so the replay of a torn version
+  *     may decide either way and is correct both ways. A small table
+  *     pays a full-table merge on one trigger in `MaxDeltas` + 1, a
+  *     large one when its deltas outgrow its base.
+  *   - Retention: after batch b, every version older than the base that
+  *     b−1 reads is pruned. Versions b−1 and b stay readable, and disk
+  *     holds at most two bases and `MaxDeltas` deltas.
+  *   - A committed replay is a no-op, a torn version is overwritten, and
+  *     a batch-id gap (a checkpoint reset against an existing snapshot
+  *     directory) fails instead of merging onto a stale version.
   *
   * Merge width: inside a stream with a stateful operator Spark turns
   * AQE off, and the microbatch's session carries the query's state
   * partition count as its shuffle width (1 for a `CdcStream.forBackend`
   * query, see there), so a plain aggregate would merge a snapshot of
   * any size on that many tasks. `SnapshotApply.advance` instead merges
-  * on the previous version's file-scan partition count (at least 1):
-  * one task for a small table, more as it grows. */
+  * on the base's file-scan partition count (at least 1): one task for a
+  * small table, more as it grows. Reads and compactions both merge so. */
 class SnapshotSink(path: String) extends EventSink {
+  import SnapshotSink._
   val name = "snapshot"
 
   /** Latest committed snapshot version. */
-  def current(spark: org.apache.spark.sql.SparkSession): DataFrame =
-    VersionedState.read(spark, path, VersionedState.versions(path).lastOption
+  def current(spark: SparkSession): DataFrame =
+    version(spark, VersionedState.versions(path).lastOption
       .getOrElse(throw new IllegalStateException(
         s"no committed snapshot under $path")))
 
-  def write(batch: DataFrame, batchId: Long): Unit = {
-    VersionedState.write(next(batch, batchId), path, batchId)
-    VersionedState.prune(path, batchId)
+  /** Committed snapshot version `batchId`, while it is retained. */
+  def version(spark: SparkSession, batchId: Long): DataFrame = {
+    val (base, deltas) = layout(batchId)
+    merged(spark, base, deltas, None)
   }
 
-  private def next(batch: DataFrame, batchId: Long): DataFrame = {
+  def write(batch: DataFrame, batchId: Long): Unit = {
     VersionedState.requireLineage(path, batchId, "snapshot")
-    val deltas = graft.cdc.SnapshotApply.normalize(batch)
-    if (batchId == 0) graft.cdc.SnapshotApply.snapshot(deltas)
-    else graft.cdc.SnapshotApply.advance(
-      VersionedState.read(batch.sparkSession, path, batchId - 1), deltas)
+    val changes = SnapshotApply.normalize(batch)
+    if (batchId == 0)
+      VersionedState.write(SnapshotApply.snapshot(changes), path, batchId)
+    else {
+      val spark = batch.sparkSession
+      val (base, live) = layout(batchId - 1)
+      if (compacts(spark, base, live))
+        VersionedState.write(merged(spark, base, live, Some(changes)),
+          path, batchId)
+      else VersionedState.write(changes, path, batchId, Some(DeltaTag))
+      VersionedState.prune(path, base)
+    }
   }
+
+  /** The latest base at or below `batchId` and the deltas after it. */
+  private def layout(batchId: Long): (Long, Seq[Long]) = {
+    val base = VersionedState.versions(path).filter(_ <= batchId)
+      .findLast(!VersionedState.tagged(path, _, DeltaTag))
+      .getOrElse(throw new IllegalStateException(
+        s"snapshot version batch=$batchId is not retained under $path"))
+    (base, base + 1 to batchId)
+  }
+
+  /** Base `base` advanced by the committed `deltas` and `changes`. */
+  private def merged(spark: SparkSession, base: Long, deltas: Seq[Long],
+      changes: Option[DataFrame]): DataFrame = {
+    val snap = VersionedState.read(spark, path, base,
+      SnapshotApply.snapshotSchema)
+    (Option.when(deltas.nonEmpty)(VersionedState.read(spark, path, deltas,
+      SnapshotApply.changeSchema)) ++ changes).reduceOption(_ unionByName _)
+      .fold(snap)(SnapshotApply.advance(snap, _))
+  }
+
+  private def compacts(spark: SparkSession, base: Long,
+      live: Seq[Long]): Boolean = live.size >= MaxDeltas || {
+    val bytes = live.map(VersionedState.bytes(path, _)).sum
+    bytes > VersionedState.bytes(path, base) &&
+      bytes > JavaUtils.byteStringAsBytes(
+        spark.conf.get("spark.sql.files.maxPartitionBytes"))
+  }
+}
+
+object SnapshotSink {
+  /** Most deltas a version read merges onto its base. */
+  val MaxDeltas = 16
+  private val DeltaTag = "_DELTA"
 }
 
 /** O20 — plugin registry: resolve a SinkConfig to an implementation. */

@@ -22,9 +22,16 @@ import org.apache.spark.sql.types.StructType
   *     no-op); an unmarked, torn directory is overwritten.
   *   - Visibility: `read`, `latest` and `versions` see committed
   *     versions only.
-  *   - Retention: `prune(b)` deletes every version at or below b−2,
-  *     committed or torn. Processing batch b reads only b−1, so a replay
-  *     of b still finds its input, and disk holds two versions.
+  *   - Tags: a version may carry a tag, an empty file written after
+  *     its parquet and before its marker, so a committed version always
+  *     has its tag and a torn one counts for nothing. The snapshot sink
+  *     tags its delta versions this way (see `SnapshotSink`).
+  *   - Retention: `prune(oldest)` deletes every version below `oldest`,
+  *     committed or torn; the caller names the oldest version that
+  *     versions b−1 and b still read. The state loops, whose every
+  *     version is a whole table, pass b−1: a replay of b still finds its
+  *     input, and disk holds two versions. The snapshot sink passes the
+  *     base that b−1 reads. The exactly-once sink keeps every version.
   *   - Lineage: processing batch b > 0 requires a committed b−1. A
   *     missing predecessor means a checkpoint reset (or a layout this
   *     protocol does not read) against existing state; continuing from
@@ -54,35 +61,50 @@ private[graft] object VersionedState {
     path(dir, batchId)
   }
 
-  /** Committed version `batchId`. */
-  def read(spark: SparkSession, dir: String, batchId: Long): DataFrame =
-    spark.read.parquet(committedPath(dir, batchId))
-
   /** Committed version `batchId` under a fixed schema; the empty table
     * before the first batch (`batchId` < 0). */
   def read(spark: SparkSession, dir: String, batchId: Long,
       schema: StructType): DataFrame =
     if (batchId < 0)
       spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
-    else spark.read.schema(schema).parquet(committedPath(dir, batchId))
+    else read(spark, dir, Seq(batchId), schema)
+
+  /** Committed versions `batchIds` as one scan under a fixed schema. */
+  def read(spark: SparkSession, dir: String, batchIds: Seq[Long],
+      schema: StructType): DataFrame =
+    spark.read.schema(schema).parquet(batchIds.map(committedPath(dir, _)): _*)
 
   /** Latest committed version, or an empty frame before any commit. */
   def latest(spark: SparkSession, dir: String,
       schema: StructType): DataFrame =
     read(spark, dir, versions(dir).lastOption.getOrElse(-1L), schema)
 
-  /** Land `df` as version `batchId` and commit it. `df` is built only
-    * when the version is not committed yet. */
-  def write(df: => DataFrame, dir: String, batchId: Long): Unit =
+  /** Land `df` as version `batchId`, tag it with `tag` if given, and
+    * commit it. `df` is built only when the version is not committed
+    * yet. A tag is a file name Spark's reader skips (leading `_`). */
+  def write(df: => DataFrame, dir: String, batchId: Long,
+      tag: Option[String] = None): Unit =
     if (!committed(dir, batchId)) {
       df.write.mode("overwrite").parquet(path(dir, batchId))
+      tag.foreach(t => new File(path(dir, batchId), t).createNewFile())
       new File(path(dir, batchId), Marker).createNewFile()
       ()
     }
 
-  /** Drop every version ≤ batchId − 2, committed or torn. */
-  def prune(dir: String, batchId: Long): Unit =
-    listed(dir).filter(_ <= batchId - 2).foreach(v =>
+  /** Whether committed version `batchId` carries `tag`. */
+  def tagged(dir: String, batchId: Long, tag: String): Boolean =
+    new File(committedPath(dir, batchId), tag).exists()
+
+  /** Bytes of committed version `batchId`'s data files. */
+  def bytes(dir: String, batchId: Long): Long =
+    Option(new File(committedPath(dir, batchId)).listFiles()).toSeq.flatten
+      .filter(f => f.isFile && !f.getName.startsWith("_") &&
+        !f.getName.startsWith("."))
+      .map(_.length).sum
+
+  /** Drop every version below `oldest`, committed or torn. */
+  def prune(dir: String, oldest: Long): Unit =
+    listed(dir).filter(_ < oldest).foreach(v =>
       deleteRecursively(new File(path(dir, v))))
 
   def requireLineage(dir: String, batchId: Long, what: String): Unit =

@@ -148,7 +148,7 @@ object IvmJoinStream {
     VersionedState.write(newALast, s"$stateDir/alast", batchId)
     VersionedState.write(newBLast, s"$stateDir/blast", batchId)
     Seq("view", "azset", "bzset", "alast", "blast").foreach(t =>
-      VersionedState.prune(s"$stateDir/$t", batchId))
+      VersionedState.prune(s"$stateDir/$t", batchId - 1))
   }
 
   /** Wire a streaming frame of tagged envelopes into the loop. */

@@ -95,7 +95,7 @@ object IvmStream {
     VersionedState.write(newCounts, s"$stateDir/counts", batchId)
     VersionedState.write(newLast, s"$stateDir/last", batchId)
     Seq("counts", "last").foreach(t =>
-      VersionedState.prune(s"$stateDir/$t", batchId))
+      VersionedState.prune(s"$stateDir/$t", batchId - 1))
   }
 
   /** Wire a streaming frame of decoded envelopes into the loop. */

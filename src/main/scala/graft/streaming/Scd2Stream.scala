@@ -56,7 +56,7 @@ object Scd2Stream {
       .localCheckpoint() // feeds the key set + the rebuild branch
     val merged = graft.queries.CdcOps.scd2Merge(existing, events)
     VersionedState.write(merged, dir, batchId)
-    VersionedState.prune(dir, batchId)
+    VersionedState.prune(dir, batchId - 1)
   }
 
   /** Wire a streaming frame of normalized events into the loop. */

@@ -110,6 +110,18 @@ object ConfigValidation {
   /** Sinks that land files under `options.path`. */
   private val pathSinks: Set[String] =
     Set("parquet", "parquet-exactly-once", "snapshot")
+  /** Errors for each option `k` of `limits` set in `options` to anything
+    * but a positive integer up to its limit. The limits are the readers'
+    * parses: `SinkRegistry` reads the console sink's `numRows` and
+    * `CdcStream.forBackend` a backend's `maxFilesPerTrigger` with
+    * `.toInt`, and its `txTimeoutMs` with `.toLong`. */
+  private def numericErrors(options: Map[String, String], what: String,
+      limits: (String, Long)*): Seq[String] =
+    limits.flatMap { case (k, max) =>
+      options.get(k).filterNot(_.toLongOption.exists(n => n > 0 && n <= max))
+        .map(v => s"$what option $k must be a positive integer: $v")
+    }
+
   /** Envelope kinds a sink may subscribe to (SinkConfig.kinds). */
   val supportedKinds: Set[String] = Set(
     "insert", "update", "delete", "schema", "beginTransaction",
@@ -118,7 +130,8 @@ object ConfigValidation {
   /** Aggregate-errors validation in the spirit of lapidus.js:51-86:
     * at least one backend; every backend kind must have a worker; every
     * sink kind must resolve in the registry, and a file-landing sink
-    * names its path; a kafka backend reads one topic. */
+    * names its path; numeric options are positive integers; a kafka
+    * backend reads one topic. */
   def validate(cfg: EngineConfig): Seq[String] = {
     val errs = Seq.newBuilder[String]
     if (cfg.backends.isEmpty)
@@ -146,7 +159,13 @@ object ConfigValidation {
         if (pathSinks.contains(s.kind) &&
             !s.options.get("path").exists(_.trim.nonEmpty))
           errs += s"${b.name}: ${s.kind} sink requires options.path"
+        if (s.kind == "console")
+          errs ++= numericErrors(s.options, s"${b.name}: console sink",
+            "numRows" -> Int.MaxValue.toLong)
       }
+      errs ++= numericErrors(b.options, s"${b.name}: backend",
+        "maxFilesPerTrigger" -> Int.MaxValue.toLong,
+        "txTimeoutMs" -> Long.MaxValue)
       if (src == "file" && !b.options.contains("path"))
         errs += s"${b.name}: file backend requires options.path"
       // backend = topic downstream, and CdcStream.forBackend runs each

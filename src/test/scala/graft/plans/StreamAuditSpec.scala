@@ -127,9 +127,12 @@ class StreamAuditSpec extends SparkSpec {
       "one fixed-size LastTouch row per user — the last-touch model " +
         "needs the latest click regardless of age, RocksDB-backed")),
     "cdc_tx_assembly" -> ((Set(StreamAudit.NoStateTimeout),
-      "state keyed by BACKEND (one per configured source); the per-key " +
-        "buffer holds OPEN transactions only and state.remove() fires " +
-        "at commit — size tracks in-flight txs, not stream lifetime")),
+      "state keyed by BACKEND (one per configured source): the open " +
+        "transaction's buffer plus a schema cache with one entry per " +
+        "table. state.remove() fires only when no transaction is open " +
+        "and the cache is empty, so after a schema line the key lives " +
+        "for the stream's lifetime, bounded by the backend's table " +
+        "count; the buffer tracks in-flight txs, not stream lifetime")),
     "cdc_binlog_carry" -> ((Set(StreamAudit.NoStateTimeout),
       "state keyed by backend; one tablemap row per table — bounded by " +
         "the schema count, not the stream")))

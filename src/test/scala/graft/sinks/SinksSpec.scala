@@ -175,10 +175,11 @@ class SinksSpec extends SparkSpec {
     assert(v0 == Set("1", "2"))
   }
 
-  test("snapshot merge runs on the previous version's scan partitions: " +
-      "several for a version split by maxPartitionBytes, one for a tiny " +
-      "one, each with one exchange") {
+  test("snapshot merges run on the base's scan partitions: several for " +
+      "a base split by maxPartitionBytes, one for a tiny one, each with " +
+      "one exchange — in the read merge and in a compacting write") {
     import java.nio.file.Files
+    import org.apache.spark.sql.DataFrame
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     // a foreachBatch session of a stateful stream: AQE off and the
     // query's one state partition as the shuffle width. A session of its
@@ -190,14 +191,23 @@ class SinksSpec extends SparkSpec {
       JsonCdc.decode(s.createDataFrame(ls).toDF("seq", "line"))
     def ins(id: Int, v: String) =
       s"""{"insert": {"id": $id, "v": "$v"}, "table": "t"}"""
+    def upd(id: Int, v: String) =
+      s"""{"update": {"id": $id, "v": "$v"}, "table": "t"}"""
     def parts(dir: String, v: Int) =
       new java.io.File(s"$dir/batch=$v").listFiles()
         .count(_.getName.endsWith(".parquet"))
+    def isDelta(dir: String, v: Int) =
+      new java.io.File(s"$dir/batch=$v/_DELTA").exists()
+    def exchanges(df: DataFrame) = df.queryExecution.executedPlan
+      .collect { case e: ShuffleExchangeExec => e }.size
 
     val big = Files.createTempDirectory("graft-snap-wide").toString
     val b0 = (0 until 3000).map(i => (i.toLong, ins(i, s"value-$i")))
     val b1 = Seq((3000L, ins(7, "changed")),
       (3001L, """{"delete": true, "@": {"id": 8}, "table": "t"}"""))
+    // every row updated: a delta larger than the base
+    val b2 = (0 until 3000).map(i => (4000L + i, upd(i, s"value-$i-2")))
+    val b3 = Seq((9000L, ins(9, "last")))
     val sink = new SnapshotSink(big)
     sink.write(env(b0), 0L)
     assert(parts(big, 0) == 1)
@@ -209,42 +219,76 @@ class SinksSpec extends SparkSpec {
     val merge = graft.cdc.SnapshotApply.advance(
       s.read.parquet(s"$big/batch=0"),
       graft.cdc.SnapshotApply.normalize(env(b1)))
-    assert(merge.queryExecution.executedPlan
-      .collect { case e: ShuffleExchangeExec => e }.size == 1,
+    assert(exchanges(merge) == 1,
       "the aggregate reuses the merge's partitioning")
+    def want(bs: Seq[(Long, String)]*) = graft.cdc.SnapshotApply.snapshot(
+      graft.cdc.SnapshotApply.normalize(env(bs.flatten)))
+    def same(got: DataFrame, exp: DataFrame) = {
+      val g = got.select(exp.columns.map(col).toIndexedSeq: _*)
+      g.exceptAll(exp).isEmpty && exp.exceptAll(g).isEmpty
+    }
+
+    // the read merge: base 0 plus delta 1
     sink.write(env(b1), 1L)
-    assert(parts(big, 1) == width, "one merge partition per scan partition")
-    val want = graft.cdc.SnapshotApply.snapshot(
-      graft.cdc.SnapshotApply.normalize(env(b0 ++ b1)))
-    val got = sink.current(s).select(want.columns.map(col).toIndexedSeq: _*)
-    assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty)
+    assert(isDelta(big, 1))
+    val read = sink.current(s)
+    assert(exchanges(read) == 1, "the read merge has one exchange")
+    assert(read.rdd.getNumPartitions == width,
+      "the read merges on the base's scan partitions")
+    assert(same(read, want(b0, b1)))
+
+    // a compacting write: deltas 1 and 2 outweigh base 0 and one scan
+    // partition, so batch 3 is a base merged on base 0's scan partitions
+    sink.write(env(b2), 2L)
+    assert(isDelta(big, 2), "delta 1 alone is below the bytes rule")
+    sink.write(env(b3), 3L)
+    assert(!isDelta(big, 3), "the live deltas passed the bytes rule")
+    assert(parts(big, 3) == width, "one merge partition per scan partition")
+    assert(same(sink.current(s), want(b0, b1, b2, b3)))
+    assert(same(sink.version(s, 2), want(b0, b1, b2)),
+      "version 2 still reads base 0 and its deltas")
 
     s.conf.unset("spark.sql.files.maxPartitionBytes")
     val tiny = Files.createTempDirectory("graft-snap-narrow").toString
     val small = new SnapshotSink(tiny)
     small.write(env(Seq((0L, ins(1, "a")), (1L, ins(2, "b")))), 0L)
     small.write(env(Seq((2L, ins(3, "c")), (3L, ins(4, "d")))), 1L)
-    assert(parts(tiny, 1) == 1)
-    assert(small.current(s).count() == 4)
+    assert(isDelta(tiny, 1))
+    val tinyRead = small.current(s)
+    assert(exchanges(tinyRead) == 1 && tinyRead.rdd.getNumPartitions == 1)
+    assert(tinyRead.count() == 4)
   }
 
-  test("snapshot retention: after 5 writes only batch=3 and batch=4 remain") {
+  test("snapshot retention: a compaction after MaxDeltas deltas; one " +
+      "write later only the new base and its delta remain") {
     import java.nio.file.Files
     val dir = Files.createTempDirectory("graft-snap-retain").toString
     val sink = new SnapshotSink(dir)
+    val k = SnapshotSink.MaxDeltas
     def env(ls: Seq[(Long, String)]) =
       JsonCdc.decode(ls.toDF("seq", "line"))
-    for (b <- 0 until 5)
-      sink.write(env(Seq((b.toLong,
-        s"""{"insert": {"id": $b, "v": "x"}, "table": "t"}"""))), b.toLong)
-    assert(new java.io.File(dir).list().sorted.toSeq ==
-      Seq("batch=3", "batch=4"))
+    def put(b: Int) = sink.write(env(Seq((b.toLong,
+      s"""{"insert": {"id": $b, "v": "x"}, "table": "t"}"""))), b.toLong)
+    def dirs = new java.io.File(dir).list().sorted.toSeq
+    def batches(bs: Range) = bs.map(b => s"batch=$b").sorted
     def pks(df: org.apache.spark.sql.DataFrame) =
       df.select("pk").as[String].collect().toSet
-    assert(pks(sink.current(spark)) == (0 until 5).map(_.toString).toSet,
-      "the latest version holds all 5 accumulated rows")
-    assert(pks(VersionedState.read(spark, dir, 3)) ==
-      (0 until 4).map(_.toString).toSet, "the previous version stays readable")
+    def upTo(b: Int) = (0 to b).map(_.toString).toSet
+    def isDelta(b: Int) = new java.io.File(s"$dir/batch=$b/_DELTA").exists()
+    (0 to k + 1).foreach(put)
+    assert((1 to k).forall(isDelta) && !isDelta(0) && !isDelta(k + 1),
+      s"base 0, $k deltas, then a base")
+    assert(dirs == batches(0 to k + 1),
+      "the compaction keeps what version k reads: two bases, k deltas")
+    assert(pks(sink.version(spark, k)) == upTo(k) &&
+      pks(sink.current(spark)) == upTo(k + 1))
+    put(k + 2)
+    assert(dirs == batches(k + 1 to k + 2),
+      "every dir older than the base version k + 1 reads is gone")
+    assert(pks(sink.version(spark, k + 1)) == upTo(k + 1),
+      "the previous version stays readable")
+    assert(pks(sink.current(spark)) == upTo(k + 2),
+      "the latest version holds every accumulated row")
   }
 
   test("snapshot sink: a torn version is invisible to current and its " +

@@ -88,6 +88,44 @@ class ConfigSpec extends AnyFunSuite {
     assert(errs(SinkConfig("console")).isEmpty)
   }
 
+  /** Validation errors of one file backend with `options` and `sink`. */
+  private def fileBackendErrs(options: Map[String, String],
+      sink: SinkConfig = SinkConfig("console")): Seq[String] =
+    ConfigValidation.validate(EngineConfig(Seq(BackendConfig("b",
+      kind = "file-ldjson", options = options + ("path" -> "/x"),
+      sinks = Seq(sink)))))
+
+  // each value below makes `-c` fail where `-t` passed it: the reader's
+  // .toInt/.toLong throws, or the value is out of range for its use
+  private val notPositive = Seq("ten", "0", "-3", "1.5", "", "99999999999")
+
+  test("a console sink's numRows must be a positive integer") {
+    assert(fileBackendErrs(Map.empty,
+      SinkConfig("console", Map("numRows" -> "10"))).isEmpty)
+    for (v <- notPositive)
+      assert(fileBackendErrs(Map.empty,
+          SinkConfig("console", Map("numRows" -> v))) ==
+        Seq(s"b: console sink option numRows must be a positive integer: $v"),
+        v)
+  }
+
+  test("a backend's maxFilesPerTrigger must be a positive integer") {
+    assert(fileBackendErrs(Map("maxFilesPerTrigger" -> "4")).isEmpty)
+    for (v <- notPositive)
+      assert(fileBackendErrs(Map("maxFilesPerTrigger" -> v)) ==
+        Seq(s"b: backend option maxFilesPerTrigger must be a positive " +
+          s"integer: $v"), v)
+  }
+
+  test("a backend's txTimeoutMs must be a positive integer") {
+    assert(fileBackendErrs(Map("txTimeoutMs" -> "99999999999")).isEmpty,
+      "a long timeout is a valid Long")
+    for (v <- notPositive.filterNot(_ == "99999999999"))
+      assert(fileBackendErrs(Map("txTimeoutMs" -> v)) ==
+        Seq(s"b: backend option txTimeoutMs must be a positive integer: $v"),
+        v)
+  }
+
   test("full source × wire matrix validates — any wire on any transport") {
     for {
       src <- Seq("file", "kafka")

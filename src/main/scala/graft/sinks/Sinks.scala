@@ -91,45 +91,36 @@ class SubjectRoutingSink(
   }
 }
 
-/** Warehouse sink. `partitionBy` (e.g. table, kind) lays envelopes out
-  * as hive-style directories so downstream readers prune partitions —
+/** Exactly-once warehouse landing, behind both the `parquet` and the
+  * `parquet-exactly-once` config kinds. Structured Streaming's
+  * foreachBatch is at-least-once with a STABLE batchId: a crash between
+  * the write and the checkpoint commit re-delivers the same rows under
+  * the same id. Each batch lands as one [[VersionedState]] version
+  * (`batch=<id>`, marker-committed), which makes the replay a no-op and
+  * keeps a half-written batch invisible to readers until the retry
+  * overwrites it. This is the upgrade over the reference's at-least-once
+  * delivery (reference README.md:53-55: restart replays from the slot)
+  * that its NATS consumers must otherwise implement by hand. Every batch
+  * is kept: the landed table is the union of all versions, read through
+  * `IdempotentParquetSink.committed`.
+  *
+  * `partitionBy` (e.g. table, kind) lays each version out as hive-style
+  * directories (`batch=<id>/table=…/kind=…`) so readers prune partitions:
   * at 100 TB an unpartitioned event dump forces every consumer to scan
   * everything, and the natural CDC read patterns ("one table's changes",
   * "all deletes") are partition-prunable for free. */
-class ParquetSink(path: String, partitionBy: Seq[String] = Nil)
+class IdempotentParquetSink(path: String, partitionBy: Seq[String] = Nil)
     extends EventSink {
-  val name = "parquet"
-  def write(batch: DataFrame, batchId: Long): Unit = {
-    val w = batch.write.mode("append")
-    (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w)
-      .parquet(path)
-  }
-}
-
-/** Exactly-once warehouse landing. Structured Streaming's foreachBatch
-  * is at-least-once with a STABLE batchId: a crash between the write and
-  * the checkpoint commit re-delivers the same rows under the same id.
-  * Each batch lands as one [[VersionedState]] version (`batch=<id>`,
-  * marker-committed), which makes the replay a no-op and keeps a
-  * half-written batch invisible to readers until the retry overwrites
-  * it. This is the upgrade over the reference's at-least-once delivery
-  * (reference README.md:53-55: restart replays from the slot) that its
-  * NATS consumers must otherwise implement by hand. Every batch is
-  * kept: the landed table is the union of all versions. */
-class IdempotentParquetSink(path: String) extends EventSink {
   val name = "parquet-exactly-once"
   def write(batch: DataFrame, batchId: Long): Unit =
-    VersionedState.write(batch, path, batchId)
+    VersionedState.write(batch, path, batchId, partitionBy = partitionBy)
 }
 
 object IdempotentParquetSink {
-  /** All COMMITTED batches as one frame (uncommitted dirs invisible). */
-  def committed(spark: org.apache.spark.sql.SparkSession,
-      path: String): DataFrame = {
-    val dirs = VersionedState.versions(path).map(VersionedState.path(path, _))
-    require(dirs.nonEmpty, s"no committed batches under $path")
-    spark.read.parquet(dirs: _*)
-  }
+  /** All COMMITTED batches as one frame (uncommitted dirs invisible),
+    * with the partition columns of a `partitionBy` layout. */
+  def committed(spark: SparkSession, path: String): DataFrame =
+    VersionedState.readAll(spark, path)
 }
 
 /** Materialized CURRENT-STATE table maintained from the change stream —
@@ -251,7 +242,7 @@ object SinkRegistry {
     case "console" => new ConsoleSink(
       cfg.options.getOrElse("numRows", "20").toInt)
     case "collect" => new CollectingSink
-    case "parquet" => new ParquetSink(cfg.options("path"),
+    case "parquet" => new IdempotentParquetSink(cfg.options("path"),
       cfg.options.get("partitionBy").toSeq
         .flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty))
     case "parquet-exactly-once" =>

@@ -7,12 +7,14 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types.StructType
 
 /** Batch-id-VERSIONED parquet tables — the one foreachBatch crash
-  * protocol behind the exactly-once and snapshot sinks and the IVM /
-  * SCD2 state loops. Structured Streaming's foreachBatch is
-  * at-least-once with a STABLE batch id, so a version keyed by that id
-  * makes the replay idempotent.
+  * protocol for everything the streaming side lands: the parquet and
+  * snapshot sinks, the IVM / SCD2 state loops and the dedup loop's
+  * indexes. Structured Streaming's foreachBatch is at-least-once with a
+  * STABLE batch id, so a version keyed by that id makes the replay
+  * idempotent.
   *
-  *   - Name: version b lives in `<dir>/batch=<b>`.
+  *   - Name: version b lives in `<dir>/batch=<b>`; a hive layout
+  *     (`partitionBy`) lies inside the version.
   *   - Commit: the parquet lands first, then a marker file inside the
   *     directory. The marker needs no atomic rename, so the protocol
   *     carries over to stores without one; these helpers use the local
@@ -20,22 +22,24 @@ import org.apache.spark.sql.types.StructType
   *     Hadoop FileSystem API.
   *   - Write: a committed version is never rewritten (a replay is a
   *     no-op); an unmarked, torn directory is overwritten.
-  *   - Visibility: `read`, `latest` and `versions` see committed
-  *     versions only.
+  *   - Visibility: `read`, `latest`, `versions` and `readAll` see
+  *     committed versions only.
   *   - Tags: a version may carry a tag, an empty file written after
   *     its parquet and before its marker, so a committed version always
   *     has its tag and a torn one counts for nothing. The snapshot sink
   *     tags its delta versions this way (see `SnapshotSink`).
   *   - Retention: `prune(oldest)` deletes every version below `oldest`,
   *     committed or torn; the caller names the oldest version that
-  *     versions b−1 and b still read. The state loops, whose every
-  *     version is a whole table, pass b−1: a replay of b still finds its
-  *     input, and disk holds two versions. The snapshot sink passes the
-  *     base that b−1 reads. The exactly-once sink keeps every version.
-  *   - Lineage: processing batch b > 0 requires a committed b−1. A
-  *     missing predecessor means a checkpoint reset (or a layout this
-  *     protocol does not read) against existing state; continuing from
-  *     empty state would silently corrupt it. */
+  *     versions b−1 and b still read. The whole-table loops run each
+  *     batch through `step`, which passes b−1: a replay of b still finds
+  *     its input, and disk holds two versions. The snapshot sink passes
+  *     the base that b−1 reads. The parquet landing and the dedup
+  *     indexes keep every version: each is the union of its versions.
+  *   - Lineage: processing batch b > 0 of a whole-table loop or the
+  *     snapshot requires a committed b−1. A missing predecessor means a
+  *     checkpoint reset (or a layout this protocol does not read)
+  *     against existing state; continuing from empty state would
+  *     silently corrupt it. */
 private[graft] object VersionedState {
 
   private val Marker = "_COMMITTED"
@@ -65,27 +69,43 @@ private[graft] object VersionedState {
     * before the first batch (`batchId` < 0). */
   def read(spark: SparkSession, dir: String, batchId: Long,
       schema: StructType): DataFrame =
-    if (batchId < 0)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
-    else read(spark, dir, Seq(batchId), schema)
+    read(spark, dir, Seq(batchId).filter(_ >= 0), schema)
 
-  /** Committed versions `batchIds` as one scan under a fixed schema. */
+  /** Committed versions `batchIds` as one scan under a fixed schema; the
+    * empty table for no versions. */
   def read(spark: SparkSession, dir: String, batchIds: Seq[Long],
       schema: StructType): DataFrame =
-    spark.read.schema(schema).parquet(batchIds.map(committedPath(dir, _)): _*)
+    if (batchIds.isEmpty)
+      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
+    else
+      spark.read.schema(schema).parquet(batchIds.map(committedPath(dir, _)): _*)
+
+  /** Every committed version as one frame, for the tables that keep
+    * every version. The read names `dir` as its base path, so a hive
+    * layout inside the versions reads as partition columns (a predicate
+    * on one prunes directories); the `batch` column that naming infers
+    * is dropped. */
+  def readAll(spark: SparkSession, dir: String): DataFrame = {
+    val dirs = versions(dir).map(path(dir, _))
+    require(dirs.nonEmpty, s"no committed batches under $dir")
+    spark.read.option("basePath", dir).parquet(dirs: _*).drop("batch")
+  }
 
   /** Latest committed version, or an empty frame before any commit. */
   def latest(spark: SparkSession, dir: String,
       schema: StructType): DataFrame =
     read(spark, dir, versions(dir).lastOption.getOrElse(-1L), schema)
 
-  /** Land `df` as version `batchId`, tag it with `tag` if given, and
+  /** Land `df` as version `batchId`, hive-partitioned by `partitionBy`
+    * inside the version when given, tag it with `tag` if given, and
     * commit it. `df` is built only when the version is not committed
     * yet. A tag is a file name Spark's reader skips (leading `_`). */
   def write(df: => DataFrame, dir: String, batchId: Long,
-      tag: Option[String] = None): Unit =
+      tag: Option[String] = None, partitionBy: Seq[String] = Nil): Unit =
     if (!committed(dir, batchId)) {
-      df.write.mode("overwrite").parquet(path(dir, batchId))
+      val w = df.write.mode("overwrite")
+      (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w)
+        .parquet(path(dir, batchId))
       tag.foreach(t => new File(path(dir, batchId), t).createNewFile())
       new File(path(dir, batchId), Marker).createNewFile()
       ()
@@ -106,6 +126,23 @@ private[graft] object VersionedState {
   def prune(dir: String, oldest: Long): Unit =
     listed(dir).filter(_ < oldest).foreach(v =>
       deleteRecursively(new File(path(dir, v))))
+
+  /** One batch of a whole-table state loop over the tables
+    * `<stateDir>/<name>`: require each table's lineage, read each at
+    * version b−1 (empty before the first batch), compute the next
+    * version of each with `body` (results in `tables` order), write each
+    * at version b (a committed one is left as it is), and prune each
+    * below b−1. `what` names the state in the lineage error. */
+  def step(spark: SparkSession, stateDir: String, batchId: Long,
+      what: String, tables: (String, StructType)*)(
+      body: Seq[DataFrame] => Seq[DataFrame]): Unit = {
+    val dirs = tables.map { case (name, _) => s"$stateDir/$name" }
+    dirs.foreach(requireLineage(_, batchId, what))
+    val next = body(tables.zip(dirs).map { case ((_, schema), dir) =>
+      read(spark, dir, batchId - 1, schema) })
+    dirs.zip(next).foreach { case (dir, df) => write(df, dir, batchId) }
+    dirs.foreach(prune(_, batchId - 1))
+  }
 
   def requireLineage(dir: String, batchId: Long, what: String): Unit =
     require(batchId == 0 || committed(dir, batchId - 1),

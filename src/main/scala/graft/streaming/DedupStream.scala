@@ -7,6 +7,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 import graft.queries.DedupOps
+import graft.sinks.VersionedState
 
 /** Continuous corpus dedup — the streaming face of Q22's incremental
   * ops: a stream of new documents maintains the very indexes it probes.
@@ -23,15 +24,16 @@ import graft.queries.DedupOps
   *      shingles; the index deliberately stores only 8-byte band rows).
   *      In-batch near pairs are the batch ops' job (q22_dedup_minhash on
   *      the day's slice); this op covers new-vs-corpus.
-  *   3. APPEND: survivors' fingerprints and bands extend the indexes,
-  *      so the next batch probes today's survivors too.
+  *   3. LAND: the batch's decisions, and its survivors' fingerprints
+  *      and bands, land as version b of the `decisions`, `fp` and
+  *      `bands` tables, so the next batch probes today's survivors too.
   *
-  * Crash story: foreachBatch can re-deliver a batch, re-appending the
-  * same index rows. Decisions stay CORRECT — both probes are
-  * existence-semantics joins (anti / min-partner), which duplicated
-  * index rows cannot flip — so re-delivery costs index bytes, not
-  * answers; compact with graft.sinks.Maintenance, or land the appends
-  * with the batch-id-keyed exactly-once pattern of graft.sinks.
+  * Crash story: the three tables are [[graft.sinks.VersionedState]]
+  * tables that keep every version, and batch b probes only the index
+  * versions below b. A re-delivered batch therefore recomputes the same
+  * rows — it never probes its own survivors — and its writes are no-ops;
+  * a torn version is overwritten. Decisions are read through
+  * `decisions`, which sees committed versions only.
   *
   * At scale the indexes are the bucketed tables of graft.sinks.Bucketing
   * (bucketed on fp / band_sig), making both probes co-located joins. */
@@ -43,17 +45,21 @@ object DedupStream {
     StructField("band", LongType), StructField("band_sig", LongType),
     StructField("doc_id", LongType)))
 
-  private def readIndex(spark: SparkSession, dir: String,
-      schema: StructType): DataFrame =
-    if (new java.io.File(dir).exists()) spark.read.schema(schema).parquet(dir)
-    else spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+  /** Every committed decision: (doc_id, near_partner, decision,
+    * batch_id). */
+  def decisions(spark: SparkSession, indexDir: String): DataFrame =
+    VersionedState.readAll(spark, s"$indexDir/decisions")
 
   /** One microbatch through the index loop. Exposed for tests; `start`
     * wires it into foreachBatch. */
   private[streaming] def processBatch(batch: DataFrame, batchId: Long,
       indexDir: String): Unit = {
     val spark = batch.sparkSession
+    // the index as of batch b: its committed versions below b
+    def index(name: String, schema: StructType): DataFrame =
+      VersionedState.read(spark, s"$indexDir/$name",
+        VersionedState.versions(s"$indexDir/$name").filter(_ < batchId),
+        schema)
     val withFp = batch.select(col("doc_id"), col("text"))
       .withColumn("fp",
         xxhash64(regexp_replace(trim(col("text")), "\\s+", " ")))
@@ -68,13 +74,12 @@ object DedupStream {
         row_number().over(Window.partitionBy("fp").orderBy("doc_id")))
       .filter(col("rn") === 1).drop("rn")
     val survivors = firsts
-      .join(readIndex(spark, s"$indexDir/fp", fpSchema).select("fp"),
-        Seq("fp"), "left_anti")
-      .localCheckpoint() // bands, decisions, and both appends fork it
+      .join(index("fp", fpSchema).select("fp"), Seq("fp"), "left_anti")
+      .localCheckpoint() // bands, decisions, and both index writes fork it
     val bands = DedupOps.minhashBands(survivors.select("doc_id", "shingles"))
-      .localCheckpoint() // probed now, appended below
+      .localCheckpoint() // probed now, landed below
     val near = bands
-      .join(readIndex(spark, s"$indexDir/bands", bandSchema)
+      .join(index("bands", bandSchema)
         .withColumnRenamed("doc_id", "partner"), Seq("band", "band_sig"))
       .groupBy("doc_id").agg(min(col("partner")).as("near_partner"))
     val decisions = survivors.select("doc_id")
@@ -87,16 +92,15 @@ object DedupStream {
         .withColumn("near_partner", lit(null).cast(LongType))
         .withColumn("decision", lit("exact_dup")))
       .withColumn("batch_id", lit(batchId))
-    decisions.write.mode("append").parquet(s"$indexDir/decisions")
-    survivors.select("fp", "doc_id").write.mode("append")
-      .parquet(s"$indexDir/fp")
-    bands.select("band", "band_sig", "doc_id").write.mode("append")
-      .parquet(s"$indexDir/bands")
+    VersionedState.write(decisions, s"$indexDir/decisions", batchId)
+    VersionedState.write(survivors.select("fp", "doc_id"), s"$indexDir/fp",
+      batchId)
+    VersionedState.write(bands.select("band", "band_sig", "doc_id"),
+      s"$indexDir/bands", batchId)
   }
 
   /** Start the loop over a streaming (doc_id, text) frame. Decisions
-    * land at `indexDir`/decisions as (doc_id, decision, near_partner,
-    * batch_id). */
+    * land at `indexDir`/decisions; read them through `decisions`. */
   def start(docs: DataFrame, indexDir: String): StreamingQuery =
     docs.writeStream
       .option("checkpointLocation", s"$indexDir/_checkpoint")

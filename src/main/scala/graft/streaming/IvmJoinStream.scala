@@ -13,8 +13,8 @@ import graft.sinks.VersionedState
   * one tagged stream (side = 'o' orders / 'c' customers — at scale,
   * two capture topics union into one frame exactly like this).
   *
-  * State, versioned by batch id (IvmStream's re-delivery-idempotent
-  * read-b−1/write-b contract via [[graft.sinks.VersionedState]]):
+  * State, versioned by batch id (one re-delivery-idempotent
+  * [[graft.sinks.VersionedState]] `step` per batch):
   *   - `view`  (nat, st, n)  — the maintained aggregate;
   *   - `azset` (ck, st, m)   — A's accumulated Z-set (net row
   *     multiplicities), the B₀-side join input;
@@ -56,9 +56,11 @@ object IvmJoinStream {
   /** Signed attr deltas for one side's batch slice, predecessors from
     * in-batch lag else the carried last-state. Returns (deltas rows
     * (attrs..., m) UNGROUPED, the advanced last table). */
-  private def sideDeltas(batch: DataFrame, prevLast: DataFrame,
+  private[streaming] def sideDeltas(batch: DataFrame, prevLast: DataFrame,
       attrs: Seq[String], sideName: String): (DataFrame, DataFrame) = {
     val w = Window.partitionBy("pk").orderBy("seq")
+    // in_state marks a carried key explicitly: a non-null state attr
+    // can't, since NULL is a legitimate last value whose −1 must land
     val st = prevLast
       .select(col("pk") +: attrs.map(a => col(a).as(s"state_$a")): _*)
       .withColumn("in_state", lit(true))
@@ -107,49 +109,43 @@ object IvmJoinStream {
     * (side, pk, seq, kind, ck, st, nat) through the maintenance loop.
     * Exposed for tests; `start` wires it into foreachBatch. */
   private[streaming] def processBatch(batch: DataFrame, batchId: Long,
-      stateDir: String): Unit = {
-    val spark = batch.sparkSession
-    VersionedState.requireLineage(s"$stateDir/view", batchId,
-      "maintained join view")
-    def readS(name: String, schema: StructType): DataFrame =
-      VersionedState.read(spark, s"$stateDir/$name", batchId - 1, schema)
-    val b = batch.filter(col("kind").isin("insert", "update", "delete"))
-      .localCheckpoint()
-    val (dAraw, newALast) = sideDeltas(
-      b.filter(col("side") === "o").select("pk", "seq", "kind", "ck", "st"),
-      readS("alast", aLastSchema), Seq("ck", "st"), "orders")
-    val (dBraw, newBLast) = sideDeltas(
-      b.filter(col("side") === "c").select("pk", "seq", "kind", "ck", "nat"),
-      readS("blast", bLastSchema), Seq("ck", "nat"), "customer")
-    val dA = netted(dAraw, Seq("ck", "st"), "ma").localCheckpoint()
-    val dB = netted(dBraw, Seq("ck", "nat"), "mb").localCheckpoint()
-    val aZ = readS("azset", aZSchema).withColumnRenamed("m", "ma")
-    val bZ = readS("bzset", bZSchema).withColumnRenamed("m", "mb")
-    val pair = (col("ma") * col("mb")).as("m")
-    val dView =
-      broadcast(dA).join(bZ, "ck").select(col("nat"), col("st"), pair)
-        .unionByName(
-          aZ.join(broadcast(dB), "ck").select(col("nat"), col("st"), pair))
-        .unionByName(
-          broadcast(dA).join(dB, "ck").select(col("nat"), col("st"), pair))
-    val newView = readS("view", viewSchema)
-      .unionByName(dView.withColumnRenamed("m", "n"))
-      .groupBy("nat", "st").agg(sum("n").as("n"))
-      .filter(col("n") =!= 0)
-    val newA = aZ.withColumnRenamed("ma", "m")
-      .unionByName(dA.withColumnRenamed("ma", "m"))
-      .groupBy("ck", "st").agg(sum("m").as("m")).filter(col("m") =!= 0)
-    val newB = bZ.withColumnRenamed("mb", "m")
-      .unionByName(dB.withColumnRenamed("mb", "m"))
-      .groupBy("ck", "nat").agg(sum("m").as("m")).filter(col("m") =!= 0)
-    VersionedState.write(newView, s"$stateDir/view", batchId)
-    VersionedState.write(newA, s"$stateDir/azset", batchId)
-    VersionedState.write(newB, s"$stateDir/bzset", batchId)
-    VersionedState.write(newALast, s"$stateDir/alast", batchId)
-    VersionedState.write(newBLast, s"$stateDir/blast", batchId)
-    Seq("view", "azset", "bzset", "alast", "blast").foreach(t =>
-      VersionedState.prune(s"$stateDir/$t", batchId - 1))
-  }
+      stateDir: String): Unit =
+    VersionedState.step(batch.sparkSession, stateDir, batchId,
+        "maintained join view", "view" -> viewSchema, "azset" -> aZSchema,
+        "bzset" -> bZSchema, "alast" -> aLastSchema,
+        "blast" -> bLastSchema) {
+      case Seq(view, azset, bzset, alast, blast) =>
+        val b = batch.filter(col("kind").isin("insert", "update", "delete"))
+          .localCheckpoint()
+        val (dAraw, newALast) = sideDeltas(
+          b.filter(col("side") === "o").select("pk", "seq", "kind", "ck", "st"),
+          alast, Seq("ck", "st"), "orders")
+        val (dBraw, newBLast) = sideDeltas(
+          b.filter(col("side") === "c").select("pk", "seq", "kind", "ck", "nat"),
+          blast, Seq("ck", "nat"), "customer")
+        val dA = netted(dAraw, Seq("ck", "st"), "ma").localCheckpoint()
+        val dB = netted(dBraw, Seq("ck", "nat"), "mb").localCheckpoint()
+        val aZ = azset.withColumnRenamed("m", "ma")
+        val bZ = bzset.withColumnRenamed("m", "mb")
+        val pair = (col("ma") * col("mb")).as("m")
+        val dView =
+          broadcast(dA).join(bZ, "ck").select(col("nat"), col("st"), pair)
+            .unionByName(
+              aZ.join(broadcast(dB), "ck").select(col("nat"), col("st"), pair))
+            .unionByName(
+              broadcast(dA).join(dB, "ck").select(col("nat"), col("st"), pair))
+        val newView = view
+          .unionByName(dView.withColumnRenamed("m", "n"))
+          .groupBy("nat", "st").agg(sum("n").as("n"))
+          .filter(col("n") =!= 0)
+        val newA = aZ.withColumnRenamed("ma", "m")
+          .unionByName(dA.withColumnRenamed("ma", "m"))
+          .groupBy("ck", "st").agg(sum("m").as("m")).filter(col("m") =!= 0)
+        val newB = bZ.withColumnRenamed("mb", "m")
+          .unionByName(dB.withColumnRenamed("mb", "m"))
+          .groupBy("ck", "nat").agg(sum("m").as("m")).filter(col("m") =!= 0)
+        Seq(newView, newA, newB, newALast, newBLast)
+    }
 
   /** Wire a streaming frame of tagged envelopes into the loop. */
   def start(envelopes: DataFrame, stateDir: String,

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
@@ -19,10 +18,9 @@ import graft.sinks.VersionedState
   * has one, else the state lookup (the exact seam the slice cut).
   *
   * Both tables are VERSIONED BY BATCH ID ([[graft.sinks.VersionedState]]:
-  * marker-committed `batch=<id>` directories): processing batch b reads
-  * version b−1 and writes version b, so a re-delivered batch finds its
-  * versions committed and changes nothing — the foreachBatch crash
-  * contract.
+  * marker-committed `batch=<id>` directories, one `step` per batch), so
+  * a re-delivered batch finds its versions committed and changes
+  * nothing — the foreachBatch crash contract.
   *
   * Scale: per batch, one bounded lag window over the batch's own rows,
   * one equi-join against state on pk (bucket the state table on pk via
@@ -41,62 +39,24 @@ object IvmStream {
     VersionedState.latest(spark, s"$stateDir/counts", countsSchema)
 
   /** One microbatch of decoded envelopes (pk, seq, kind, status) through
-    * the maintenance loop. Exposed for tests; `start` wires it into
+    * the maintenance loop: the signed status deltas of
+    * [[IvmJoinStream.sideDeltas]] net into the counts, and the last
+    * status per pk advances. Exposed for tests; `start` wires it into
     * foreachBatch. */
   private[streaming] def processBatch(batch: DataFrame, batchId: Long,
-      stateDir: String): Unit = {
-    val spark = batch.sparkSession
-    VersionedState.requireLineage(s"$stateDir/counts", batchId,
-      "maintained view")
-    val w = Window.partitionBy("pk").orderBy("seq")
-    // in_state marks "this pk exists in carried state" explicitly:
-    // state_status.isNotNull can't — NULL is a legitimate last status
-    // (statusDeltas' contract), and its −1 must still land on it
-    val prevLast = VersionedState.read(spark, s"$stateDir/last", batchId - 1,
-      lastSchema).withColumnRenamed("status", "state_status")
-      .withColumn("in_state", lit(true))
-    val ev = batch
-      .filter(col("kind").isin("insert", "update", "delete"))
-      .withColumn("prev_in", lag(col("status"), 1).over(w))
-      .withColumn("rn", row_number().over(w))
-      .join(prevLast, Seq("pk"), "left")
-      .withColumn("prev",
-        when(col("rn") === 1, col("state_status")).otherwise(col("prev_in")))
-      .withColumn("has_prev",
-        col("rn") > 1 || coalesce(col("in_state"), lit(false)))
-      .localCheckpoint() // deltas + last-state advance both fork it
-    // an update/delete whose predecessor neither the batch nor the
-    // state knows = the stream started mid-history; its −1 has no
-    // status to land on, so the view would silently drift — fail loudly
-    val orphans = ev.filter(
-      col("kind").isin("update", "delete") && !col("has_prev")).count()
-    require(orphans == 0,
-      s"$orphans update/delete event(s) with unknown predecessor state — " +
-        "the stream was attached mid-history; seed the state tables from " +
-        "a snapshot (cdc5) before attaching")
-    val deltas = graft.queries.CdcOps.statusDeltas(ev)
-      .withColumnRenamed("delta", "n")
-    val newCounts = VersionedState.read(spark, s"$stateDir/counts", batchId - 1,
-        countsSchema)
-      .unionByName(deltas)
-      .groupBy("status").agg(sum(col("n")).as("n"))
-      .filter(col("n") =!= 0)
-    // last-status advance: latest in-batch event per pk wins; deletes
-    // drop the key; untouched keys carry over
-    val lastInBatch = ev.groupBy("pk")
-      .agg(max_by(struct(col("kind"), col("status")), col("seq")).as("l"))
-      .select(col("pk"), col("l.kind").as("kind"),
-        col("l.status").as("status"))
-    val newLast = prevLast
-      .join(lastInBatch.select("pk"), Seq("pk"), "left_anti")
-      .select(col("pk"), col("state_status").as("status"))
-      .unionByName(lastInBatch.filter(col("kind") =!= "delete")
-        .select("pk", "status"))
-    VersionedState.write(newCounts, s"$stateDir/counts", batchId)
-    VersionedState.write(newLast, s"$stateDir/last", batchId)
-    Seq("counts", "last").foreach(t =>
-      VersionedState.prune(s"$stateDir/$t", batchId - 1))
-  }
+      stateDir: String): Unit =
+    VersionedState.step(batch.sparkSession, stateDir, batchId,
+        "maintained view", "counts" -> countsSchema, "last" -> lastSchema) {
+      case Seq(counts, last) =>
+        val (deltas, newLast) = IvmJoinStream.sideDeltas(
+          batch.filter(col("kind").isin("insert", "update", "delete")),
+          last, Seq("status"), "status")
+        val newCounts = counts
+          .unionByName(deltas.withColumnRenamed("m", "n"))
+          .groupBy("status").agg(sum(col("n")).as("n"))
+          .filter(col("n") =!= 0)
+        Seq(newCounts, newLast)
+    }
 
   /** Wire a streaming frame of decoded envelopes into the loop. */
   def start(envelopes: DataFrame, stateDir: String,

@@ -11,12 +11,11 @@ import graft.sinks.VersionedState
   * the SAME incremental merge the batch operator proves against the
   * full rebuild (graft.queries.CdcOps.scd2Merge).
   *
-  * Per batch: read table version b−1, merge the batch's normalized
-  * (pk, seq, kind, rev, status) events, write version b — the
-  * versioned-state crash contract of IvmStream
-  * ([[graft.sinks.VersionedState]]: a re-delivered batch is a no-op;
-  * batch-id gaps fail loudly instead of silently restarting history
-  * from empty).
+  * Per batch: one [[graft.sinks.VersionedState]] `step` reads the
+  * table's previous version, merges the batch's normalized
+  * (pk, seq, kind, rev, status) events and writes the next version — a
+  * re-delivered batch is a no-op; batch-id gaps fail loudly instead of
+  * silently restarting history from empty.
   *
   * Transport contract (same as the batch operator's): per-key event
   * order is non-decreasing across batches — every batch seq for a key
@@ -45,19 +44,16 @@ object Scd2Stream {
   /** One microbatch of normalized events through the merge. Exposed for
     * tests; `start` wires it into foreachBatch. */
   private[streaming] def processBatch(batch: DataFrame, batchId: Long,
-      stateDir: String): Unit = {
-    val spark = batch.sparkSession
-    val dir = s"$stateDir/scd2"
-    VersionedState.requireLineage(dir, batchId, "SCD2 table")
-    val existing = VersionedState.read(spark, dir, batchId - 1, tableSchema)
-    val events = batch
-      .filter(org.apache.spark.sql.functions.col("kind")
-        .isin("insert", "update", "delete"))
-      .localCheckpoint() // feeds the key set + the rebuild branch
-    val merged = graft.queries.CdcOps.scd2Merge(existing, events)
-    VersionedState.write(merged, dir, batchId)
-    VersionedState.prune(dir, batchId - 1)
-  }
+      stateDir: String): Unit =
+    VersionedState.step(batch.sparkSession, stateDir, batchId, "SCD2 table",
+        "scd2" -> tableSchema) {
+      case Seq(existing) =>
+        val events = batch
+          .filter(org.apache.spark.sql.functions.col("kind")
+            .isin("insert", "update", "delete"))
+          .localCheckpoint() // feeds the key set + the rebuild branch
+        Seq(graft.queries.CdcOps.scd2Merge(existing, events))
+    }
 
   /** Wire a streaming frame of normalized events into the loop. */
   def start(events: DataFrame, stateDir: String,

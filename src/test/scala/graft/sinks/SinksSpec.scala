@@ -111,12 +111,13 @@ class SinksSpec extends SparkSpec {
     val sink = SinkRegistry.create(graft.subscribe.SinkConfig("parquet",
       Map("path" -> dir, "partitionBy" -> "table,kind")))
     sink.write(envelopes, 0L)
-    val tableDirs = new java.io.File(dir).listFiles()
+    val tableDirs = new java.io.File(s"$dir/batch=0").listFiles()
       .filter(_.isDirectory).map(_.getName).toSet
     assert(tableDirs.exists(_.startsWith("table=")),
       s"expected hive-style table= dirs, got $tableDirs")
     // partition-pruned read returns exactly that table's rows
-    val users = spark.read.parquet(dir).filter($"table" === "users")
+    val users = IdempotentParquetSink.committed(spark, dir)
+      .filter($"table" === "users")
     assert(users.count() == envelopes.filter($"table" === "users").count())
     // and the predicate lands as a PARTITION filter — directory-level
     // pruning, not a data filter over every file (the whole point of
@@ -338,69 +339,15 @@ class SinksSpec extends SparkSpec {
       .map(_.toString).toSeq
     assert(naming == Seq("src/main/scala/graft/sinks/VersionedState.scala"),
       s"commit marker named outside the versioned-state module: $naming")
-  }
-
-  test("compaction rewrites many small files into few, same data") {
-    import java.nio.file.Files
-    val dir = Files.createTempDirectory("graft-compact").resolve("t").toString
-    // 16 tiny appends = 16+ files
-    for (i <- 0 until 16)
-      Seq((i.toLong, s"v$i")).toDF("id", "v")
-        .coalesce(1).write.mode("append").parquet(dir)
-    val beforeData = spark.read.parquet(dir)
-      .as[(Long, String)].collect().toSet
-    val (before, after) = Maintenance.compact(spark, dir)
-    assert(before >= 16 && after == 1,
-      s"expected 16+ -> 1 files, got $before -> $after")
-    assert(spark.read.parquet(dir).as[(Long, String)].collect().toSet
-      == beforeData, "compaction must not change the data")
-  }
-
-  test("compaction preserves hive partition layout and commit markers") {
-    import java.nio.file.Files
-    val root = Files.createTempDirectory("graft-compact-part").resolve("t").toString
-    for (i <- 0 until 6)
-      Seq((i.toLong, s"t${i % 2}", s"v$i")).toDF("id", "table", "v")
-        .coalesce(1).write.partitionBy("table").mode("append").parquet(root)
-    new java.io.File(s"$root/table=t0/_COMMITTED").createNewFile()
-    val beforeData = spark.read.parquet(root)
-      .as[(Long, String, String)].collect().toSet
-    val (before, after) = Maintenance.compact(spark, root)
-    assert(before >= 6 && after == 2, s"one file per partition leaf; got $before -> $after")
-    assert(new java.io.File(s"$root/table=t0").isDirectory &&
-      new java.io.File(s"$root/table=t1").isDirectory,
-      "partition directories must survive compaction")
-    assert(new java.io.File(s"$root/table=t0/_COMMITTED").exists(),
-      "commit markers must ride across the swap")
-    assert(spark.read.parquet(root).as[(Long, String, String)]
-      .collect().toSet == beforeData)
-  }
-
-  test("compaction heals crashed partition leaves instead of reading " +
-      "them as bogus partitions") {
-    import java.nio.file.Files
-    val root = Files.createTempDirectory("graft-compact-crash").resolve("t").toString
-    for (i <- 0 until 4)
-      Seq((i.toLong, s"t${i % 2}", s"v$i")).toDF("id", "table", "v")
-        .coalesce(1).write.partitionBy("table").mode("append").parquet(root)
-    val beforeData = spark.read.parquet(root)
-      .as[(Long, String, String)].collect().toSet
-    // crash state A (between the two renames): leaf t0 swapped out but
-    // the compacted copy never swapped in
-    val t0 = new java.io.File(s"$root/table=t0")
-    assert(t0.renameTo(new java.io.File(s"$root/table=t0.old")))
-    // crash state B (before swap-out): an orphan .compacting copy of t1
-    val t1c = new java.io.File(s"$root/table=t1.compacting")
-    Seq((99L, "stale")).toDF("id", "v")
-      .coalesce(1).write.parquet(t1c.toString)
-    val (_, after) = Maintenance.compact(spark, root)
-    assert(after == 2, s"both leaves compacted, got $after files")
-    assert(new java.io.File(s"$root/table=t0").isDirectory,
-      "crashed leaf must be rolled back")
-    assert(!new java.io.File(s"$root/table=t0.old").exists() && !t1c.exists(),
-      "crash leftovers must be swept")
-    assert(spark.read.parquet(root).as[(Long, String, String)]
-      .collect().toSet == beforeData,
-      "healed table must hold exactly the pre-crash rows")
+    // and nothing on the streaming side lands a plain append directory:
+    // every write goes through the versioned protocol
+    val append = """mode\(\s*("append"|SaveMode\.Append)\s*\)""".r
+    val appending = Seq("sinks", "streaming").flatMap(d =>
+      Files.walk(root.resolve(s"graft/$d")).iterator().asScala
+        .filter(p => p.toString.endsWith(".scala") && append.findFirstIn(
+          new String(Files.readAllBytes(p), "UTF-8")).isDefined)
+        .map(_.toString))
+    assert(appending.isEmpty,
+      s"append writes outside the versioned protocol: $appending")
   }
 }

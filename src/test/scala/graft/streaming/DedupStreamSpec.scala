@@ -2,7 +2,6 @@ package graft.streaming
 
 import graft.SparkSpec
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.functions._
 
 /** The continuous-dedup index loop: exact dedup must work ACROSS
   * microbatches (the whole point of the persisted fingerprint index)
@@ -33,31 +32,32 @@ class DedupStreamSpec extends SparkSpec {
         (6L, "yet another unrelated document " * 4))
       q.processAllAvailable()
     } finally q.stop()
-    val dec = spark.read.parquet(s"$dir/decisions")
-      .collect()
-      .map(r => r.getAs[Long]("doc_id") ->
-        (r.getAs[String]("decision"), Option(r.getAs[java.lang.Long]("near_partner"))))
-      .toMap
+    def decided = DedupStream.decisions(spark, dir)
+      .select("doc_id", "decision", "near_partner").as[(Long, String, Option[Long])]
+      .collect().sortBy(_._1).toSeq
+    val once = decided
+    assert(once.map(_._1) == (1L to 6L), s"one decision per doc: $once")
+    val dec = once.map { case (id, d, p) => id -> ((d, p)) }.toMap
     assert(dec(1L)._1 == "kept" && dec(2L)._1 == "kept")
     assert(dec(3L)._1 == "exact_dup", "in-batch exact dup must drop")
     assert(dec(4L)._1 == "exact_dup",
       "CROSS-batch exact dup must drop via the fingerprint index")
-    assert(dec(5L) == ("near_candidate", Some(1L)),
+    assert(dec(5L) == (("near_candidate", Some(1L))),
       s"one-token edit must band-collide with indexed doc 1, got ${dec(5L)}")
     assert(dec(6L)._1 == "kept")
     // index contents = survivors only (exact dups never indexed)
-    val fpIds = spark.read.parquet(s"$dir/fp")
-      .select("doc_id").as[Long].collect().toSet
-    assert(fpIds == Set(1L, 2L, 5L, 6L))
-    val bandIds = spark.read.parquet(s"$dir/bands")
+    def ids(table: String) = graft.sinks.VersionedState
+      .readAll(spark, s"$dir/$table")
       .select("doc_id").distinct().as[Long].collect().toSet
-    assert(bandIds == Set(1L, 2L, 5L, 6L))
-    // re-delivery safety: reprocessing batch 1's rows against the grown
-    // index flips nothing — existence joins ignore duplicate index rows
-    DedupStream.processBatch(
-      Seq((4L, base)).toDF("doc_id", "text"), 99L, dir)
-    val redo = spark.read.parquet(s"$dir/decisions")
-      .filter(col("batch_id") === 99L).collect()
-    assert(redo.length == 1 && redo(0).getAs[String]("decision") == "exact_dup")
+    assert(ids("fp") == Set(1L, 2L, 5L, 6L))
+    assert(ids("bands") == Set(1L, 2L, 5L, 6L))
+    // re-delivery safety: foreachBatch re-delivers batch 1 under the
+    // SAME id; it probes only the index below batch 1, so its survivors
+    // never match their own fingerprints and nothing is decided twice
+    DedupStream.processBatch(Seq((4L, base), (5L, base.replace("lazy",
+      "sleepy")), (6L, "yet another unrelated document " * 4))
+      .toDF("doc_id", "text"), 1L, dir)
+    assert(decided == once)
+    assert(ids("fp") == Set(1L, 2L, 5L, 6L))
   }
 }

@@ -150,6 +150,54 @@ class SinksSpec extends SparkSpec {
       Set("insert", "update"))
   }
 
+  test("a parquet landing restarted under a fresh checkpoint fails " +
+      "instead of skipping the batch ids it already holds") {
+    import java.nio.file.Files
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    import org.apache.spark.sql.streaming.StreamingQueryException
+    import graft.subscribe.{EmitFlags, SinkConfig}
+    implicit val sqlCtx = spark.sqlContext
+    val out = Files.createTempDirectory("graft-psink-reset").toString
+    /** One stream under a fresh checkpoint, one batch per `batches`. */
+    def run(batches: Seq[String]*): Unit = {
+      val mem = MemoryStream[(String, String, Long)]
+      val q = SinkRegistry.attach(mem.toDF.toDF("kind", "pk", "seq"),
+          EmitFlags(emitEvent = Some(false)),
+          Seq(SinkRegistry.create(SinkConfig("parquet", Map("path" -> out)))))
+        .option("checkpointLocation",
+          Files.createTempDirectory("graft-psink-ckpt").toString)
+        .start()
+      try batches.foreach { pks =>
+        mem.addData(pks.map(("insert", _, 0L)): _*)
+        q.processAllAvailable()
+      } finally q.stop()
+    }
+    def landed = IdempotentParquetSink.committed(spark, out)
+      .select("pk").as[String].collect().toSet
+    run(Seq("1"), Seq("2"))
+    assert(landed == Set("1", "2"))
+    // the restart's batch 0 lies below the landed batch 1
+    val e = intercept[StreamingQueryException](run(Seq("3")))
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(c => String.valueOf(c.getMessage).contains("checkpoint reset")),
+      e.getMessage)
+    assert(landed == Set("1", "2"), "the failed restart landed nothing")
+  }
+
+  test("a landing directory holding another layout's data fails loudly") {
+    import java.nio.file.Files
+    val dir = Files.createTempDirectory("graft-psink-mixed").toString
+    // an older build's parquet sink appended its files at the root
+    envelopes.write.mode("append").parquet(dir)
+    val sink = SinkRegistry.create(graft.subscribe.SinkConfig("parquet",
+      Map("path" -> dir)))
+    val e = intercept[IllegalArgumentException](sink.write(envelopes, 0L))
+    assert(e.getMessage.contains("move it aside"), e.getMessage)
+    assert(!new java.io.File(s"$dir/batch=0").exists(), "nothing landed")
+    intercept[IllegalArgumentException](
+      IdempotentParquetSink.committed(spark, dir))
+  }
+
   test("snapshot sink maintains current state across microbatches, " +
       "survives batch replay, and versions are time-travelable") {
     import java.nio.file.Files

@@ -14,14 +14,17 @@ import graft.subscribe.SinkConfig
   * at-least-once with a stable batch id, so each writer must give the
   * same committed output when a batch is delivered again under the same
   * id — once after its version committed, and once after the version
-  * was torn (marker gone, a stray data file left behind). */
+  * was torn (marker gone, a stray data file left behind). A batch below
+  * the latest committed one only comes from a reset checkpoint, and
+  * each writer must fail on it rather than skip it. */
 class ReplaySpec extends SparkSpec {
   import spark.implicits._
 
   /** Deliver batches 0..2 into a fresh directory, then batch 2 again,
     * then tear batch 2 of each of `tables` (subdirectories; "" is the
     * directory itself) and deliver it once more; `output` must read the
-    * same every time. */
+    * same every time. Batch 0 delivered last, as after a checkpoint
+    * reset, must fail and leave the output as it was. */
   private def replaySafe(tables: Seq[String])(deliver: (Long, String) => Unit)(
       output: String => Seq[String]): Unit = {
     val dir = Files.createTempDirectory("graft-replay").toString
@@ -33,6 +36,9 @@ class ReplaySpec extends SparkSpec {
     tables.foreach(t => tear(new File(new File(dir, t), "batch=2")))
     deliver(2L, dir)
     assert(output(dir) == once, "a torn batch delivered again")
+    val e = intercept[IllegalArgumentException](deliver(0L, dir))
+    assert(e.getMessage.contains("checkpoint reset"), e.getMessage)
+    assert(output(dir) == once, "a batch below the latest version")
   }
 
   /** A crash before the commit marker: the marker is gone, and a copy of

@@ -1,5 +1,8 @@
 package graft
 
+import java.io.File
+import java.nio.file.Files
+
 import org.apache.spark.sql.SparkSession
 
 /** Shared plumbing for the mains, and the one place a `SparkSession` is
@@ -18,7 +21,13 @@ import org.apache.spark.sql.SparkSession
   *     whatever either place says.
   *
   * Both apply `SparkEntry.requiredConfs` at builder time:
-  * `spark.sql.extensions` is a static conf. */
+  * `spark.sql.extensions` is a static conf.
+  *
+  * [[fixture]] is the one place a batch query puts files on disk: the
+  * synthetic CDC captures, the bucketed tables, the schema generations
+  * and the IVF cell layout. Each lands in its own fresh temp directory
+  * under `java.io.tmpdir`, written once per JVM and deleted at JVM
+  * exit; nothing lands in the working directory. */
 private[graft] object Harness {
 
   /** Worker threads (and shuffle partitions) of the offline profile:
@@ -94,6 +103,46 @@ private[graft] object Harness {
         s"selectable entries: ${stray.toSeq.sorted.mkString(", ")}")
       names
     }
+
+  private val fixtureLock = new Object
+  @volatile private var fixtures = Map.empty[(String, String), String]
+  // reads the map without the lock: a hook waiting on a writer that is
+  // still running would hold up JVM exit
+  sys.addShutdownHook(fixtures.values.foreach(p =>
+    try graft.sinks.VersionedState.deleteRecursively(new File(p).getParentFile)
+    catch { case _: Throwable => () }))
+
+  /** The path of fixture `name` for input `dir`, written on first use by
+    * `write`, which gets a path that does not exist yet inside a fresh
+    * temp directory. One write per (name, dir) and JVM, under one lock;
+    * a failed write leaves no directory and caches nothing. Queries read
+    * the files back the way a real job reads data another job wrote
+    * (a replay reads capture files; the engine never re-synthesizes its
+    * input), and the files survive the bench's between-query RDD
+    * cleanup.
+    *
+    * Driver-local files: valid because Bench, Verify and the tests run
+    * `local[n]` (driver and executors share a filesystem). A cluster
+    * deployment reads real data from shared storage instead. */
+  def fixture(spark: SparkSession, name: String, dir: String)(
+      write: String => Unit): String = {
+    require(spark.sparkContext.isLocal,
+      "on-disk fixtures are a local-mode harness construct; on a " +
+        "cluster, read real capture files and tables from shared storage")
+    fixtureLock.synchronized {
+      fixtures.getOrElse((name, dir), {
+        val root = Files.createTempDirectory(s"graft-$name-").toFile
+        val path = new File(root, name).toString
+        try write(path)
+        catch { case e: Throwable =>
+          graft.sinks.VersionedState.deleteRecursively(root)
+          throw e
+        }
+        fixtures += (name, dir) -> path
+        path
+      })
+    }
+  }
 
   /** Drop leftover localCheckpoint RDDs between queries — across ~90
     * queries the pinned sf-sized snapshots otherwise crowd executor

@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Harness, Tables}
 import graft.cdc.{BinlogCdc, JsonCdc, OplogCdc}
 
 /** CDC1/CDC2 — the reference's decode + routing pipeline as oracle-checked
@@ -18,46 +18,21 @@ import graft.cdc.{BinlogCdc, JsonCdc, OplogCdc}
   */
 object CdcOps {
 
-  /** Synthetic replays materialize to a process-scoped parquet fixture
-    * on first use and are READ from disk afterwards — exactly how a real
-    * replay consumes capture output (pg_recvlogical/Debezium write
-    * files; the engine never re-synthesizes its input). Benefits: the
-    * decode queries measure the DECODER, not string formatting; the
-    * fixture survives the bench's between-query RDD cleanup (a memoized
-    * localCheckpoint would not); and cdc1/cdc2 (likewise cdc5/cdc6)
-    * share one generation. JVM-local cache → no cross-run staleness.
+  /** Synthetic replays are written once as parquet capture files
+    * through `Harness.fixture` and READ from disk afterwards — exactly
+    * how a real replay consumes capture output (pg_recvlogical/Debezium
+    * write files; the engine never re-synthesizes its input). The
+    * decode queries therefore measure the DECODER, not string
+    * formatting, and cdc1/cdc2 (likewise cdc5/cdc6) share one
+    * generation.
     *
-    * HARNESS-ONLY construct: the path is driver-local java.io.tmpdir,
-    * valid because Bench/Verify/tests all run master=local[*] (driver
-    * and executors share a filesystem). A cluster deployment replays
-    * real capture files from shared storage and never calls this. The
-    * shutdown hook reclaims the fixtures so repeated rounds don't
-    * accumulate sf-sized trees in /tmp. */
-  private val fixtureLock = new Object
-  private var fixturePaths = Map.empty[(String, String), String]
-  sys.addShutdownHook {
-    fixtureLock.synchronized {
-      fixturePaths.values.foreach(p =>
-        try graft.sinks.VersionedState.deleteRecursively(new java.io.File(p))
-        catch { case _: Throwable => () })
-    }
-  }
-  private def replayFixture(s: SparkSession, dir: String, name: String)(
-      build: => DataFrame): DataFrame = {
-    require(s.sparkContext.isLocal,
-      "synthetic replay fixtures are a local-mode harness construct; " +
-        "on a cluster, replay real capture files from shared storage")
-    val path = fixtureLock.synchronized {
-      fixturePaths.getOrElse((name, dir), {
-        val p = java.nio.file.Files
-          .createTempDirectory(s"graft-replay-$name").toString
-        build.write.mode("overwrite").parquet(p)
-        fixturePaths += (name, dir) -> p
-        p
-      })
-    }
-    s.read.parquet(path)
-  }
+    * HARNESS-ONLY construct: the files are driver-local (see
+    * `Harness.fixture`); a cluster deployment replays real capture
+    * files from shared storage and never calls this. */
+  private def capture(s: SparkSession, dir: String, name: String)(
+      build: => DataFrame): DataFrame =
+    s.read.parquet(Harness.fixture(s, s"replay-$name", dir)(
+      build.write.mode("overwrite").parquet(_)))
 
   /** 3 jsoncdc lines per order on a stride-4 seq grid (begin=4k, dml=4k+2,
     * commit=4k+3; lane 4k+1 is reserved), plus two out-of-band `schema`
@@ -65,7 +40,7 @@ object CdcOps {
     * and v2 at seq=4001 — so v2 governs every DML with orderkey >= 1000,
     * exercising the O13 supersession rule at any SF. */
   private[graft] def syntheticLines(s: SparkSession, dir: String): DataFrame =
-      replayFixture(s, dir, "jsoncdc") {
+      capture(s, dir, "jsoncdc") {
     import s.implicits._
     // Repartition the NARROW key frame before formatting: the three line
     // branches then derive narrowly from one reused exchange, instead of
@@ -204,7 +179,7 @@ object CdcOps {
     * (graft.cdc.BinlogCdc — constraint pk, stateful tablemap carry, row
     * expansion, after-image updates, item-less deletes). */
   private[graft] def syntheticBinlog(s: SparkSession, dir: String): DataFrame =
-      replayFixture(s, dir, "binlog") {
+      capture(s, dir, "binlog") {
     import s.implicits._
     val o = Tables.load(s, dir, "orders")
       .select(col("o_orderkey").as("k"), col("o_orderstatus").as("st"))
@@ -272,7 +247,7 @@ object CdcOps {
     * updates per the reference, ns split on the first dot, ns.pk
     * subject). */
   private[graft] def syntheticOplog(s: SparkSession, dir: String): DataFrame =
-      replayFixture(s, dir, "oplog") {
+      capture(s, dir, "oplog") {
     // narrow-row repartition before formatting (see syntheticLines)
     val n = s.conf.get("spark.sql.shuffle.partitions", "32").toInt
     val o = Tables.load(s, dir, "orders")
@@ -330,7 +305,7 @@ object CdcOps {
     * update (rev 2, real status) at 3k+1 unless k%4==1 (some rows are
     * never updated); delete at 3k+2 when k%4==3 (some rows die). */
   private[graft] def syntheticHistory(s: SparkSession, dir: String): DataFrame =
-      replayFixture(s, dir, "history") {
+      capture(s, dir, "history") {
     // narrow-row repartition before formatting, then ONE generator pass
     // for a key's whole history — see syntheticLines for why a 3-way
     // union would triple-scan the source. Conditional events (not every
@@ -432,7 +407,7 @@ object CdcOps {
     * diff must catch: v2 ADDS `amount`, v3 RETYPES `status`
     * varchar→text, v4 REMOVES `amount`. */
   private[graft] def schemaEvoLines(s: SparkSession, dir: String): DataFrame =
-      replayFixture(s, dir, "schemaevo") {
+      capture(s, dir, "schemaevo") {
     val cols =
       when(col("v") === 1,
         lit(""""id": "integer", "status": "varchar""""))
@@ -586,7 +561,7 @@ object CdcOps {
     * lane stride; the build asserts the key range fits it. */
   private val Epoch = 1L << 20
   private[graft] def interleavedHistory(s: SparkSession,
-      dir: String): DataFrame = replayFixture(s, dir, "history-interleaved") {
+      dir: String): DataFrame = capture(s, dir, "history-interleaved") {
     val n = s.conf.get("spark.sql.shuffle.partitions", "32").toInt
     val o = Tables.load(s, dir, "orders")
       .select(col("o_orderkey").as("k"), col("o_orderstatus").as("st"))

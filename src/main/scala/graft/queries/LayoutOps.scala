@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Harness, Tables}
 import graft.sinks.Bucketing
 
 /** Q45 — physical-layout operators made driver-visible: the recurring
@@ -20,49 +20,34 @@ import graft.sinks.Bucketing
   */
 object LayoutOps {
 
-  /** Bucketed tables are written once per (JVM, dir) — the layout's
-    * whole premise; subsequent calls (bench steady-state) measure the
-    * exchange-free read path. Stale warehouse dirs from previous JVMs
-    * (in-memory catalog, surviving files) are cleaned before the first
-    * write. Local-mode harness construct, like CdcOps.replayFixture:
-    * a cluster writes bucketed tables to its real catalog once. */
-  private val writtenLock = new Object
-  private var written = Set.empty[(String, String)]
-  private def ensureBucketed(s: SparkSession, dir: String,
-      table: String, src: => DataFrame, key: String): String = {
+  /** Bucketed table `table` of `dir`'s `src`, written once per (JVM,
+    * dir) through `Harness.fixture` — the layout's whole premise; later
+    * calls (bench steady-state) measure the exchange-free read path. The
+    * catalog entry is an external table over the fixture's files, so
+    * nothing lands in `spark.sql.warehouse.dir`. Local-mode harness
+    * construct: a cluster writes bucketed tables to its real catalog
+    * once. */
+  private def bucketed(s: SparkSession, dir: String, table: String,
+      src: => DataFrame, key: String): DataFrame = {
     val name = table + "_" + dir.replaceAll("[^a-zA-Z0-9]", "_")
-    writtenLock.synchronized {
-      if (!written((name, dir))) {
-        s.sql(s"DROP TABLE IF EXISTS $name")
-        val loc = new java.io.File(
-          s.conf.get("spark.sql.warehouse.dir").stripPrefix("file:"), name)
-        if (loc.exists())
-          scala.reflect.io.Directory(loc).deleteRecursively()
-        Bucketing.writeBucketed(src, name, key, 8)
-        written += ((name, dir))
-      }
-    }
-    name
+    Harness.fixture(s, name, dir)(
+      Bucketing.writeBucketed(src, name, key, 8, _))
+    s.table(name)
   }
 
-  def q45_bucketed_join(s: SparkSession, dir: String): DataFrame = {
-    val to = ensureBucketed(s, dir, "gb_orders",
-      Tables.load(s, dir, "orders")
-        .select("o_orderkey", "o_custkey", "o_totalprice"),
-      "o_custkey")
-    val tc = ensureBucketed(s, dir, "gb_customer",
-      Tables.load(s, dir, "customer").select("c_custkey", "c_name"),
-      "c_custkey")
-    Bucketing.readBucketed(s, to)
+  def q45_bucketed_join(s: SparkSession, dir: String): DataFrame =
+    bucketed(s, dir, "gb_orders", Tables.load(s, dir, "orders")
+        .select("o_orderkey", "o_custkey", "o_totalprice"), "o_custkey")
       .hint("merge") // pin SMJ: bucketed sides zip per-bucket, no sort
-      .join(Bucketing.readBucketed(s, tc),
+      .join(bucketed(s, dir, "gb_customer",
+          Tables.load(s, dir, "customer").select("c_custkey", "c_name"),
+          "c_custkey"),
         col("o_custkey") === col("c_custkey"))
       .groupBy("c_custkey") // bucket key again: still no exchange
       .agg(count(lit(1)).as("n_orders"),
         sum(expr("CAST(FLOOR(o_totalprice * 100) AS BIGINT)"))
           .as("cents"))
       .orderBy("c_custkey")
-  }
 
   /** Oracle: the plain join + aggregate the layout must reproduce. */
   val q45Sql: String =
@@ -78,35 +63,22 @@ object LayoutOps {
     * history as ONE table with the union schema (old files yield NULL
     * for columns they predate) — Spark's `mergeSchema` parquet path,
     * the batch face of the cdc7 drift report. Fixture: two generations
-    * written once per JVM/dir (gen 1: (key, status); gen 2 adds
-    * priority), read merged, aggregated per (status, priority) with
-    * gen-1 rows surfacing as '__none__'. The oracle restates the union
+    * written once per JVM/dir by `Harness.fixture` (gen 1: (key,
+    * status); gen 2 adds priority), read merged, aggregated per (status,
+    * priority) with gen-1 rows surfacing as '__none__'. The oracle restates the union
     * from the source table. Generation handling is not hypothetical
     * here: events.parquet itself shipped in TIMESTAMP(NANOS) and
     * MICROS generations, normalized in graft.Tables. */
-  private def ensureGenerations(s: SparkSession, dir: String): String = {
-    val name = "gen_orders_" + dir.replaceAll("[^a-zA-Z0-9]", "_")
-    writtenLock.synchronized {
-      if (!written((name, dir))) {
-        val base = new java.io.File(
-          sys.props("java.io.tmpdir"), s"graft-$name")
-        if (base.exists())
-          scala.reflect.io.Directory(base).deleteRecursively()
-        val o = Tables.load(s, dir, "orders")
-        o.filter(col("o_orderkey") % 2 === 0)
-          .select("o_orderkey", "o_orderstatus")
-          .write.parquet(s"$base/gen=1")
-        o.filter(col("o_orderkey") % 2 === 1)
-          .select("o_orderkey", "o_orderstatus", "o_orderpriority")
-          .write.parquet(s"$base/gen=2")
-        written += ((name, dir))
-      }
-    }
-    new java.io.File(sys.props("java.io.tmpdir"), s"graft-$name").toString
-  }
-
   def q46_schema_merge(s: SparkSession, dir: String): DataFrame = {
-    val base = ensureGenerations(s, dir)
+    val base = Harness.fixture(s, "gen_orders", dir) { p =>
+      val o = Tables.load(s, dir, "orders")
+      o.filter(col("o_orderkey") % 2 === 0)
+        .select("o_orderkey", "o_orderstatus")
+        .write.parquet(s"$p/gen=1")
+      o.filter(col("o_orderkey") % 2 === 1)
+        .select("o_orderkey", "o_orderstatus", "o_orderpriority")
+        .write.parquet(s"$p/gen=2")
+    }
     s.read.option("mergeSchema", "true").parquet(base)
       .groupBy(col("o_orderstatus").as("status"),
         coalesce(col("o_orderpriority"), lit("__none__")).as("priority"))

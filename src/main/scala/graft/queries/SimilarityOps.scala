@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Harness, Tables}
 
 /** Q23 family — similarity search over the `embeddings` table
   * (SURVEY.md §2.4 north star).
@@ -860,26 +860,14 @@ object SimilarityOps {
     * (the in-memory variant only avoids comparing; this avoids IO).
     * Same cells (= label), same scoring, same result as q23_knn_ivf —
     * the oracle is shared, proving layout ≡ logical op — and the DPP
-    * plan shape is pinned by AuditPathsSpec. Written once per
-    * (JVM, dir), the LayoutOps/replayFixture harness convention. */
-  private val layoutLock = new Object
-  private var layoutPaths = Map.empty[String, String]
-  private def ensureCellLayout(s: SparkSession, dir: String): String =
-    layoutLock.synchronized {
-      layoutPaths.getOrElse(dir, {
-        val base = new java.io.File(sys.props("java.io.tmpdir"),
-          "graft-ivf-" + dir.replaceAll("[^a-zA-Z0-9]", "_"))
-        if (base.exists())
-          scala.reflect.io.Directory(base).deleteRecursively()
-        Tables.load(s, dir, "embeddings")
-          .write.partitionBy("label").parquet(base.toString)
-        layoutPaths += dir -> base.toString
-        base.toString
-      })
-    }
-
+    * plan shape is pinned by AuditPathsSpec. The layout is written
+    * once per (JVM, dir) by `Harness.fixture`, a local-mode harness
+    * construct: a cluster keeps its cell-partitioned corpus in shared
+    * storage. */
   def q23_ivf_layout(s: SparkSession, dir: String): DataFrame = {
-    val cells = s.read.parquet(ensureCellLayout(s, dir))
+    val layout = Harness.fixture(s, "ivf", dir)(
+      Tables.load(s, dir, "embeddings").write.partitionBy("label").parquet(_))
+    val cells = s.read.parquet(layout)
       .select(col("vec_id").as("cand_id"), col("label"),
         toDoubleVec(col("embedding")).as("cv"))
       .withColumn("c_nrm", normExpr(col("cv")))

@@ -1,6 +1,6 @@
 package graft.sinks
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 /** Bucketed warehouse tables — the pre-shuffled layout for joins that
   * recur on the same key (the fact→dim and fact→fact joins every
@@ -25,20 +25,19 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object Bucketing {
 
-  /** Write `df` as a bucketed, per-bucket-sorted managed parquet table.
-    * `saveAsTable` is required — bucket metadata lives in the catalog,
-    * not the files — so callers configure `spark.sql.warehouse.dir`. */
+  /** Write `df` as a bucketed, per-bucket-sorted parquet table whose
+    * files live at `path` (an external table). `saveAsTable` is
+    * required — bucket metadata lives in the catalog, not the files —
+    * but the location is the caller's, so nothing lands in
+    * `spark.sql.warehouse.dir`. Read it back with `spark.table(table)`:
+    * the catalog entry carries the spec, so the scan is bucket-aware and
+    * downstream joins/aggs on the bucket key skip their exchange. */
   def writeBucketed(df: DataFrame, table: String, bucketCol: String,
-      nBuckets: Int): Unit =
+      nBuckets: Int, path: String): Unit =
     df.write.mode("overwrite")
       .bucketBy(nBuckets, bucketCol)
       .sortBy(bucketCol)
       .format("parquet")
+      .option("path", path)
       .saveAsTable(table)
-
-  /** Read back a bucketed table (bucket-aware scan: the catalog entry
-    * carries the spec, so downstream joins/aggs on the bucket key skip
-    * their exchange). */
-  def readBucketed(spark: SparkSession, table: String): DataFrame =
-    spark.table(table)
 }

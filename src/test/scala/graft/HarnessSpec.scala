@@ -1,14 +1,20 @@
 package graft
 
+import java.io.File
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths}
+import java.util.concurrent.{Callable, CountDownLatch, Executors, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
 
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The two session profiles, pinned as literal maps, and the source
   * scan that keeps every session coming from them: a main or a spec
   * that builds its own session drifts (a different default thread
-  * count, a missing required conf) without any other test noticing. */
+  * count, a missing required conf) without any other test noticing.
+  * Likewise for on-disk fixtures: `Harness.fixture`'s write-once
+  * contract, and the scan that keeps temp paths, shutdown hooks and
+  * catalog tables out of every other main source. */
 class HarnessSpec extends AnyFunSuite {
 
   private val required = Map(
@@ -70,5 +76,69 @@ class HarnessSpec extends AnyFunSuite {
         p.toString }
     assert(builders == Seq(Paths.get("src/main/scala/graft/Harness.scala")
       .toString), s"session builders outside Harness: $builders")
+  }
+
+  test("fixture: four threads asking for one (name, dir) at once run the " +
+      "writer once and get one path; another dir gets another path") {
+    val spark = TestSession.spark
+    val writes = new AtomicInteger
+    val start = new CountDownLatch(1)
+    def ask(dir: String): String = Harness.fixture(spark, "spec-once", dir) {
+      p =>
+        writes.incrementAndGet()
+        assert(!new File(p).exists, s"$p exists before its write")
+        Thread.sleep(200) // hold the write open while the others ask
+        Files.createDirectories(Paths.get(p, "part"))
+    }
+    val pool = Executors.newFixedThreadPool(4)
+    try {
+      val asks = (1 to 4).map(_ => pool.submit(new Callable[String] {
+        def call(): String = { start.await(); ask("dir-a") }
+      }))
+      start.countDown()
+      val paths = asks.map(_.get(60, TimeUnit.SECONDS)).toSet
+      assert(writes.get == 1 && paths.size == 1, s"$writes writes: $paths")
+      assert(new File(paths.head, "part").isDirectory)
+      val other = ask("dir-b")
+      assert(writes.get == 2 && !paths(other), other)
+    } finally pool.shutdown()
+  }
+
+  test("fixture: a writer that throws leaves no directory and no cache " +
+      "entry, and the next call writes") {
+    val spark = TestSession.spark
+    var given = Option.empty[String]
+    val e = intercept[IllegalStateException](
+      Harness.fixture(spark, "spec-fail", "dir") { p =>
+        given = Some(p)
+        Files.createDirectories(Paths.get(p, "half-written"))
+        throw new IllegalStateException("writer failed")
+      })
+    assert(e.getMessage == "writer failed")
+    val root = new File(given.get).getParentFile
+    assert(!root.exists, s"$root left behind")
+    var writes = 0
+    val path = Harness.fixture(spark, "spec-fail", "dir") { p =>
+      writes += 1
+      Files.createDirectories(Paths.get(p))
+    }
+    assert(writes == 1 && path != given.get && new File(path).isDirectory)
+  }
+
+  test("temp paths, shutdown hooks and catalog tables stay in their one " +
+      "place: Harness.fixture, and Bucketing for saveAsTable") {
+    val main = sources("src/main/scala")
+    def outside(tokens: Seq[String], home: String) = main.collect {
+      case (p, text) if p != Paths.get(home) &&
+          tokens.exists(text.contains) =>
+        s"$p: ${tokens.filter(text.contains).mkString(", ")}"
+    }
+    val temp = outside(Seq("java.io.tmpdir", "createTempDirectory",
+      "createTempFile", "addShutdownHook", "scala.reflect.io.Directory"),
+      "src/main/scala/graft/Harness.scala")
+    assert(temp.isEmpty, s"on-disk state outside Harness.fixture: $temp")
+    val tables = outside(Seq("saveAsTable"),
+      "src/main/scala/graft/sinks/Bucketing.scala")
+    assert(tables.isEmpty, s"catalog tables outside Bucketing: $tables")
   }
 }

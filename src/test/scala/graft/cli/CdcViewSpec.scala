@@ -8,20 +8,14 @@ import graft.SparkSpec
   * (file → decoded view) end to end on a real LDJSON file. */
 class CdcViewSpec extends SparkSpec {
 
-  private lazy val capture: String = {
-    val p = java.nio.file.Files.createTempFile("graft-cdc-view", ".ldjson")
-    val lines = Seq(
-      """{"begin": 700}""",
-      """{"schema": {"id": "integer"}, "table": "test_table"}""",
-      """{"insert": {"id": 1, "first_name": "Ada"}, "table": "test_table"}""",
-      """{"update": {"id": 1, "first_name": "Ada L"}, "table": "test_table"}""",
-      """{"delete": true, "@": {"id": 1, "first_name": null}, "table": "test_table"}""",
-      """{"insert": {"id": 9}, "table": "pg_temp_73"}""",
-      """{"commit": 700, "t": "2024-01-01 00:00:01"}""")
-    java.nio.file.Files.write(p,
-      lines.mkString("\n").getBytes("UTF-8"))
-    p.toString
-  }
+  private lazy val capture: String = tmpCapture("view", Seq(
+    """{"begin": 700}""",
+    """{"schema": {"id": "integer"}, "table": "test_table"}""",
+    """{"insert": {"id": 1, "first_name": "Ada"}, "table": "test_table"}""",
+    """{"update": {"id": 1, "first_name": "Ada L"}, "table": "test_table"}""",
+    """{"delete": true, "@": {"id": 1, "first_name": null}, "table": "test_table"}""",
+    """{"insert": {"id": 9}, "table": "pg_temp_73"}""",
+    """{"commit": 700, "t": "2024-01-01 00:00:01"}"""))
 
   test("registerCdcView decodes the capture through JsonCdc and drops " +
       "pg_temp noise; kinds, pk extraction and file order are " +
@@ -51,9 +45,10 @@ class CdcViewSpec extends SparkSpec {
   }
 
   private def tmpCapture(tag: String, lines: Seq[String]): String = {
-    val p = java.nio.file.Files.createTempFile(s"graft-cdc-$tag", ".ldjson")
-    java.nio.file.Files.write(p, lines.mkString("\n").getBytes("UTF-8"))
-    p.toString
+    val p = tempFile(s"graft-cdc-$tag", ".ldjson")
+    java.nio.file.Files.write(java.nio.file.Paths.get(p),
+      lines.mkString("\n").getBytes("UTF-8"))
+    p
   }
 
   test("--cdc-wire binlog: a MySQL binlog-JSON capture decodes through " +

@@ -14,22 +14,15 @@ class BucketingSpec extends SparkSpec {
       .select("o_orderkey", "o_custkey", "o_totalprice")
     val customer = Tables.load(spark, sfDir, "customer")
       .select("c_custkey", "c_name")
-    // drop catalog entries AND stale locations (a previous JVM's
-    // in-memory catalog is gone but its warehouse dirs survive)
-    for (t <- Seq("b_orders", "b_customer")) {
-      spark.sql(s"DROP TABLE IF EXISTS $t")
-      val loc = new java.io.File(
-        spark.conf.get("spark.sql.warehouse.dir")
-          .stripPrefix("file:"), t)
-      if (loc.exists())
-        scala.reflect.io.Directory(loc).deleteRecursively()
-    }
-    Bucketing.writeBucketed(orders, "b_orders", "o_custkey", 8)
-    Bucketing.writeBucketed(customer, "b_customer", "c_custkey", 8)
+    val dir = tempDir("graft-bucketing")
+    Bucketing.writeBucketed(orders, "b_orders", "o_custkey", 8,
+      s"$dir/b_orders")
+    Bucketing.writeBucketed(customer, "b_customer", "c_custkey", 8,
+      s"$dir/b_customer")
 
-    val joined = Bucketing.readBucketed(spark, "b_orders")
+    val joined = spark.table("b_orders")
       .hint("merge")
-      .join(Bucketing.readBucketed(spark, "b_customer"),
+      .join(spark.table("b_customer"),
         col("o_custkey") === col("c_custkey"))
     val plan = joined.queryExecution.executedPlan.toString
     // shuffle exchanges print as "Exchange hashpartitioning(...)" /
@@ -64,7 +57,7 @@ class BucketingSpec extends SparkSpec {
     val prev = spark.conf.get(key)
     spark.conf.set(key, "false")
     try {
-      val q = Bucketing.readBucketed(spark, "b_orders")
+      val q = spark.table("b_orders")
         .filter(col("o_custkey") === 7L)
       val plan = q.queryExecution.executedPlan.toString
       assert(plan.contains("SelectedBucketsCount: 1 out of 8"),
@@ -73,7 +66,7 @@ class BucketingSpec extends SparkSpec {
   }
 
   test("aggregation on the bucket key skips its exchange") {
-    val agg = Bucketing.readBucketed(spark, "b_orders")
+    val agg = spark.table("b_orders")
       .groupBy("o_custkey").agg(sum("o_totalprice").as("rev"))
     val plan = agg.queryExecution.executedPlan.toString
     assert(!plan.contains("Exchange hashpartitioning")

@@ -106,8 +106,7 @@ class SinksSpec extends SparkSpec {
   }
 
   test("parquet sink lays out hive partitions when partitionBy is set") {
-    import java.nio.file.Files
-    val dir = Files.createTempDirectory("graft-psink").toString
+    val dir = tempDir("graft-psink")
     val sink = SinkRegistry.create(graft.subscribe.SinkConfig("parquet",
       Map("path" -> dir, "partitionBy" -> "table,kind")))
     sink.write(envelopes, 0L)
@@ -130,8 +129,7 @@ class SinksSpec extends SparkSpec {
 
   test("exactly-once parquet sink: batch replay is a no-op, uncommitted " +
       "batches stay invisible") {
-    import java.nio.file.Files
-    val dir = Files.createTempDirectory("graft-eo-sink").toString
+    val dir = tempDir("graft-eo-sink")
     val sink = SinkRegistry.create(graft.subscribe.SinkConfig(
       "parquet-exactly-once", Map("path" -> dir)))
     val batch = envelopes.filter($"kind" === "insert")
@@ -152,12 +150,11 @@ class SinksSpec extends SparkSpec {
 
   test("a parquet landing restarted under a fresh checkpoint fails " +
       "instead of skipping the batch ids it already holds") {
-    import java.nio.file.Files
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import org.apache.spark.sql.streaming.StreamingQueryException
     import graft.subscribe.{EmitFlags, SinkConfig}
     implicit val sqlCtx = spark.sqlContext
-    val out = Files.createTempDirectory("graft-psink-reset").toString
+    val out = tempDir("graft-psink-reset")
     /** One stream under a fresh checkpoint, one batch per `batches`. */
     def run(batches: Seq[String]*): Unit = {
       val mem = MemoryStream[(String, String, Long)]
@@ -165,7 +162,7 @@ class SinksSpec extends SparkSpec {
           EmitFlags(emitEvent = Some(false)),
           Seq(SinkRegistry.create(SinkConfig("parquet", Map("path" -> out)))))
         .option("checkpointLocation",
-          Files.createTempDirectory("graft-psink-ckpt").toString)
+          tempDir("graft-psink-ckpt"))
         .start()
       try batches.foreach { pks =>
         mem.addData(pks.map(("insert", _, 0L)): _*)
@@ -185,8 +182,7 @@ class SinksSpec extends SparkSpec {
   }
 
   test("a landing directory holding another layout's data fails loudly") {
-    import java.nio.file.Files
-    val dir = Files.createTempDirectory("graft-psink-mixed").toString
+    val dir = tempDir("graft-psink-mixed")
     // an older build's parquet sink appended its files at the root
     envelopes.write.mode("append").parquet(dir)
     val sink = SinkRegistry.create(graft.subscribe.SinkConfig("parquet",
@@ -200,8 +196,7 @@ class SinksSpec extends SparkSpec {
 
   test("snapshot sink maintains current state across microbatches, " +
       "survives batch replay, and versions are time-travelable") {
-    import java.nio.file.Files
-    val dir = Files.createTempDirectory("graft-snap-sink").toString
+    val dir = tempDir("graft-snap-sink")
     val sink = new SnapshotSink(dir)
     def env(ls: Seq[(Long, String)]) =
       JsonCdc.decode(ls.toDF("seq", "line"))
@@ -227,7 +222,6 @@ class SinksSpec extends SparkSpec {
   test("snapshot merges run on the base's scan partitions: several for " +
       "a base split by maxPartitionBytes, one for a tiny one, each with " +
       "one exchange — in the read merge and in a compacting write") {
-    import java.nio.file.Files
     import org.apache.spark.sql.DataFrame
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     // a foreachBatch session of a stateful stream: AQE off and the
@@ -250,7 +244,7 @@ class SinksSpec extends SparkSpec {
     def exchanges(df: DataFrame) = df.queryExecution.executedPlan
       .collect { case e: ShuffleExchangeExec => e }.size
 
-    val big = Files.createTempDirectory("graft-snap-wide").toString
+    val big = tempDir("graft-snap-wide")
     val b0 = (0 until 3000).map(i => (i.toLong, ins(i, s"value-$i")))
     val b1 = Seq((3000L, ins(7, "changed")),
       (3001L, """{"delete": true, "@": {"id": 8}, "table": "t"}"""))
@@ -298,7 +292,7 @@ class SinksSpec extends SparkSpec {
       "version 2 still reads base 0 and its deltas")
 
     s.conf.unset("spark.sql.files.maxPartitionBytes")
-    val tiny = Files.createTempDirectory("graft-snap-narrow").toString
+    val tiny = tempDir("graft-snap-narrow")
     val small = new SnapshotSink(tiny)
     small.write(env(Seq((0L, ins(1, "a")), (1L, ins(2, "b")))), 0L)
     small.write(env(Seq((2L, ins(3, "c")), (3L, ins(4, "d")))), 1L)
@@ -310,8 +304,7 @@ class SinksSpec extends SparkSpec {
 
   test("snapshot retention: a compaction after MaxDeltas deltas; one " +
       "write later only the new base and its delta remain") {
-    import java.nio.file.Files
-    val dir = Files.createTempDirectory("graft-snap-retain").toString
+    val dir = tempDir("graft-snap-retain")
     val sink = new SnapshotSink(dir)
     val k = SnapshotSink.MaxDeltas
     def env(ls: Seq[(Long, String)]) =
@@ -342,8 +335,7 @@ class SinksSpec extends SparkSpec {
 
   test("snapshot sink: a torn version is invisible to current and its " +
       "replay overwrites it") {
-    import java.nio.file.Files
-    val dir = Files.createTempDirectory("graft-snap-torn").toString
+    val dir = tempDir("graft-snap-torn")
     val sink = new SnapshotSink(dir)
     def env(ls: Seq[(Long, String)]) =
       JsonCdc.decode(ls.toDF("seq", "line"))
@@ -362,8 +354,7 @@ class SinksSpec extends SparkSpec {
   }
 
   test("snapshot sink: a batch-id gap fails with the lineage message") {
-    import java.nio.file.Files
-    val dir = Files.createTempDirectory("graft-snap-gap").toString
+    val dir = tempDir("graft-snap-gap")
     val e = intercept[IllegalArgumentException] {
       new SnapshotSink(dir).write(JsonCdc.decode(Seq(
         (0L, """{"insert": {"id": 1, "v": "a"}, "table": "t"}"""))

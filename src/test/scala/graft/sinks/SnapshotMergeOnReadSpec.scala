@@ -1,7 +1,6 @@
 package graft.sinks
 
 import java.io.File
-import java.nio.file.Files
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.scalacheck.{Gen, Prop, Test}
@@ -63,7 +62,7 @@ class SnapshotMergeOnReadSpec extends SparkSpec {
   /** Runs `r` on a fresh sink and checks every version it commits;
     * returns the batches that wrote a base after batch 0. */
   private def play(s: SparkSession, r: Run): Seq[Int] = {
-    val dir = Files.createTempDirectory("graft-snap-mor").toString
+    val dir = tempDir("graft-snap-mor")
     val sink = new SnapshotSink(dir)
     val seqd = r.lines.zipWithIndex.map { case (l, i) => (i.toLong, l) }
     def batch(b: Int) = env(s, seqd.slice(r.cuts(b), r.cuts(b + 1)))

@@ -1,7 +1,6 @@
 package graft.sinks
 
 import java.io.File
-import java.nio.file.Files
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -20,6 +19,7 @@ import org.apache.spark.sql.functions._
   * (SPARK_GRAFT_CPUS sets the core count, SPARK_DRIVER_MEM the heap). */
 object SnapshotScale {
   val updatesPerTrigger = 200
+  private val temps = new graft.TempDirs
 
   def main(args: Array[String]): Unit = {
     val baseRows = args(0).toLong
@@ -51,7 +51,7 @@ object SnapshotScale {
 
   private def run(s: SparkSession, baseRows: Long, triggers: Int,
       quiet: Boolean): Unit = {
-    val dir = Files.createTempDirectory("graft-snap-scale").toString
+    val dir = temps.dir("graft-snap-scale")
     val sink = new SnapshotSink(dir)
     def bytes(f: File): Long =
       if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.map(bytes).sum
@@ -76,6 +76,6 @@ object SnapshotScale {
         s"${!new File(version, "_DELTA").exists()}\t${bytes(new File(dir))}")
     }
     if (!quiet) println(s"# current rows ${sink.current(s).count()}")
-    VersionedState.deleteRecursively(new File(dir))
+    temps.deleteAll()
   }
 }

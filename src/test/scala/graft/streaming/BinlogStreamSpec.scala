@@ -1,6 +1,5 @@
 package graft.streaming
 
-import java.nio.file.Files
 import java.util.concurrent.ConcurrentLinkedQueue
 import scala.jdk.CollectionConverters._
 
@@ -52,7 +51,7 @@ class BinlogStreamSpec extends SparkSpec {
 
   test("file-oplog-json backend routes the reference's ns.pk subjects") {
     BinlogStreamSpec.bus.clear()
-    val dir = Files.createTempDirectory("graft-oplog").toString
+    val dir = tempDir("graft-oplog")
     Seq(
       ("mongo1", 0L, """{"op": "i", "ns": "app.orders", "o": {"_id": 5, "status": "N"}}"""),
       ("mongo1", 1L, """{"op": "u", "ns": "app.orders", "o": {"$set": {"s": "P"}}, "o2": {"_id": 5}}"""),
@@ -125,7 +124,7 @@ class BinlogStreamSpec extends SparkSpec {
     // tablemap events; the Spark analogue is the keyed carry state living
     // in the checkpoint — a restarted query must stamp pk_col onto rows
     // whose tablemap arrived BEFORE the restart.
-    val dir = Files.createTempDirectory("graft-binlog-restart").toString
+    val dir = tempDir("graft-binlog-restart")
     val cfg = BackendConfig("my1", "file-binlog-json",
       Map("path" -> s"$dir/in"))
     def startQuery() = CdcStream.forBackend(spark, cfg)

@@ -1,7 +1,5 @@
 package graft.streaming
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import graft.SparkSpec
 import graft.sinks.{CollectingSink, SinkRegistry}
@@ -125,7 +123,7 @@ class CdcPipelineSpec extends SparkSpec {
 
   test("file-ldjson backend with emitTransaction delivers assembled " +
       "transactions to the configured sinks") {
-    val dir = Files.createTempDirectory("graft-cdc").toString
+    val dir = tempDir("graft-cdc")
     (batch1 ++ batch2).map { case (s, l) => ("pg1", s, l) }
       .toDF("backend", "seq", "line")
       .coalesce(1).write.mode("overwrite").json(s"$dir/in")
@@ -149,7 +147,7 @@ class CdcPipelineSpec extends SparkSpec {
 
   test("generic event re-dispatch stamps type and includes transactions " +
       "(postgresql.js:515-547)") {
-    val dir = Files.createTempDirectory("graft-cdc-ev").toString
+    val dir = tempDir("graft-cdc-ev")
     (batch1 ++ batch2).map { case (s, l) => ("pg1", s, l) }
       .toDF("backend", "seq", "line")
       .coalesce(1).write.mode("overwrite").json(s"$dir/in")

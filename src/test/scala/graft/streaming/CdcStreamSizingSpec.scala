@@ -1,7 +1,5 @@
 package graft.streaming
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -98,7 +96,7 @@ class CdcStreamSizingSpec extends SparkSpec {
 
   test("an unset session runs a jsoncdc query on one state store and " +
       "lands what the batch pipeline emits") {
-    val dir = Files.createTempDirectory("graft-size-pg").toString
+    val dir = tempDir("graft-size-pg")
     files.foreach(publish(dir, _))
     val cfg = jsoncdc(dir)
     val s = unsetSession()
@@ -109,7 +107,7 @@ class CdcStreamSizingSpec extends SparkSpec {
 
   test("backends sharing one capture directory each read their own " +
       "lines: one key, one state store per query") {
-    val dir = Files.createTempDirectory("graft-size-shared").toString
+    val dir = tempDir("graft-size-shared")
     // pg1's and pg2's capture interleaved in the same directory, the
     // same seqs and transaction ids on both
     files.foreach { f => publish(dir, f); publish(dir, f, backend = "pg2") }
@@ -126,7 +124,7 @@ class CdcStreamSizingSpec extends SparkSpec {
   }
 
   test("an unset session runs a binlog query on one state store") {
-    val dir = Files.createTempDirectory("graft-size-binlog").toString
+    val dir = tempDir("graft-size-binlog")
     publish(dir, Seq(
       (0L, s"""{"eventName": "tablemap", "schemaName": "lapidus", "tableName": "orders", "columns": $colsJson}""")),
       backend = "my1")
@@ -143,7 +141,7 @@ class CdcStreamSizingSpec extends SparkSpec {
   }
 
   test("an explicit count wins: the test session's 4 stays 4") {
-    val dir = Files.createTempDirectory("graft-size-explicit").toString
+    val dir = tempDir("graft-size-explicit")
     files.foreach(publish(dir, _))
     assert(spark.conf.getAll.get(partitionsKey).contains("4"))
     assert(run(start(spark, jsoncdc(dir), dir)) == Set(4L))
@@ -152,7 +150,7 @@ class CdcStreamSizingSpec extends SparkSpec {
 
   test("a restart over an existing checkpoint keeps the checkpoint's " +
       "count and lands each event exactly once") {
-    val dir = Files.createTempDirectory("graft-size-restart").toString
+    val dir = tempDir("graft-size-restart")
     val cfg = jsoncdc(dir)
     files.take(2).foreach(publish(dir, _))
     val first = spark.newSession()

@@ -1,7 +1,5 @@
 package graft.streaming
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
@@ -109,7 +107,7 @@ class CdcThroughputSpec extends SparkSpec {
       spark.sparkContext.addSparkListener(listener)
       val q = out.writeStream.format("noop")
         .option("checkpointLocation",
-          Files.createTempDirectory("graft-scale").toString)
+          tempDir("graft-scale"))
         .outputMode("append").start()
       try {
         q.processAllAvailable()

@@ -1,11 +1,8 @@
 package graft.streaming
 
-import java.io.File
-import java.nio.file.Files
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.sinks.{SinkRegistry, VersionedState}
+import graft.sinks.SinkRegistry
 import graft.subscribe.SinkConfig
 
 /** Scale tool (not a spec): the per-batch cost of the two writers whose
@@ -23,6 +20,8 @@ import graft.subscribe.SinkConfig
   * Run: sbt "Test/runMain graft.streaming.DedupScale 500"
   * (SPARK_GRAFT_CPUS sets the core count, SPARK_DRIVER_MEM the heap). */
 object DedupScale {
+  private val temps = new graft.TempDirs
+
   def main(args: Array[String]): Unit = {
     val batches = args.lift(0).map(_.toInt).getOrElse(100)
     val docs = args.lift(1).map(_.toInt).getOrElse(20)
@@ -66,7 +65,7 @@ object DedupScale {
 
   private def run(s: SparkSession, batches: Int, docs: Int,
       quiet: Boolean): Seq[(Double, Double)] = {
-    val dir = Files.createTempDirectory("graft-dedup-scale").toFile
+    val dir = temps.dir("graft-dedup-scale")
     val sink = SinkRegistry.create(SinkConfig("parquet",
       Map("path" -> s"$dir/landing")))
     def timed(f: => Unit): Double = {
@@ -81,7 +80,7 @@ object DedupScale {
       if (!quiet) println(f"$b\t$dedup%.0f\t$parquet%.0f")
       (dedup, parquet)
     }
-    VersionedState.deleteRecursively(dir)
+    temps.deleteAll()
     ms
   }
 }

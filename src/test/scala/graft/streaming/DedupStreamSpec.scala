@@ -16,8 +16,7 @@ class DedupStreamSpec extends SparkSpec {
       "band index; indexes grow by survivors only") {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
-    val dir = java.nio.file.Files
-      .createTempDirectory("dedup_stream").toString
+    val dir = tempDir("dedup_stream")
     val mem = MemoryStream[(Long, String)]
     val q = DedupStream.start(
       mem.toDF().toDF("doc_id", "text"), dir)

@@ -78,8 +78,7 @@ class FunnelStreamSpec extends SparkSpec {
 
   test("funnel state survives a checkpoint restart: the chain resumes " +
       "from stages reached before the crash") {
-    import java.nio.file.Files
-    val dir = Files.createTempDirectory("graft-funnel-restart").toString
+    val dir = tempDir("graft-funnel-restart")
     val schema = "ts TIMESTAMP, event_type STRING, user_id LONG"
     // memory sink cannot recover from a checkpoint; foreachBatch can —
     // append each update batch to parquet, final stage = max over rows

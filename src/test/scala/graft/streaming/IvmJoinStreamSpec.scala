@@ -66,8 +66,7 @@ class IvmJoinStreamSpec extends SparkSpec {
 
   test("three-chunk replay equals the batch recompute — chunks split " +
       "per-pk chains on both sides, exercising every state table") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-ivmjoin").toString
+    val dir = tempDir("graft-ivmjoin")
     val ev = history(23)
     val maxSeq = ev.agg(max(col("seq"))).head.getLong(0)
     val (c1, c2) = (maxSeq / 3, 2 * maxSeq / 3)
@@ -81,8 +80,7 @@ class IvmJoinStreamSpec extends SparkSpec {
   }
 
   test("a re-delivered batch recomputes the same state (idempotent)") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-ivmjoin-redeliver").toString
+    val dir = tempDir("graft-ivmjoin-redeliver")
     val ev = history(31)
     val maxSeq = ev.agg(max(col("seq"))).head.getLong(0)
     val mid = maxSeq / 2
@@ -97,8 +95,7 @@ class IvmJoinStreamSpec extends SparkSpec {
 
   test("attaching mid-history (updates with unknown predecessor) fails " +
       "loudly instead of drifting the view") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-ivmjoin-orphan").toString
+    val dir = tempDir("graft-ivmjoin-orphan")
     val ev = history(47)
     val e = intercept[IllegalArgumentException] {
       IvmJoinStream.processBatch(

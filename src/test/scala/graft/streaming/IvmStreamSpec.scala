@@ -20,7 +20,7 @@ class IvmStreamSpec extends SparkSpec {
 
   test("three-chunk replay equals the batch cdc8 aggregate — chunk " +
       "boundaries split per-pk histories, exercising the state lookup") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-ivm").toString
+    val dir = tempDir("graft-ivm")
     val ev = envelopes.localCheckpoint()
     val maxSeq = ev.agg(max(col("seq"))).head.getLong(0)
     val (c1, c2) = (maxSeq / 3, 2 * maxSeq / 3)
@@ -35,7 +35,7 @@ class IvmStreamSpec extends SparkSpec {
 
   test("a batch-id gap (checkpoint reset against existing state) fails " +
       "loudly instead of silently restarting from empty state") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-ivm3").toString
+    val dir = tempDir("graft-ivm3")
     val ev = envelopes.localCheckpoint()
     IvmStream.processBatch(ev, 0, dir)
     val e = intercept[IllegalArgumentException] {
@@ -46,7 +46,7 @@ class IvmStreamSpec extends SparkSpec {
 
   test("attaching mid-history (updates with unknown predecessor) fails " +
       "loudly instead of booking deltas against NULL status") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-ivm4").toString
+    val dir = tempDir("graft-ivm4")
     val ev = envelopes.localCheckpoint()
     // drop every insert: the first batch then opens with updates whose
     // predecessors neither the batch nor the (empty) state knows
@@ -57,7 +57,7 @@ class IvmStreamSpec extends SparkSpec {
   }
 
   test("state versions older than b-1 are pruned after each commit") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-ivm5").toString
+    val dir = tempDir("graft-ivm5")
     val ev = envelopes.localCheckpoint()
     val maxSeq = ev.agg(max(col("seq"))).head.getLong(0)
     val third = maxSeq / 3
@@ -72,7 +72,7 @@ class IvmStreamSpec extends SparkSpec {
   }
 
   test("a re-delivered batch recomputes the same state (idempotent)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-ivm2").toString
+    val dir = tempDir("graft-ivm2")
     val ev = envelopes.localCheckpoint()
     val maxSeq = ev.agg(max(col("seq"))).head.getLong(0)
     val mid = maxSeq / 2

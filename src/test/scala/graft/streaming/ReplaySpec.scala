@@ -27,7 +27,7 @@ class ReplaySpec extends SparkSpec {
     * reset, must fail and leave the output as it was. */
   private def replaySafe(tables: Seq[String])(deliver: (Long, String) => Unit)(
       output: String => Seq[String]): Unit = {
-    val dir = Files.createTempDirectory("graft-replay").toString
+    val dir = tempDir("graft-replay")
     (0L to 2L).foreach(deliver(_, dir))
     val once = output(dir)
     assert(once.nonEmpty, "degenerate fixture")

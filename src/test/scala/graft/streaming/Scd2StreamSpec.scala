@@ -23,7 +23,7 @@ class Scd2StreamSpec extends SparkSpec {
   test("three-chunk replay equals the full SCD2 rebuild — the " +
       "interleaved fixture's epochs make every chunk boundary cut " +
       "chains mid-version") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-scd2s").toString
+    val dir = tempDir("graft-scd2s")
     val ev = events.localCheckpoint()
     val maxSeq = ev.agg(max(col("seq"))).head.getLong(0)
     val (c1, c2) = (maxSeq / 3, 2 * maxSeq / 3)
@@ -37,7 +37,7 @@ class Scd2StreamSpec extends SparkSpec {
   }
 
   test("a re-delivered batch recomputes the same table (idempotent)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-scd2r").toString
+    val dir = tempDir("graft-scd2r")
     val ev = events.localCheckpoint()
     val maxSeq = ev.agg(max(col("seq"))).head.getLong(0)
     val cut = maxSeq / 2
@@ -51,7 +51,7 @@ class Scd2StreamSpec extends SparkSpec {
 
   test("a batch-id gap fails loudly instead of silently restarting " +
       "history from empty state") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-scd2g").toString
+    val dir = tempDir("graft-scd2g")
     val ev = events.localCheckpoint()
     Scd2Stream.processBatch(ev, 0, dir)
     val e = intercept[IllegalArgumentException] {
@@ -61,7 +61,7 @@ class Scd2StreamSpec extends SparkSpec {
   }
 
   test("versions older than b-1 are pruned after each commit") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-scd2p").toString
+    val dir = tempDir("graft-scd2p")
     val ev = events.localCheckpoint()
     val maxSeq = ev.agg(max(col("seq"))).head.getLong(0)
     val cut = maxSeq / 2

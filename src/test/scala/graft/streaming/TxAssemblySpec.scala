@@ -64,8 +64,7 @@ class TxAssemblySpec extends SparkSpec {
     val mem = MemoryStream[(String, Long, String)]
     val out = assemble(mem.toDF().toDF("backend", "seq", "line"))
     val name = s"txout_${System.nanoTime()}"
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("graft-tx-ckpt").toString
+    val ckpt = tempDir("graft-tx-ckpt")
     val query = out.writeStream.format("memory").queryName(name)
       .option("checkpointLocation", ckpt).outputMode("append").start()
     try {

@@ -21,7 +21,10 @@ import org.apache.spark.sql.SparkSession
   *     whatever either place says.
   *
   * Both apply `SparkEntry.requiredConfs` at builder time:
-  * `spark.sql.extensions` is a static conf.
+  * `spark.sql.extensions` is a static conf, and the `file:` filesystem
+  * classes (`graft.fs.NioLocalFileSystem`, no `chmod`/`readlink`
+  * processes) must be in the Hadoop conf before the first `file:`
+  * access fills Hadoop's `FileSystem` cache.
   *
   * [[fixture]] is the one place a batch query puts files on disk: the
   * synthetic CDC captures, the bucketed tables, the schema generations

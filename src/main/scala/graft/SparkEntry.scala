@@ -19,6 +19,15 @@ object SparkEntry {
     *     read the raw long and manage precision explicitly. Harmless on
     *     the current TIMESTAMP(MICROS) fixture — Tables.events handles
     *     both generations.
+    *   - the `file:` filesystem, for `FileSystem` and `FileContext`
+    *     alike: `graft.fs.NioLocalFileSystem`/`NioLocalFs`, Hadoop's
+    *     checksummed local filesystem without the `chmod`/`readlink`
+    *     process it starts per created file and per link-status lookup
+    *     when the native hadoop library is missing (about 70 per
+    *     streaming trigger). Hadoop's `FileSystem` cache keeps the class
+    *     of the first `file:` access in the JVM, so a `file:`
+    *     `FileSystem` cached before the first session keeps the stock
+    *     class: slower, not wrong.
     */
   val requiredConfs: Map[String, String] = Map(
     "spark.sql.legacy.parquet.nanosAsLong" -> "true",
@@ -26,7 +35,9 @@ object SparkEntry {
     "spark.sql.adaptive.enabled" -> "true",
     // native kernels for SQL users + the per-key top-k plan rewrite
     // (graft.plans.TopKPerKey); queries stay correct without it
-    "spark.sql.extensions" -> "graft.functions.GraftExtensions")
+    "spark.sql.extensions" -> "graft.functions.GraftExtensions",
+    "spark.hadoop.fs.file.impl" -> "graft.fs.NioLocalFileSystem",
+    "spark.hadoop.fs.AbstractFileSystem.file.impl" -> "graft.fs.NioLocalFs")
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =

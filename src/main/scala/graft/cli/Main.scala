@@ -1,6 +1,7 @@
 package graft.cli
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.json4s._
 import org.json4s.jackson.JsonMethods
 
@@ -523,14 +524,15 @@ object Main {
     }
     val spark = Harness.cliSession("graft-cdc")
     // one streaming query per backend (reference: worker per backend)
-    val queries = cfg.backends.map { b =>
-      val env = CdcStream.forBackend(spark, b)
-      val sinks = b.sinks.map(SinkRegistry.create)
-      SinkRegistry.attach(env, b.emit, sinks)
-        .option("checkpointLocation",
-          b.options.getOrElse("checkpoint", s"/tmp/graft-ckpt-${b.name}"))
-        .start()
-    }
-    queries.foreach(_.awaitTermination())
+    cfg.backends.map(startBackend(spark, _)).foreach(_.awaitTermination())
   }
+
+  /** Backend `b`'s streaming query, started: its stream into its sinks
+    * on its checkpoint, named after the backend. */
+  def startBackend(spark: SparkSession, b: BackendConfig): StreamingQuery =
+    SinkRegistry.attach(CdcStream.forBackend(spark, b), b.emit,
+        b.sinks.map(SinkRegistry.create))
+      .queryName(b.name)
+      .option("checkpointLocation", b.checkpoint)
+      .start()
 }

@@ -52,20 +52,21 @@ case class QueryHealth(
 
 /** O5/O23 — a StreamingQueryListener that keeps a per-query health map
   * and logs progress; attach once per session (cli.Main does). Each
-  * trigger's line carries its latency, the `addBatch` phase, and the
-  * state-store instance count and commit ms summed over the query's
-  * stateful operators (0 for a stateless query). `log` is injectable so
-  * tests capture lines instead of reading stderr. */
+  * trigger's line carries its latency, the `latestOffset`, `addBatch`,
+  * `walCommit` and `commitOffsets` phases (0 when the progress omits
+  * one), and the state-store instance count and commit ms summed over
+  * the query's stateful operators (0 for a stateless query). A query
+  * without a name goes by its id. `log` is injectable so tests capture
+  * lines instead of reading stderr. */
 class GraftQueryListener(log: String => Unit = s => Console.err.println(s))
     extends StreamingQueryListener {
 
   private val state = TrieMap.empty[UUID, QueryHealth]
 
   override def onQueryStarted(e: QueryStartedEvent): Unit = {
-    state.put(e.id, QueryHealth(
-      Option(e.name).getOrElse(e.id.toString), 0, 0, 0,
-      connected = true, "started"))
-    log(s"[graft] query ${e.name} (${e.id}) started")
+    val name = Option(e.name).getOrElse(e.id.toString)
+    state.put(e.id, QueryHealth(name, 0, 0, 0, connected = true, "started"))
+    log(s"[graft] query $name (${e.id}) started")
   }
 
   override def onQueryProgress(e: QueryProgressEvent): Unit = {
@@ -83,7 +84,10 @@ class GraftQueryListener(log: String => Unit = s => Console.err.println(s))
       lastEvent = "progress"))
     log(s"[graft] ${prev.name} batch=${p.batchId} " +
       s"rows=${p.numInputRows} latencyMs=$latency " +
+      s"latestOffsetMs=${phaseMs("latestOffset")} " +
       s"addBatchMs=${phaseMs("addBatch")} " +
+      s"walCommitMs=${phaseMs("walCommit")} " +
+      s"commitOffsetsMs=${phaseMs("commitOffsets")} " +
       s"stateStores=${p.stateOperators.map(_.numStateStoreInstances).sum} " +
       s"stateCommitMs=${p.stateOperators.map(_.commitTimeMs).sum}")
   }

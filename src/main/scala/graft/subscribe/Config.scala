@@ -67,6 +67,11 @@ case class BackendConfig(
     source: String = "", // "file" | "kafka"
     wire: String = "") { // "jsoncdc" | "binlog" | "oplog"
 
+  /** The streaming checkpoint `cli.Main -c` starts this backend's query
+    * on: options.checkpoint, else one derived from the name. */
+  def checkpoint: String =
+    options.getOrElse("checkpoint", s"/tmp/graft-ckpt-$name")
+
   /** Transport after legacy-kind resolution ("" if unresolvable). */
   def resolvedSource: String =
     if (source.nonEmpty) source
@@ -107,9 +112,30 @@ object ConfigValidation {
   val supportedSinks: Set[String] =
     Set("console", "collect", "subject-routing", "parquet",
       "parquet-exactly-once", "snapshot")
-  /** Sinks that land files under `options.path`. */
+  /** Sinks that land files under `options.path`: each a versioned table
+    * (`VersionedState`), whose writer takes a committed `batch=<b>` it
+    * finds there for its own replay. */
   private val pathSinks: Set[String] =
     Set("parquet", "parquet-exactly-once", "snapshot")
+
+  /** `path` as a location to compare: a trailing or doubled slash and a
+    * `file:` scheme name no other location. A string Hadoop cannot parse
+    * as a path compares as itself. */
+  private def location(path: String): String =
+    scala.util.Try(new org.apache.hadoop.fs.Path(path.trim).toUri).map {
+      uri =>
+        if (uri.getScheme == null || uri.getScheme == "file") uri.getPath
+        else uri.toString
+    }.getOrElse(path.trim)
+
+  /** One error per location that more than one of `owners` uses. */
+  private def shared(what: String, owners: Seq[(String, String)])
+      : Seq[String] =
+    owners.groupBy { case (_, path) => location(path) }.toSeq.sortBy(_._1)
+      .collect { case (loc, os) if os.size > 1 =>
+        s"$what share one path ($loc): ${os.map(_._1).mkString(", ")}"
+      }
+
   /** Errors for each option `k` of `limits` set in `options` to anything
     * but a positive integer up to its limit. The limits are the readers'
     * parses: `SinkRegistry` reads the console sink's `numRows` and
@@ -131,11 +157,25 @@ object ConfigValidation {
     * at least one backend; every backend kind must have a worker; every
     * sink kind must resolve in the registry, and a file-landing sink
     * names its path; numeric options are positive integers; a kafka
-    * backend reads one topic. */
+    * backend reads one topic. Backend names are unique, and no two
+    * backends share a checkpoint nor two file-landing sinks a path:
+    * the second writer would take the first's committed versions for
+    * replays of its own and drop its rows without an error. */
   def validate(cfg: EngineConfig): Seq[String] = {
     val errs = Seq.newBuilder[String]
     if (cfg.backends.isEmpty)
       errs += "Lapidus requires at least one backend to run"
+    cfg.backends.groupBy(_.name).toSeq.sortBy(_._1)
+      .collect { case (n, bs) if bs.size > 1 => n }
+      .foreach(n => errs += s"duplicate backend name: $n")
+    errs ++= shared("backend checkpoints",
+      cfg.backends.map(b => b.name -> b.checkpoint))
+    errs ++= shared("file-landing sinks", for {
+      b <- cfg.backends
+      s <- b.sinks
+      if pathSinks.contains(s.kind)
+      p <- s.options.get("path").filter(_.trim.nonEmpty)
+    } yield s"${b.name}/${s.kind}" -> p)
     cfg.backends.foreach { b =>
       if (b.name.isEmpty) errs += "backend missing name"
       val src = b.resolvedSource

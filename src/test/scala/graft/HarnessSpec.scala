@@ -21,7 +21,9 @@ class HarnessSpec extends AnyFunSuite {
     "spark.sql.legacy.parquet.nanosAsLong" -> "true",
     "spark.sql.session.timeZone" -> "UTC",
     "spark.sql.adaptive.enabled" -> "true",
-    "spark.sql.extensions" -> "graft.functions.GraftExtensions")
+    "spark.sql.extensions" -> "graft.functions.GraftExtensions",
+    "spark.hadoop.fs.file.impl" -> "graft.fs.NioLocalFileSystem",
+    "spark.hadoop.fs.AbstractFileSystem.file.impl" -> "graft.fs.NioLocalFs")
 
   test("offline profile: local[n], n shuffle partitions, UI off, the " +
       "required confs") {

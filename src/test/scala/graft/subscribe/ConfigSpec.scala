@@ -88,6 +88,52 @@ class ConfigSpec extends AnyFunSuite {
     assert(errs(SinkConfig("console")).isEmpty)
   }
 
+  private def fileBackend(name: String, sinks: SinkConfig*) =
+    BackendConfig(name, kind = "file-ldjson", options = Map("path" -> "/x"),
+      sinks = sinks)
+
+  test("two backends with one name are refused: they would share a " +
+      "checkpoint") {
+    val errs = ConfigValidation.validate(EngineConfig(Seq(
+      fileBackend("pg1"), fileBackend("pg2"), fileBackend("pg1"))))
+    assert(errs == Seq("duplicate backend name: pg1",
+      "backend checkpoints share one path (/tmp/graft-ckpt-pg1): pg1, pg1"))
+  }
+
+  test("two backends on one checkpoint path are refused, however the " +
+      "path is spelled") {
+    def on(name: String, ckpt: String) = fileBackend(name).copy(
+      options = Map("path" -> "/x", "checkpoint" -> ckpt))
+    assert(ConfigValidation.validate(EngineConfig(Seq(
+      on("a", "/ck/a"), on("b", "/ck/b")))).isEmpty)
+    assert(ConfigValidation.validate(EngineConfig(Seq(
+      on("a", "/ck/a"), on("b", "file:///ck//a/")))) ==
+      Seq("backend checkpoints share one path (/ck/a): a, b"))
+    // paths Hadoop cannot parse are compared as written, not thrown on
+    assert(ConfigValidation.validate(EngineConfig(Seq(
+      on("a", ""), on("b", "x:y:/z")))).isEmpty)
+    // an explicit checkpoint onto another backend's derived one
+    assert(ConfigValidation.validate(EngineConfig(Seq(
+      fileBackend("a"), on("b", "/tmp/graft-ckpt-a")))) ==
+      Seq("backend checkpoints share one path (/tmp/graft-ckpt-a): a, b"))
+  }
+
+  test("two file-landing sinks on one path are refused, in one backend " +
+      "or across two; other sinks may repeat") {
+    def at(kind: String, path: String) = SinkConfig(kind, Map("path" -> path))
+    def errs(bs: BackendConfig*) = ConfigValidation.validate(EngineConfig(bs))
+    assert(errs(fileBackend("a", at("parquet-exactly-once", "/out/a"),
+      at("snapshot", "/out/s"), SinkConfig("console"),
+      SinkConfig("console"))).isEmpty)
+    assert(errs(fileBackend("a", at("parquet-exactly-once", "/out/a"),
+      at("snapshot", "/out/a/"))) ==
+      Seq("file-landing sinks share one path (/out/a): " +
+        "a/parquet-exactly-once, a/snapshot"))
+    assert(errs(fileBackend("a", at("parquet", "/out/p")),
+      fileBackend("b", at("parquet", "/out/p"))) ==
+      Seq("file-landing sinks share one path (/out/p): a/parquet, b/parquet"))
+  }
+
   /** Validation errors of one file backend with `options` and `sink`. */
   private def fileBackendErrs(options: Map[String, String],
       sink: SinkConfig = SinkConfig("console")): Seq[String] =

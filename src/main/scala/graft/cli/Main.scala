@@ -14,15 +14,21 @@ import graft.subscribe._
   * `-c config.json` starts one streaming query per configured backend;
   * `-t` parses + validates the config and exits.
   *
-  * Config JSON shape (source × wire preferred; legacy fused "kind"
-  * still accepted):
+  * Config JSON shape: `source` (file | kafka) names a backend's
+  * transport, `wire` (jsoncdc | binlog | oplog) its decoder, and
+  * `options.checkpoint` its streaming checkpoint, which is required:
   * {"backends": [{"name": "pg1", "source": "file", "wire": "jsoncdc",
-  *   "options": {"path": "/data/cdc"}, "excludeTables": ["audit"],
+  *   "options": {"path": "/data/cdc", "checkpoint": "/ckpt/pg1"},
+  *   "excludeTables": ["audit"],
   *   "emit": {"emitEvents": true, "emitSchema": false},
   *   "sinks": [{"kind": "console"}]}]}
+  * A sink `kind` is one of `SinkRegistry.kinds`: console,
+  * subject-routing, parquet, parquet-exactly-once or snapshot.
   */
 object Main {
 
+  /** `-c`'s config JSON. Throws IllegalArgumentException on malformed
+    * JSON and on a backend `kind` field. */
   def parseConfig(json: String): EngineConfig = {
     implicit val fmts: Formats = DefaultFormats
     // malformed JSON throws a /Parse/-matching message, not a raw
@@ -33,9 +39,12 @@ object Main {
         s"Parse error in config JSON: ${e.getMessage}") }
     val backends = (ast \ "backends") match {
       case JArray(items) => items.map { b =>
+        val name = (b \ "name").extractOrElse[String]("")
+        if ((b \ "kind") != JNothing)
+          throw new IllegalArgumentException(s"$name: kind is not a " +
+            s"backend field: ${ConfigValidation.axesHint}")
         BackendConfig(
-          name = (b \ "name").extractOrElse[String](""),
-          kind = (b \ "kind").extractOrElse[String](""),
+          name = name,
           options = (b \ "options").extractOrElse[Map[String, String]](Map()),
           excludeTables =
             (b \ "excludeTables").extractOrElse[Seq[String]](Nil),
@@ -45,7 +54,7 @@ object Main {
               (sc \ "kind").extractOrElse[String](""),
               (sc \ "options").extractOrElse[Map[String, String]](Map()),
               (sc \ "kinds").extractOrElse[Seq[String]](Nil)))
-            case _ => Seq(SinkConfig("console"))
+            case _ => Seq(SinkRegistry.default)
           },
           source = (b \ "source").extractOrElse[String](""),
           wire = (b \ "wire").extractOrElse[String](""))
@@ -510,14 +519,16 @@ object Main {
       sys.exit(1)
     }
     val validateOnly = args.contains("-t")
-    val cfg = parseConfig(
-      new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(cfgPath))))
-    val errors = ConfigValidation.validate(cfg)
-    if (errors.nonEmpty) {
+    def refuse(errors: Seq[String]): Nothing = {
       errors.foreach(e => System.err.println(s"config error: $e"))
       sys.exit(1)
     }
+    val cfg =
+      try parseConfig(new String(java.nio.file.Files.readAllBytes(
+        java.nio.file.Paths.get(cfgPath))))
+      catch { case e: IllegalArgumentException => refuse(Seq(e.getMessage)) }
+    val errors = ConfigValidation.validate(cfg)
+    if (errors.nonEmpty) refuse(errors)
     if (validateOnly) {
       println(s"config OK: ${cfg.backends.size} backend(s)")
       return
@@ -528,11 +539,12 @@ object Main {
   }
 
   /** Backend `b`'s streaming query, started: its stream into its sinks
-    * on its checkpoint, named after the backend. */
+    * on its checkpoint (`options.checkpoint`, which validation
+    * requires), named after the backend. */
   def startBackend(spark: SparkSession, b: BackendConfig): StreamingQuery =
     SinkRegistry.attach(CdcStream.forBackend(spark, b), b.emit,
         b.sinks.map(SinkRegistry.create))
       .queryName(b.name)
-      .option("checkpointLocation", b.checkpoint)
+      .option("checkpointLocation", b.options("checkpoint"))
       .start()
 }

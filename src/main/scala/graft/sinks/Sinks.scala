@@ -1,8 +1,5 @@
 package graft.sinks
 
-import java.util.concurrent.ConcurrentLinkedQueue
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.network.util.JavaUtils
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
@@ -41,21 +38,12 @@ class ConsoleSink(numRows: Int = 20) extends EventSink {
     batch.show(numRows, truncate = false)
 }
 
-/** Test sink: collects rows in-process (the replacement for the
-  * reference's live-DB assertions — SURVEY.md §5). */
-class CollectingSink extends EventSink {
-  val name = "collect"
-  val rows = new ConcurrentLinkedQueue[Row]()
-  def write(batch: DataFrame, batchId: Long): Unit =
-    batch.collect().foreach(rows.add)
-  def collected: Seq[Row] = rows.asScala.toSeq
-}
-
 /** O18 — NATS-style subject routing with optional cache-bus messages.
   * subject = schema.table.pk (nats.js:17-21); cache bus publishes
   * {prefix}.{populate|invalidate|purge}.{subject} by kind (nats.js:25-28).
-  * The producer is pluggable so tests inject an in-memory collector and
-  * production injects a real NATS/Kafka client.
+  * The producer is pluggable: tests inject an in-memory collector, an
+  * embedding application a real NATS/Kafka client, and the config kind
+  * `subject-routing` a stdout publisher (SinkRegistry).
   */
 class SubjectRoutingSink(
     publisherFactory: () => (String, String) => Unit,
@@ -231,30 +219,45 @@ object SnapshotSink {
   private val DeltaTag = "_DELTA"
 }
 
-/** O20 — plugin registry: resolve a SinkConfig to an implementation. */
+/** O20 — plugin registry: the sink kinds a config may name, each
+  * resolved from its SinkConfig to an implementation. */
 object SinkRegistry {
-  def create(cfg: SinkConfig): EventSink = {
-    val base = createBase(cfg)
-    if (cfg.kinds.isEmpty) base else new KindScopedSink(base, cfg.kinds)
-  }
+  /** A sink kind: whether it lands a versioned table under
+    * `options.path`, the options its builder reads with `.toInt`, and
+    * the builder. */
+  case class Kind(lands: Boolean, intOptions: Seq[String],
+      build: SinkConfig => EventSink)
 
-  private def createBase(cfg: SinkConfig): EventSink = cfg.kind match {
-    case "console" => new ConsoleSink(
-      cfg.options.getOrElse("numRows", "20").toInt)
-    case "collect" => new CollectingSink
-    case "parquet" => new IdempotentParquetSink(cfg.options("path"),
+  private val landing = Kind(lands = true, Nil, cfg =>
+    new IdempotentParquetSink(cfg.options("path"),
       cfg.options.get("partitionBy").toSeq
-        .flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty))
-    case "parquet-exactly-once" =>
-      new IdempotentParquetSink(cfg.options("path"))
-    case "snapshot" => new SnapshotSink(cfg.options("path"))
-    case "subject-routing" =>
+        .flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty)))
+
+  /** Every sink kind by its config name. `parquet` and
+    * `parquet-exactly-once` name one landing. `subject-routing` ships a
+    * stdout publisher (`[publish] <subject> <payload>` lines); an
+    * embedding application builds `SubjectRoutingSink` with its own
+    * NATS/Kafka producer factory and attaches it directly. */
+  val kinds: Map[String, Kind] = Map(
+    "console" -> Kind(lands = false, Seq("numRows"), cfg =>
+      new ConsoleSink(cfg.options.getOrElse("numRows", "20").toInt)),
+    "subject-routing" -> Kind(lands = false, Nil, cfg =>
       new SubjectRoutingSink(
         () => (s, p) => println(s"[publish] $s $p"),
         cfg.options.getOrElse("schema", "public"),
-        cfg.options.get("cachePrefix"))
-    case other => throw new IllegalArgumentException(
-      s"invalid plugin: $other")
+        cfg.options.get("cachePrefix"))),
+    "parquet" -> landing,
+    "parquet-exactly-once" -> landing,
+    "snapshot" -> Kind(lands = true, Nil, cfg =>
+      new SnapshotSink(cfg.options("path"))))
+
+  /** The sink of a backend whose config names none. */
+  val default: SinkConfig = SinkConfig("console")
+
+  def create(cfg: SinkConfig): EventSink = {
+    val base = kinds.getOrElse(cfg.kind, throw new IllegalArgumentException(
+      s"invalid plugin: ${cfg.kind}")).build(cfg)
+    if (cfg.kinds.isEmpty) base else new KindScopedSink(base, cfg.kinds)
   }
 
   /** Fan a (streaming) envelope frame out to all sinks via one

@@ -39,13 +39,13 @@ object CdcStream {
   // (maxFilesPerTrigger is the FILE transport's batch cap; Kafka's
   // analogue, maxOffsetsPerTrigger, passes through on purpose)
   private val engineOptions =
-    Set("wire", "txTimeoutMs", "checkpoint", "maxFilesPerTrigger")
+    Set("txTimeoutMs", "checkpoint", "maxFilesPerTrigger")
 
   private val shufflePartitions = "spark.sql.shuffle.partitions"
 
   /** Build the full pipeline for one configured backend. Transport and
-    * wire format are independent (BackendConfig.resolvedSource ×
-    * resolvedWire): ANY wire format rides ANY transport through the same
+    * wire format are independent (BackendConfig.source × wire): ANY
+    * wire format rides ANY transport through the same
     * (backend, seq, line) contract, the reference's
     * one-worker-per-backend-of-any-type model (lapidus.js:88-109 — the
     * master forks identically for pg/mysql/mongo workers). The caller
@@ -72,7 +72,7 @@ object CdcStream {
   def forBackend(spark: SparkSession, cfg: BackendConfig): DataFrame = {
     if (!spark.conf.getAll.contains(shufflePartitions))
       spark.conf.set(shufflePartitions, "1")
-    val lines = cfg.resolvedSource match {
+    val lines = cfg.source match {
       // Kafka callers pass maxOffsetsPerTrigger for the same batch cap
       case "file" => fileLines(spark, cfg.options("path"),
           cfg.options.getOrElse("maxFilesPerTrigger", "16").toInt)
@@ -109,7 +109,7 @@ object CdcStream {
     * keyed tablemap carry (BinlogStream); Mongo oplog is stateless. All
     * three emit the canonical envelope surface. */
   def fromLines(lines: DataFrame, cfg: BackendConfig): DataFrame =
-    cfg.resolvedWire match {
+    cfg.wire match {
       case "jsoncdc" =>
         CdcPipeline.run(
           TxAssembly.decodeToEvents(lines, cfg.excludeTables),

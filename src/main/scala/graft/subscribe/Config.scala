@@ -1,5 +1,7 @@
 package graft.subscribe
 
+import graft.sinks.SinkRegistry
+
 /** Subscription configuration — the reference's per-backend config surface
   * (README.md:100-160, validation src/lapidus.js:51-86, cascade semantics
   * src/postgresql.js:132-170).
@@ -53,54 +55,17 @@ case class SinkConfig(
   * (lapidus.js:88-109 — the master forks the same way for pg/mysql/mongo;
   * only the decode inside the worker differs): `source` picks the
   * transport (file | kafka), `wire` picks the decoder
-  * (jsoncdc | binlog | oplog). The legacy fused `kind` values
-  * (file-ldjson, kafka, file-binlog-json, file-oplog-json) are still
-  * accepted and resolve onto the two axes.
+  * (jsoncdc | binlog | oplog). `options.checkpoint` names the streaming
+  * checkpoint, which `cli.Main -c` requires.
   */
 case class BackendConfig(
     name: String,
-    kind: String = "", // legacy fused kind; prefer source × wire
+    source: String = "", // "file" | "kafka"
+    wire: String = "", // "jsoncdc" | "binlog" | "oplog"
     options: Map[String, String] = Map.empty,
     excludeTables: Seq[String] = Nil,
     emit: EmitFlags = EmitFlags(),
-    sinks: Seq[SinkConfig] = Seq(SinkConfig("console")),
-    source: String = "", // "file" | "kafka"
-    wire: String = "") { // "jsoncdc" | "binlog" | "oplog"
-
-  /** The streaming checkpoint `cli.Main -c` starts this backend's query
-    * on: options.checkpoint, else one derived from the name. */
-  def checkpoint: String =
-    options.getOrElse("checkpoint", s"/tmp/graft-ckpt-$name")
-
-  /** Transport after legacy-kind resolution ("" if unresolvable). */
-  def resolvedSource: String =
-    if (source.nonEmpty) source
-    else kind match {
-      case "file-ldjson" | "file-binlog-json" | "file-oplog-json" => "file"
-      case "kafka" => "kafka"
-      case _ => ""
-    }
-
-  /** Wire format after legacy-kind resolution. Precedence: explicit
-    * `wire` field > options("wire") where no fused kind binds it (the
-    * kafka escape hatch, and new-axes configs with kind="" — the file
-    * kinds always bound their wire to the kind, so a stray options.wire
-    * on them must stay inert) > the kind's historical binding. */
-  def resolvedWire: String =
-    if (wire.nonEmpty) wire
-    else {
-      val escapeHatch =
-        if (kind == "kafka" || kind.isEmpty)
-          options.get("wire").filter(_.nonEmpty)
-        else None
-      escapeHatch.getOrElse(kind match {
-        case "file-ldjson" | "kafka" => "jsoncdc"
-        case "file-binlog-json" => "binlog"
-        case "file-oplog-json" => "oplog"
-        case _ => ""
-      })
-    }
-}
+    sinks: Seq[SinkConfig] = Seq(SinkRegistry.default))
 
 case class EngineConfig(backends: Seq[BackendConfig])
 
@@ -109,14 +74,15 @@ object ConfigValidation {
   // passes `-t` validation must not crash at daemon start
   val supportedSources: Set[String] = Set("file", "kafka")
   val supportedWires: Set[String] = Set("jsoncdc", "binlog", "oplog")
-  val supportedSinks: Set[String] =
-    Set("console", "collect", "subject-routing", "parquet",
-      "parquet-exactly-once", "snapshot")
-  /** Sinks that land files under `options.path`: each a versioned table
-    * (`VersionedState`), whose writer takes a committed `batch=<b>` it
-    * finds there for its own replay. */
-  private val pathSinks: Set[String] =
-    Set("parquet", "parquet-exactly-once", "snapshot")
+
+  private def oneOf(values: Set[String]): String =
+    values.toSeq.sorted.mkString("(", "|", ")")
+
+  /** How a backend names its transport and decoder: the hint for a
+    * config that names them any other way. */
+  val axesHint: String =
+    s"set the backend's source field ${oneOf(supportedSources)} and its " +
+      s"wire field ${oneOf(supportedWires)}"
 
   /** `path` as a location to compare: a trailing or doubled slash and a
     * `file:` scheme name no other location. A string Hadoop cannot parse
@@ -128,6 +94,9 @@ object ConfigValidation {
         else uri.toString
     }.getOrElse(path.trim)
 
+  /** A URI scheme (`file:`, `hdfs:`, `s3a:`) at the start of a path. */
+  private val scheme = "^[A-Za-z][A-Za-z0-9+.-]*:".r
+
   /** One error per location that more than one of `owners` uses. */
   private def shared(what: String, owners: Seq[(String, String)])
       : Seq[String] =
@@ -138,7 +107,7 @@ object ConfigValidation {
 
   /** Errors for each option `k` of `limits` set in `options` to anything
     * but a positive integer up to its limit. The limits are the readers'
-    * parses: `SinkRegistry` reads the console sink's `numRows` and
+    * parses: `SinkRegistry` reads a sink kind's `intOptions` and
     * `CdcStream.forBackend` a backend's `maxFilesPerTrigger` with
     * `.toInt`, and its `txTimeoutMs` with `.toLong`. */
   private def numericErrors(options: Map[String, String], what: String,
@@ -148,19 +117,25 @@ object ConfigValidation {
         .map(v => s"$what option $k must be a positive integer: $v")
     }
 
+  /** A non-blank value of option `k`. */
+  private def nonBlank(options: Map[String, String], k: String)
+      : Option[String] =
+    options.get(k).filter(_.trim.nonEmpty)
+
   /** Envelope kinds a sink may subscribe to (SinkConfig.kinds). */
   val supportedKinds: Set[String] = Set(
     "insert", "update", "delete", "schema", "beginTransaction",
     "commitTransaction", "transaction", "event")
 
   /** Aggregate-errors validation in the spirit of lapidus.js:51-86:
-    * at least one backend; every backend kind must have a worker; every
-    * sink kind must resolve in the registry, and a file-landing sink
-    * names its path; numeric options are positive integers; a kafka
-    * backend reads one topic. Backend names are unique, and no two
-    * backends share a checkpoint nor two file-landing sinks a path:
-    * the second writer would take the first's committed versions for
-    * replays of its own and drop its rows without an error. */
+    * at least one backend; every backend names a supported `source` and
+    * `wire` and an `options.checkpoint`; every sink kind resolves in
+    * `SinkRegistry`, and a file-landing sink names a local path;
+    * numeric options are positive integers; a kafka backend reads one
+    * topic. Backend names are unique, and no two backends share a
+    * checkpoint nor two file-landing sinks a path: the second writer
+    * would take the first's committed versions for replays of its own
+    * and drop its rows without an error. */
   def validate(cfg: EngineConfig): Seq[String] = {
     val errs = Seq.newBuilder[String]
     if (cfg.backends.isEmpty)
@@ -168,49 +143,62 @@ object ConfigValidation {
     cfg.backends.groupBy(_.name).toSeq.sortBy(_._1)
       .collect { case (n, bs) if bs.size > 1 => n }
       .foreach(n => errs += s"duplicate backend name: $n")
-    errs ++= shared("backend checkpoints",
-      cfg.backends.map(b => b.name -> b.checkpoint))
+    errs ++= shared("backend checkpoints", for {
+      b <- cfg.backends
+      c <- nonBlank(b.options, "checkpoint")
+    } yield b.name -> c)
     errs ++= shared("file-landing sinks", for {
       b <- cfg.backends
       s <- b.sinks
-      if pathSinks.contains(s.kind)
-      p <- s.options.get("path").filter(_.trim.nonEmpty)
+      if SinkRegistry.kinds.get(s.kind).exists(_.lands)
+      p <- nonBlank(s.options, "path")
     } yield s"${b.name}/${s.kind}" -> p)
     cfg.backends.foreach { b =>
       if (b.name.isEmpty) errs += "backend missing name"
-      val src = b.resolvedSource
-      val wireFmt = b.resolvedWire
-      if (src.isEmpty && wireFmt.isEmpty)
-        // an unknown fused kind resolves to neither axis — report it as
-        // the reference would (lapidus.js:58-63 "invalid backend type")
-        errs += s"${b.name}: invalid backend type: ${b.kind}"
-      else {
-        if (!supportedSources.contains(src))
-          errs += s"${b.name}: invalid backend source: $src"
-        if (!supportedWires.contains(wireFmt))
-          errs += s"${b.name}: invalid backend wire format: $wireFmt"
-      }
+      if (b.source.isEmpty)
+        errs += s"${b.name}: backend requires source " +
+          oneOf(supportedSources)
+      else if (!supportedSources.contains(b.source))
+        errs += s"${b.name}: invalid backend source: ${b.source}"
+      if (b.wire.isEmpty)
+        errs += s"${b.name}: backend requires wire " +
+          oneOf(supportedWires)
+      else if (!supportedWires.contains(b.wire))
+        errs += s"${b.name}: invalid backend wire format: ${b.wire}"
+      if (b.options.contains("wire"))
+        errs += s"${b.name}: options.wire is not read: $axesHint"
+      if (nonBlank(b.options, "checkpoint").isEmpty)
+        errs += s"${b.name}: backend requires options.checkpoint " +
+          "(a directory on storage that outlives the daemon)"
       b.sinks.foreach { s =>
-        if (!supportedSinks.contains(s.kind))
-          errs += s"${b.name}: invalid plugin: ${s.kind}"
+        val kind = SinkRegistry.kinds.get(s.kind)
+        if (kind.isEmpty) errs += s"${b.name}: invalid plugin: ${s.kind}"
         s.kinds.filterNot(supportedKinds.contains).foreach { k =>
           errs += s"${b.name}: invalid event kind for plugin ${s.kind}: $k"
         }
-        if (pathSinks.contains(s.kind) &&
-            !s.options.get("path").exists(_.trim.nonEmpty))
-          errs += s"${b.name}: ${s.kind} sink requires options.path"
-        if (s.kind == "console")
-          errs ++= numericErrors(s.options, s"${b.name}: console sink",
-            "numRows" -> Int.MaxValue.toLong)
+        kind.foreach { k =>
+          if (k.lands) nonBlank(s.options, "path") match {
+            case None =>
+              errs += s"${b.name}: ${s.kind} sink requires options.path"
+            case Some(p) if scheme.findPrefixOf(p.trim).nonEmpty =>
+              errs += s"${b.name}: ${s.kind} sink options.path must be " +
+                s"a local path, not a URI: $p (its versions commit " +
+                "through java.io.File until VersionedState moves onto " +
+                "the Hadoop FileSystem API, ROADMAP direction H)"
+            case _ =>
+          }
+          errs ++= numericErrors(s.options, s"${b.name}: ${s.kind} sink",
+            k.intOptions.map(_ -> Int.MaxValue.toLong): _*)
+        }
       }
       errs ++= numericErrors(b.options, s"${b.name}: backend",
         "maxFilesPerTrigger" -> Int.MaxValue.toLong,
         "txTimeoutMs" -> Long.MaxValue)
-      if (src == "file" && !b.options.contains("path"))
+      if (b.source == "file" && !b.options.contains("path"))
         errs += s"${b.name}: file backend requires options.path"
       // backend = topic downstream, and CdcStream.forBackend runs each
       // query on one state partition: one topic per configured backend
-      if (src == "kafka" && (b.options.contains("subscribePattern") ||
+      if (b.source == "kafka" && (b.options.contains("subscribePattern") ||
           b.options.contains("assign") ||
           !b.options.get("subscribe").exists(t =>
             t.trim.nonEmpty && !t.contains(","))))

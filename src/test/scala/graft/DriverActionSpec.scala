@@ -26,9 +26,6 @@ class DriverActionSpec extends AnyFunSuite {
     "BucketedScan.scala" ->
       (("one three-column (count,min,max) aggregate row sizing the " +
         "bucket domain"), 1),
-    "Sinks.scala" ->
-      (("the debug/memory sink materializes its micro-batch by " +
-        "CONTRACT (foreachBatch test sink; production sinks stream)"), 1),
     "CdcOps.scala" ->
       (("one-row max(key) aggregates guarding epoch/key-space " +
         "assumptions before composing fixtures"), 4),

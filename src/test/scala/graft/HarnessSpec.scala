@@ -135,9 +135,10 @@ class HarnessSpec extends AnyFunSuite {
           tokens.exists(text.contains) =>
         s"$p: ${tokens.filter(text.contains).mkString(", ")}"
     }
+    // a string literal naming a path under /tmp: storage the OS clears
     val temp = outside(Seq("java.io.tmpdir", "createTempDirectory",
-      "createTempFile", "addShutdownHook", "scala.reflect.io.Directory"),
-      "src/main/scala/graft/Harness.scala")
+      "createTempFile", "addShutdownHook", "scala.reflect.io.Directory",
+      "\"/tmp"), "src/main/scala/graft/Harness.scala")
     assert(temp.isEmpty, s"on-disk state outside Harness.fixture: $temp")
     val tables = outside(Seq("saveAsTable"),
       "src/main/scala/graft/sinks/Bucketing.scala")

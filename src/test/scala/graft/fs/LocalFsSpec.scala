@@ -232,7 +232,7 @@ class LocalFsSpec extends SparkSpec {
         .toDF("backend", "seq", "line")
         .coalesce(1).write.mode("append").json(s"$dir/in")
     }
-    val cfg = BackendConfig("pg1", "file-ldjson",
+    val cfg = BackendConfig("pg1", "file", "jsoncdc",
       Map("path" -> s"$dir/in", "maxFilesPerTrigger" -> "1"),
       emit = EmitFlags(emitEvent = Some(false)),
       sinks = Seq(

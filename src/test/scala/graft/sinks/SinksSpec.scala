@@ -62,10 +62,11 @@ class SinksSpec extends SparkSpec {
 
   test("registry resolves kinds and rejects unknown plugins") {
     import graft.subscribe.SinkConfig
-    assert(SinkRegistry.create(SinkConfig("collect")).name == "collect")
-    intercept[IllegalArgumentException] {
-      SinkRegistry.create(SinkConfig("nope"))
-    }
+    assert(SinkRegistry.create(SinkConfig("console")).name == "console")
+    for (kind <- Seq("nope", "collect"))
+      intercept[IllegalArgumentException] {
+        SinkRegistry.create(SinkConfig(kind))
+      }
   }
 
   test("a kind-scoped sink sees only its subscribed kinds " +
@@ -75,7 +76,7 @@ class SinksSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
 
     // registry plumbs SinkConfig.kinds onto the created sink
-    val resolved = SinkRegistry.create(SinkConfig("collect", kinds = Seq("insert")))
+    val resolved = SinkRegistry.create(SinkConfig("console", kinds = Seq("insert")))
     assert(resolved.kinds == Seq("insert"))
 
     val insertOnly = new CollectingSink
@@ -125,6 +126,31 @@ class SinksSpec extends SparkSpec {
     assert(plan.contains("PartitionFilters: [isnotnull(table") ||
       plan.contains("PartitionFilters: [(table"),
       s"table= predicate must prune directories, not scan rows:\n$plan")
+  }
+
+  test("parquet-exactly-once with partitionBy lands the hive layout " +
+      "that parquet lands") {
+    def land(kind: String): String = {
+      val dir = tempDir(s"graft-$kind")
+      SinkRegistry.create(graft.subscribe.SinkConfig(kind,
+        Map("path" -> dir, "partitionBy" -> "table,kind"))).write(envelopes, 0L)
+      dir
+    }
+    def layout(dir: String): Seq[String] = {
+      val root = java.nio.file.Paths.get(dir)
+      val walk = java.nio.file.Files.walk(root)
+      try walk.iterator().asScala.filter(java.nio.file.Files.isDirectory(_))
+        .map(root.relativize(_).toString).toSeq.sorted
+      finally walk.close()
+    }
+    val (parquet, exactlyOnce) = (land("parquet"), land("parquet-exactly-once"))
+    assert(layout(exactlyOnce).contains("batch=0/table=users/kind=insert"),
+      layout(exactlyOnce))
+    assert(layout(exactlyOnce) == layout(parquet))
+    def rows(dir: String) = IdempotentParquetSink.committed(spark, dir)
+      .select("seq", "table", "kind").as[(Long, String, String)]
+      .collect().toSeq.sortBy(_._1)
+    assert(rows(exactlyOnce) == rows(parquet))
   }
 
   test("exactly-once parquet sink: batch replay is a no-op, uncommitted " +

@@ -58,7 +58,7 @@ class BinlogStreamSpec extends SparkSpec {
       ("mongo1", 2L, """{"op": "d", "ns": "app.orders", "o": {"_id": 5}}"""))
       .toDF("backend", "seq", "line")
       .coalesce(1).write.mode("overwrite").json(s"$dir/in")
-    val cfg = BackendConfig("mongo1", "file-oplog-json",
+    val cfg = BackendConfig("mongo1", "file", "oplog",
       Map("path" -> s"$dir/in"), emit = EmitFlags(emitEvent = Some(false)))
     val sink = new SubjectRoutingSink(
       () => (s, p) => { BinlogStreamSpec.bus.add((s, p)); () },
@@ -125,7 +125,7 @@ class BinlogStreamSpec extends SparkSpec {
     // in the checkpoint — a restarted query must stamp pk_col onto rows
     // whose tablemap arrived BEFORE the restart.
     val dir = tempDir("graft-binlog-restart")
-    val cfg = BackendConfig("my1", "file-binlog-json",
+    val cfg = BackendConfig("my1", "file", "binlog",
       Map("path" -> s"$dir/in"))
     def startQuery() = CdcStream.forBackend(spark, cfg)
       .writeStream.format("parquet").option("path", s"$dir/out")
@@ -157,10 +157,13 @@ class BinlogStreamSpec extends SparkSpec {
   test("-t validation accepts the new kinds and demands a path") {
     import graft.subscribe._
     val ok = EngineConfig(Seq(
-      BackendConfig("m", "file-binlog-json", Map("path" -> "/x")),
-      BackendConfig("o", "file-oplog-json", Map("path" -> "/y"))))
+      BackendConfig("m", "file", "binlog",
+        Map("path" -> "/x", "checkpoint" -> "/ck/m")),
+      BackendConfig("o", "file", "oplog",
+        Map("path" -> "/y", "checkpoint" -> "/ck/o"))))
     assert(ConfigValidation.validate(ok).isEmpty)
-    val bad = EngineConfig(Seq(BackendConfig("m", "file-binlog-json")))
+    val bad = EngineConfig(Seq(BackendConfig("m", "file", "binlog",
+      Map("checkpoint" -> "/ck/m"))))
     assert(ConfigValidation.validate(bad)
       .exists(_.contains("requires options.path")))
   }

@@ -127,7 +127,7 @@ class CdcPipelineSpec extends SparkSpec {
     (batch1 ++ batch2).map { case (s, l) => ("pg1", s, l) }
       .toDF("backend", "seq", "line")
       .coalesce(1).write.mode("overwrite").json(s"$dir/in")
-    val cfg = BackendConfig("pg1", "file-ldjson",
+    val cfg = BackendConfig("pg1", "file", "jsoncdc",
       Map("path" -> s"$dir/in"),
       // default cascade: emitTransaction follows emitEvents=true; switch
       // the generic re-dispatch off so assertions see each kind once
@@ -151,7 +151,7 @@ class CdcPipelineSpec extends SparkSpec {
     (batch1 ++ batch2).map { case (s, l) => ("pg1", s, l) }
       .toDF("backend", "seq", "line")
       .coalesce(1).write.mode("overwrite").json(s"$dir/in")
-    val cfg = BackendConfig("pg1", "file-ldjson", Map("path" -> s"$dir/in"))
+    val cfg = BackendConfig("pg1", "file", "jsoncdc", Map("path" -> s"$dir/in"))
     val sink = new CollectingSink
     val q = SinkRegistry.attach(
         CdcStream.forBackend(spark, cfg), cfg.emit, Seq(sink))

@@ -44,7 +44,7 @@ class CdcStreamSizingSpec extends SparkSpec {
       .toDF("backend", "seq", "line")
       .coalesce(1).write.mode("append").json(s"$dir/in")
 
-  private def jsoncdc(dir: String) = BackendConfig("pg1", "file-ldjson",
+  private def jsoncdc(dir: String) = BackendConfig("pg1", "file", "jsoncdc",
     Map("path" -> s"$dir/in", "maxFilesPerTrigger" -> "1"),
     emit = EmitFlags(emitEvent = Some(false)))
 
@@ -131,7 +131,7 @@ class CdcStreamSizingSpec extends SparkSpec {
     publish(dir, Seq(
       (1L, """{"eventName": "writerows", "schemaName": "lapidus", "tableName": "orders", "rows": [{"id": 7, "x": "a"}]}""")),
       backend = "my1")
-    val cfg = BackendConfig("my1", "file-binlog-json",
+    val cfg = BackendConfig("my1", "file", "binlog",
       Map("path" -> s"$dir/in", "maxFilesPerTrigger" -> "1"),
       emit = EmitFlags(emitEvent = Some(false)))
     assert(run(start(unsetSession(), cfg, dir)) == Set(1L))

@@ -93,9 +93,10 @@ class MonitorSpec extends SparkSpec {
         (1L, """{"commit": 1, "t": "2024-01-01 00:00:00"}"""))
       .map { case (seq, line) => ("pg7", seq, line) }
       .toDF("backend", "seq", "line").coalesce(1).write.json(s"$dir/in")
-    val b = graft.subscribe.BackendConfig("pg7", "file-ldjson",
+    val b = graft.subscribe.BackendConfig("pg7", "file", "jsoncdc",
       Map("path" -> s"$dir/in", "checkpoint" -> s"$dir/ckpt"),
-      sinks = Seq(graft.subscribe.SinkConfig("collect")))
+      sinks = Seq(graft.subscribe.SinkConfig("parquet-exactly-once",
+        Map("path" -> s"$dir/out"))))
     listening { (_, logs) =>
       val q = graft.cli.Main.startBackend(spark, b)
       try q.processAllAvailable() finally q.stop()

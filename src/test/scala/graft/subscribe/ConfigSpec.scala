@@ -9,6 +9,12 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class ConfigSpec extends AnyFunSuite {
 
+  /** A valid jsoncdc file backend with checkpoint /ck/<name>. */
+  private def fileBackend(name: String, sinks: SinkConfig*) =
+    BackendConfig(name, source = "file", wire = "jsoncdc",
+      options = Map("path" -> "/x", "checkpoint" -> s"/ck/$name"),
+      sinks = sinks)
+
   test("per-kind flags follow the master switch by default") {
     val f = EmitFlags(emitEvents = false)
     assert(!f.insert && !f.update && !f.delete && !f.transaction)
@@ -37,48 +43,95 @@ class ConfigSpec extends AnyFunSuite {
 
   test("validation rejects unknown backend and plugin kinds, aggregated") {
     val cfg = EngineConfig(Seq(BackendConfig(
-      name = "b1", kind = "oracle",
+      name = "b1", source = "oracle", wire = "jsoncdc",
+      options = Map("checkpoint" -> "/ck/b1"),
       sinks = Seq(SinkConfig("carrier-pigeon")))))
     val errs = ConfigValidation.validate(cfg)
-    assert(errs.exists(_.contains("invalid backend type: oracle")))
+    assert(errs.exists(_.contains("invalid backend source: oracle")))
     assert(errs.exists(_.contains("invalid plugin: carrier-pigeon")))
     assert(errs.size == 2, "errors aggregate instead of failing fast")
   }
 
   test("sink kind subscriptions validate against the envelope kinds") {
-    val bad = EngineConfig(Seq(BackendConfig(
-      name = "b1", kind = "file-ldjson", options = Map("path" -> "/x"),
-      sinks = Seq(SinkConfig("collect", kinds = Seq("insert", "upsert"))))))
+    val bad = EngineConfig(Seq(fileBackend("b1",
+      SinkConfig("console", kinds = Seq("insert", "upsert")))))
     val errs = ConfigValidation.validate(bad)
-    assert(errs == Seq("b1: invalid event kind for plugin collect: upsert"))
+    assert(errs == Seq("b1: invalid event kind for plugin console: upsert"))
     val ok = bad.copy(backends = bad.backends.map(b => b.copy(
-      sinks = Seq(SinkConfig("collect", kinds = Seq("insert", "update"))))))
+      sinks = Seq(SinkConfig("console", kinds = Seq("insert", "update"))))))
     assert(ConfigValidation.validate(ok).isEmpty)
   }
 
   test("file-ldjson backend requires a path") {
-    val cfg = EngineConfig(Seq(BackendConfig(name = "b", kind = "file-ldjson")))
-    assert(ConfigValidation.validate(cfg)
-      .exists(_.contains("requires options.path")))
+    val cfg = EngineConfig(Seq(fileBackend("b").copy(
+      options = Map("checkpoint" -> "/ck/b"))))
+    assert(ConfigValidation.validate(cfg) ==
+      Seq("b: file backend requires options.path"))
   }
 
-  test("legacy fused kinds resolve onto the source × wire axes") {
-    val expect = Map(
-      "file-ldjson" -> ("file", "jsoncdc"),
-      "kafka" -> ("kafka", "jsoncdc"),
-      "file-binlog-json" -> ("file", "binlog"),
-      "file-oplog-json" -> ("file", "oplog"))
-    expect.foreach { case (kind, (src, wire)) =>
-      val b = BackendConfig("b", kind, Map("path" -> "/x"))
-      assert(b.resolvedSource == src, s"$kind source")
-      assert(b.resolvedWire == wire, s"$kind wire")
-    }
+  test("the collect test sink is no config kind: -t refuses it") {
+    val errs = ConfigValidation.validate(EngineConfig(Seq(
+      fileBackend("b", SinkConfig("collect")))))
+    assert(errs == Seq("b: invalid plugin: collect"))
+    intercept[IllegalArgumentException](
+      graft.sinks.SinkRegistry.create(SinkConfig("collect")))
+  }
+
+  test("a backend without options.checkpoint is refused") {
+    for (opts <- Seq(Map("path" -> "/x"),
+        Map("path" -> "/x", "checkpoint" -> " ")))
+      assert(ConfigValidation.validate(EngineConfig(Seq(
+          fileBackend("b").copy(options = opts)))) ==
+        Seq("b: backend requires options.checkpoint (a directory on " +
+          "storage that outlives the daemon)"), s"$opts")
+  }
+
+  test("a backend kind field is refused at parse, naming source and wire") {
+    val e = intercept[IllegalArgumentException](graft.cli.Main.parseConfig(
+      """{"backends": [{"name": "pg1", "kind": "file-ldjson",
+        |  "options": {"path": "/x", "checkpoint": "/ck/pg1"}}]}"""
+        .stripMargin))
+    assert(e.getMessage == "pg1: kind is not a backend field: set the " +
+      "backend's source field (file|kafka) and its wire field " +
+      "(binlog|jsoncdc|oplog)")
+  }
+
+  test("options.wire is refused, naming source and wire") {
+    for (opts <- Seq(Map("wire" -> "binlog"), Map("wire" -> "")))
+      assert(ConfigValidation.validate(EngineConfig(Seq(fileBackend("b")
+          .copy(options = Map("path" -> "/x", "checkpoint" -> "/ck/b") ++
+            opts)))) ==
+        Seq("b: options.wire is not read: set the backend's source field " +
+          "(file|kafka) and its wire field (binlog|jsoncdc|oplog)"),
+        s"$opts")
+  }
+
+  test("a backend naming no source or wire is refused by field name, " +
+      "never as a blank value") {
+    assert(ConfigValidation.validate(EngineConfig(Seq(BackendConfig("b",
+        options = Map("checkpoint" -> "/ck/b"))))) ==
+      Seq("b: backend requires source (file|kafka)",
+        "b: backend requires wire (binlog|jsoncdc|oplog)"))
+  }
+
+  test("a file-landing sink path with a URI scheme is refused") {
+    for (kind <- Seq("parquet", "parquet-exactly-once", "snapshot");
+        path <- Seq("file:///out/a", "hdfs://nn:8020/out/a", "s3a://b/a"))
+      assert(ConfigValidation.validate(EngineConfig(Seq(fileBackend("b",
+          SinkConfig(kind, Map("path" -> path)))))) ==
+        Seq(s"b: $kind sink options.path must be a local path, not a " +
+          s"URI: $path (its versions commit through java.io.File until " +
+          "VersionedState moves onto the Hadoop FileSystem API, ROADMAP " +
+          "direction H)"), s"$kind $path")
+    // a checkpoint is written through Hadoop: a URI stays accepted
+    assert(ConfigValidation.validate(EngineConfig(Seq(fileBackend("b")
+      .copy(options = Map("path" -> "/x",
+        "checkpoint" -> "hdfs://nn:8020/ck/b"))))).isEmpty)
   }
 
   test("a file-landing sink requires options.path") {
     def errs(sink: SinkConfig) = ConfigValidation.validate(EngineConfig(Seq(
-      BackendConfig("b", kind = "file-ldjson", options = Map("path" -> "/x"),
-        sinks = Seq(sink)))))
+      fileBackend("b", sink))))
     for (kind <- Seq("parquet", "parquet-exactly-once", "snapshot")) {
       assert(errs(SinkConfig(kind, Map("path" -> "/out"))).isEmpty, kind)
       for (opts <- Seq(Map.empty[String, String], Map("path" -> " ")))
@@ -88,16 +141,13 @@ class ConfigSpec extends AnyFunSuite {
     assert(errs(SinkConfig("console")).isEmpty)
   }
 
-  private def fileBackend(name: String, sinks: SinkConfig*) =
-    BackendConfig(name, kind = "file-ldjson", options = Map("path" -> "/x"),
-      sinks = sinks)
 
   test("two backends with one name are refused: they would share a " +
       "checkpoint") {
     val errs = ConfigValidation.validate(EngineConfig(Seq(
       fileBackend("pg1"), fileBackend("pg2"), fileBackend("pg1"))))
     assert(errs == Seq("duplicate backend name: pg1",
-      "backend checkpoints share one path (/tmp/graft-ckpt-pg1): pg1, pg1"))
+      "backend checkpoints share one path (/ck/pg1): pg1, pg1"))
   }
 
   test("two backends on one checkpoint path are refused, however the " +
@@ -111,11 +161,14 @@ class ConfigSpec extends AnyFunSuite {
       Seq("backend checkpoints share one path (/ck/a): a, b"))
     // paths Hadoop cannot parse are compared as written, not thrown on
     assert(ConfigValidation.validate(EngineConfig(Seq(
-      on("a", ""), on("b", "x:y:/z")))).isEmpty)
-    // an explicit checkpoint onto another backend's derived one
+      on("a", "x:y:/w"), on("b", "x:y:/z")))).isEmpty)
     assert(ConfigValidation.validate(EngineConfig(Seq(
-      fileBackend("a"), on("b", "/tmp/graft-ckpt-a")))) ==
-      Seq("backend checkpoints share one path (/tmp/graft-ckpt-a): a, b"))
+      on("a", "x:y:/z"), on("b", "x:y:/z")))) ==
+      Seq("backend checkpoints share one path (x:y:/z): a, b"))
+    // one backend's checkpoint spelled as a URI onto another's
+    assert(ConfigValidation.validate(EngineConfig(Seq(
+      fileBackend("a"), on("b", "file:/ck/a")))) ==
+      Seq("backend checkpoints share one path (/ck/a): a, b"))
   }
 
   test("two file-landing sinks on one path are refused, in one backend " +
@@ -137,9 +190,8 @@ class ConfigSpec extends AnyFunSuite {
   /** Validation errors of one file backend with `options` and `sink`. */
   private def fileBackendErrs(options: Map[String, String],
       sink: SinkConfig = SinkConfig("console")): Seq[String] =
-    ConfigValidation.validate(EngineConfig(Seq(BackendConfig("b",
-      kind = "file-ldjson", options = options + ("path" -> "/x"),
-      sinks = Seq(sink)))))
+    ConfigValidation.validate(EngineConfig(Seq(fileBackend("b", sink)
+      .copy(options = options ++ Map("path" -> "/x", "checkpoint" -> "/ck")))))
 
   // each value below makes `-c` fail where `-t` passed it: the reader's
   // .toInt/.toLong throws, or the value is out of range for its use
@@ -177,9 +229,9 @@ class ConfigSpec extends AnyFunSuite {
       src <- Seq("file", "kafka")
       wire <- Seq("jsoncdc", "binlog", "oplog")
     } {
-      val opts = if (src == "file") Map("path" -> "/x")
-                 else Map("kafka.bootstrap.servers" -> "h:9092",
-                          "subscribe" -> "cdc")
+      val opts = Map("checkpoint" -> "/ck/b") ++ (
+        if (src == "file") Map("path" -> "/x")
+        else Map("kafka.bootstrap.servers" -> "h:9092", "subscribe" -> "cdc"))
       val cfg = EngineConfig(Seq(
         BackendConfig("b", options = opts, source = src, wire = wire)))
       assert(ConfigValidation.validate(cfg).isEmpty,
@@ -190,8 +242,8 @@ class ConfigSpec extends AnyFunSuite {
 
   test("a kafka backend subscribes to exactly one topic") {
     def errs(opts: Map[String, String]) = ConfigValidation.validate(
-      EngineConfig(Seq(BackendConfig("k", options =
-        opts + ("kafka.bootstrap.servers" -> "h:9092"),
+      EngineConfig(Seq(BackendConfig("k", options = opts ++
+        Map("kafka.bootstrap.servers" -> "h:9092", "checkpoint" -> "/ck/k"),
         source = "kafka", wire = "jsoncdc"))))
     assert(errs(Map("subscribe" -> "cdc")).isEmpty)
     for (bad <- Seq(Map("subscribe" -> "a,b"), Map("subscribe" -> " "),
@@ -200,18 +252,10 @@ class ConfigSpec extends AnyFunSuite {
       assert(errs(bad).exists(_.contains("exactly one topic")), s"$bad")
   }
 
-  test("explicit wire field beats the legacy kafka options escape hatch") {
-    val b = BackendConfig("b", "kafka",
-      Map("wire" -> "oplog"))
-    assert(b.resolvedWire == "oplog", "options.wire read when field empty")
-    val c = b.copy(wire = "binlog")
-    assert(c.resolvedWire == "binlog", "explicit field wins")
-  }
-
   test("validation rejects unknown source and wire, aggregated") {
     val cfg = EngineConfig(Seq(BackendConfig(
-      "b", options = Map("path" -> "/x"), source = "carrier-pigeon",
-      wire = "smoke-signals")))
+      "b", options = Map("path" -> "/x", "checkpoint" -> "/ck/b"),
+      source = "carrier-pigeon", wire = "smoke-signals")))
     val errs = ConfigValidation.validate(cfg)
     assert(errs.exists(_.contains("invalid backend source: carrier-pigeon")))
     assert(errs.exists(_.contains("invalid backend wire format: smoke-signals")))
@@ -229,45 +273,30 @@ class ConfigSpec extends AnyFunSuite {
     val json =
       """{"backends": [{"name": "my1", "source": "kafka", "wire": "binlog",
         |  "options": {"kafka.bootstrap.servers": "h:9092",
-        |              "subscribe": "binlog"}}]}""".stripMargin
+        |              "subscribe": "binlog", "checkpoint": "/ck/my1"}}]}"""
+        .stripMargin
     val cfg = graft.cli.Main.parseConfig(json)
     val b = cfg.backends.head
-    assert(b.resolvedSource == "kafka" && b.resolvedWire == "binlog")
+    assert(b.source == "kafka" && b.wire == "binlog")
     assert(ConfigValidation.validate(cfg).isEmpty)
   }
 
   test("CLI config JSON parses with nested emit flags and sinks") {
     val json =
-      """{"backends": [{"name": "pg1", "kind": "file-ldjson",
-        |  "options": {"path": "/tmp/x"}, "excludeTables": ["audit"],
+      """{"backends": [{"name": "pg1", "source": "file", "wire": "jsoncdc",
+        |  "options": {"path": "/data/cdc", "checkpoint": "/ck/pg1"},
+        |  "excludeTables": ["audit"],
         |  "emit": {"emitEvents": true, "emitSchema": false},
-        |  "sinks": [{"kind": "collect", "kinds": ["insert", "delete"]}]}]}""".stripMargin
+        |  "sinks": [{"kind": "console", "kinds": ["insert", "delete"]}]}]}"""
+        .stripMargin
     val cfg = graft.cli.Main.parseConfig(json)
     assert(cfg.backends.size == 1)
     val b = cfg.backends.head
     assert(b.excludeTables == Seq("audit"))
     assert(!b.emit.schema && b.emit.insert)
-    assert(b.sinks.map(_.kind) == Seq("collect"))
+    assert(b.sinks.map(_.kind) == Seq("console"))
     assert(b.sinks.head.kinds == Seq("insert", "delete"),
       "per-kind sink subscriptions must survive the JSON config parse")
     assert(ConfigValidation.validate(cfg).isEmpty)
-  }
-
-  test("options.wire is inert for file kinds (kafka-only escape hatch)") {
-    val b = BackendConfig(name = "f1", kind = "file-ldjson",
-      options = Map("path" -> "/x", "wire" -> "binlog"))
-    assert(b.resolvedWire == "jsoncdc",
-      "a stray options.wire must not change a file backend's decoder")
-    val k = BackendConfig(name = "k1", kind = "kafka",
-      options = Map("wire" -> "binlog"))
-    assert(k.resolvedWire == "binlog", "the kafka escape hatch still works")
-    // new-axes config (kind="") with wire via options: no fused kind
-    // binds the wire, so the escape hatch must apply there too
-    val n = BackendConfig(name = "n1",
-      options = Map("path" -> "/x", "wire" -> "binlog"), source = "file")
-    assert(n.resolvedWire == "binlog",
-      "options.wire must resolve for kind=\"\" new-axes configs")
-    assert(ConfigValidation.validate(EngineConfig(Seq(n))).isEmpty,
-      "a source + options.wire config must validate")
   }
 }
